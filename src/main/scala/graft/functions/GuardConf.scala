@@ -1,16 +1,25 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
 
-/** Shared conf plumbing for the candidate-mass pre-flight guards
-  * (banded SimHash, fixed-nlist IVF, MinHash LSH, PPJoin prefix —
-  * one budget key + one mode key each).
+/** One bucket-join family's guard settings: budget conf key, mode conf
+  * key (`enforce` | `warn` | `off`), default budget, and the trip
+  * counter (enforce + warn refusals, suite observability). */
+private[graft] final case class GuardFamily(budgetKey: String,
+    modeKey: String, defaultBudget: Long, trips: AtomicLong)
+
+/** The candidate-mass pre-flight guard shared by every bucket-join
+  * family (banded SimHash, fixed-nlist IVF, MinHash LSH, hyperplane
+  * LSH, PPJoin prefix): filter-and-verify refuses a join whose candidate
+  * mass would go quadratic BEFORE it runs.
   *
-  * Centralized so a malformed budget value fails NAMED: a bare
-  * `s.toLong` surfaces as a raw NumberFormatException with no hint of
-  * which conf key carried the bad value — and inside simHashPairs'
-  * catch-unpersist-rethrow path it was indistinguishable from a
-  * genuine guard refusal (r18 ADVICE). */
+  * Budget parsing is centralized so a malformed value fails NAMED: a
+  * bare `s.toLong` surfaces as a raw NumberFormatException with no hint
+  * of which conf key carried the bad value — and inside a
+  * catch-unpersist-rethrow path it was indistinguishable from a genuine
+  * guard refusal (r18 ADVICE). */
 private[graft] object GuardConf {
   /** Parse the long budget at `key` (default when unset/blank). A
     * malformed value throws IllegalArgumentException naming the key and
@@ -41,4 +50,52 @@ private[graft] object GuardConf {
       s"$key must be one of enforce|warn|off, got '$m'")
     m
   }
+
+  /** The pre-flight itself. `mode` is read ONCE by the caller (ADVICE
+    * r20: a conf flip between plan-build and guard execution must not
+    * strand a cache built for a guard that then never materializes it).
+    * With the mode `off` nothing runs — `bound` and `mass` are by-name,
+    * so off pays zero jobs. Otherwise the budget is parsed first, then
+    * the cheap worst-case `bound` short-circuits (the honest-corpus
+    * steady state at every measured scale); only past it does the exact
+    * `mass` decide. Over budget the family's trip counter counts it and
+    * `refusal(mass, budget)` — the family's remedy text — is logged
+    * (`warn`) or thrown as IllegalStateException (`enforce`). If the
+    * guard throws for any reason (refusal, bad budget, failed mass job)
+    * `release` runs first, so no refusal strands the caller's caches. */
+  def check(spark: SparkSession, family: GuardFamily, mode: String,
+      bound: => Double, mass: => Long, refusal: (Long, Long) => String,
+      release: => Unit): Unit =
+    if (mode != "off")
+      try {
+        val budget = GuardConf.budget(spark, family.budgetKey,
+          family.defaultBudget)
+        if (bound > budget.toDouble) {
+          val m = mass
+          if (m > budget) {
+            family.trips.incrementAndGet()
+            val msg = refusal(m, budget) +
+              s" Set ${family.modeKey}=warn to override."
+            if (mode == "warn")
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+            else throw new IllegalStateException(msg)
+          }
+        }
+      } catch {
+        case e: Throwable => release; throw e
+      }
+
+  /** EXACT candidate mass of a bucket self-join: Σ over buckets of
+    * c·(c−1)/2, where a bucket is one distinct row of `keys` (grouped by
+    * every column) and c its multiplicity — the raw pairs the join
+    * materializes before its verify. One linear partial-aggregating
+    * pass, vs the join it predicts. */
+  def bucketPairMass(keys: DataFrame): Long =
+    keys.groupBy(keys.columns.map(col): _*).agg(count(lit(1)).as("__c"))
+      // c cast to double BEFORE the multiply: long c*(c-1) wraps
+      // negative past ~3e9 rows in one bucket — silently under-reporting
+      // the mass at exactly the scale the guard exists for
+      .agg(coalesce(
+        sum(col("__c").cast("double") * (col("__c") - 1) / 2), lit(0.0)))
+      .head().getDouble(0).toLong
 }

@@ -262,53 +262,105 @@ object ScaleOps {
       .drop("__pid", "__off")
   }
 
-  /** PageRank in integer micro-units — graph centrality with NO float
-    * anywhere: ranks start at `scale/|V|`, each iteration a node gets
-    * `(scale*(100-dampNum)/100)/|V| + (dampNum * Σ in-contribs) div 100`
-    * where a contribution is `rank div out-degree`. Every op is integer
-    * multiply/divide/sum, so the fixpoint trajectory is bit-identical on
-    * any engine and any partitioning — the same stance as the t12/p11
-    * fixed-point aggregates, applied to an ITERATIVE computation.
-    * (Truncation leaks a little mass per step; ranking is what matters.)
+  /** Round budget of the star rounds in [[connectedComponents]]: they
+    * converge in O(log² n) rounds, so 64 covers any graph that fits a
+    * cluster; a graph that needs more fails named rather than returning
+    * partial labels. */
+  private val StarRounds = 64
+
+  /** Connected components of a pair graph: every vertex's `cluster_id`
+    * is the minimum id reachable through (`id_a`, `id_b`) edges — the
+    * canonical-representative assignment a dedup pipeline needs after
+    * pair generation (keep `id == cluster_id`, drop the rest). A vertex
+    * touching no edge is its own cluster; edge ids outside `vertices`
+    * are dropped.
     *
-    * Scale shape: the iteration runs over the EDGE-INCIDENT subgraph
-    * only (the d06 move) — a vertex touching no edge is `base +
-    * dampNum·0` from round 1 onward, so the non-incident majority of a
-    * lightly-connected corpus joins back ONCE at the end with the
-    * constant base rank, and per-round cost tracks |edges|, not |V|.
-    * Per round: ONE edge⋈rank join (keyed on src), one
-    * map-side-combinable sum keyed on dst, one left join to the incident
-    * vertex set. The driver sees only |V| (one count) — never data.
-    * Lineage is cut per round with an eager localCheckpoint, so `iters`
-    * can grow without plan blowup. Dangling nodes keep the base rank;
-    * departed mass is dropped, matching the documented truncation
-    * stance. */
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", 2014) — the O(log n)-round formulation. Label propagation
-    * ([[graft.functions.TextOps.duplicateClusters]]'s distributed loop)
-    * converges in O(diameter) rounds: fine for the plump near-dup
-    * clusters dedup produces, pathological on chain-shaped components
-    * (citation threads, quote chains). The star rounds double the
-    * "pointer-jumping" reach each iteration, so a 10k-long chain
-    * converges in ~log² n rounds instead of 10k.
+    * One of two paths computes the identical min-label fixpoint. While
+    * union-find is possible (long ids, `smallEdgeLimit > 0`) the pair
+    * stream is cached and counted ONCE to choose (the pair generator
+    * upstream is usually the expensive part); otherwise star rounds read
+    * it once, through their first localCheckpoint:
     *
-    * Per round: two grouped min-aggregations (map-side partials — the
-    * hot component min collapses per task) + the emit joins, lineage
-    * cut by eager localCheckpoint; the driver sees only the edge-set
-    * checksum (count + hash sum), never data. Output = (idCol,
-    * cluster_id = component min), identical to the propagation
-    * fixpoint — pinned against [[TextOps.duplicateClusters]] and the
-    * d06 oracle. */
-  def connectedComponentsStar(vertices: DataFrame, idCol: String,
-      pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 64): DataFrame = {
+    *   - at most `smallEdgeLimit` edges (default 1M pairs = 16 MB of
+    *     longs) and long ids everywhere: driver union-find with path
+    *     compression — one collect, zero per-round Spark jobs. Even on a
+    *     1000-executor cluster, scheduling per-round stages over a few
+    *     thousand rows costs more than the driver's O(E α(E)). Other id
+    *     types never take it: a cast would change the output schema
+    *     depending on nothing but the edge count.
+    *   - otherwise: alternating LARGE-STAR / SMALL-STAR rounds (Kiveris
+    *     et al., "Connected Components in MapReduce and Beyond", 2014).
+    *     Each round doubles the pointer-jumping reach, so a 10k-long
+    *     chain converges in ~log² n rounds where label propagation needs
+    *     its diameter. Per round: two grouped min-aggregations (map-side
+    *     partials — the hot component min collapses per task) + the emit
+    *     joins, lineage cut by eager localCheckpoint; the driver sees
+    *     only the edge-set checksum (count + hash xor), never data.
+    *
+    * Pinned path-against-path in DedupOpsSuite and against the d06/d17
+    * oracle (recursive-CTE transitive closure). */
+  def connectedComponents(vertices: DataFrame, idCol: String,
+      pairs: DataFrame, smallEdgeLimit: Long = 1000000L): DataFrame = {
+    import org.apache.spark.sql.types.LongType
+    val base = pairs.select(col("id_a").as("__cu"), col("id_b").as("__cv"))
+    val longIds = (base.schema.fields :+ vertices.schema(idCol))
+      .forall(_.dataType == LongType)
+    // (__v, __lbl) for edge-incident vertices; both paths have read
+    // `base` completely before returning, so the cache (kept only while
+    // union-find is still possible) can go right after
+    val labels =
+      if (smallEdgeLimit > 0 && longIds) {
+        val cached = base.cache()
+        try {
+          if (cached.count() <= smallEdgeLimit) unionFindLabels(cached)
+          else starLabels(cached)
+        } finally cached.unpersist()
+      } else starLabels(base)
+    vertices.select(col(idCol))
+      .join(labels, col(idCol) === col("__v"), "left")
+      .select(col(idCol),
+        coalesce(col("__lbl"), col(idCol)).as("cluster_id"))
+  }
+
+  /** Driver union-find over a long edge table (`__cu`, `__cv`); roots
+    * resolve to the component MIN id, so the labels equal the star
+    * fixpoint. Returned as a broadcast-hinted local relation. */
+  private def unionFindLabels(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val es = edges.as[(Long, Long)].collect()
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
+    }
+    val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+    val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
+    verts.foreach { v =>
+      val r = find(v)
+      minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
+    }
+    broadcast(verts.map(v => (v, minOfRoot(find(v)))).toSeq
+      .toDF("__v", "__lbl"))
+  }
+
+  /** Large-star/small-star rounds over an edge table (`__cu`, `__cv`)
+    * of any orderable id type; fails named past [[StarRounds]]. */
+  private def starLabels(edges: DataFrame): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("__cu"), col("__cv")).as("__cu"),
         least(col("__cu"), col("__cv")).as("__cv"))
       .where(col("__cu") =!= col("__cv")).distinct()
-    var e = canon(pairs.select(col(aCol).as("__cu"), col(bCol).as("__cv")))
-      .localCheckpoint(true)
+    var e = canon(edges).localCheckpoint(true)
     def checksum(d: DataFrame): (Long, Long) = {
       // xor-fold: order-independent, overflow-free (ANSI-safe), and the
       // edge set is distinct so no element can self-cancel
@@ -320,7 +372,7 @@ object ScaleOps {
     var cs = checksum(e)
     var done = cs._1 == 0L
     var it = 0
-    while (!done && it < maxIters) {
+    while (!done && it < StarRounds) {
       // large-star over the symmetric neighbor view: every neighbor v
       // strictly above u re-attaches to m = min(Γ(u) ∪ {u})
       val s = e.unionByName(
@@ -343,16 +395,32 @@ object ScaleOps {
       cs = ncs
       it += 1
     }
-    require(done, s"star CC did not converge in $maxIters rounds")
+    require(done, s"star CC did not converge in $StarRounds rounds")
     // converged state is a star per component: (non-min -> min) edges
-    val parent = e.groupBy("__cu").agg(min(col("__cv")).as("cluster_id"))
-      .withColumnRenamed("__cu", "__pid")
-    vertices.select(col(idCol))
-      .join(parent, col(idCol) === col("__pid"), "left")
-      .select(col(idCol),
-        coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+    e.groupBy(col("__cu").as("__v")).agg(min(col("__cv")).as("__lbl"))
   }
 
+  /** PageRank in integer micro-units — graph centrality with NO float
+    * anywhere: ranks start at `scale/|V|`, each iteration a node gets
+    * `(scale*(100-dampNum)/100)/|V| + (dampNum * Σ in-contribs) div 100`
+    * where a contribution is `rank div out-degree`. Every op is integer
+    * multiply/divide/sum, so the fixpoint trajectory is bit-identical on
+    * any engine and any partitioning — the same stance as the t12/p11
+    * fixed-point aggregates, applied to an ITERATIVE computation.
+    * (Truncation leaks a little mass per step; ranking is what matters.)
+    *
+    * Scale shape: the iteration runs over the EDGE-INCIDENT subgraph
+    * only (the d06 move) — a vertex touching no edge is `base +
+    * dampNum·0` from round 1 onward, so the non-incident majority of a
+    * lightly-connected corpus joins back ONCE at the end with the
+    * constant base rank, and per-round cost tracks |edges|, not |V|.
+    * Per round: ONE edge⋈rank join (keyed on src), one
+    * map-side-combinable sum keyed on dst, one left join to the incident
+    * vertex set. The driver sees only |V| (one count) — never data.
+    * Lineage is cut per round with an eager localCheckpoint, so `iters`
+    * can grow without plan blowup. Dangling nodes keep the base rank;
+    * departed mass is dropped, matching the documented truncation
+    * stance. */
   def integerPageRank(vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000L, dampNum: Long = 85L,

@@ -170,11 +170,12 @@ object TextOps {
     * of [[SimhashGuardKey]]. */
   val PpjoinGuardKey = "spark.graft.ppjoin.guard"
 
-  private[graft] val DefaultPpjoinBudget = 2000000000L
-
   /** Guard-trip counter (enforce + warn), suite observability. */
   private[graft] val ppjoinGuardTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
+
+  private[graft] val PpjoinGuard = GuardFamily(PpjoinBudgetKey,
+    PpjoinGuardKey, 2000000000L, ppjoinGuardTrips)
 
   /** WINDOW-FREE upper bound on any prefix join's raw matched rows:
     * the full inverted-index mass Σ over shingle hashes of df(s)² —
@@ -245,41 +246,20 @@ object TextOps {
         sum(col("__cp").cast("double") * col("__ci")), lit(0.0)))
       .head().getDouble(0).toLong
 
-  /** Pre-flight density guard on a prefix bucket join (r18 verdict item
-    * 3: guard parity — the SimHash and IVF walls refuse mechanically,
-    * but a boilerplate-flooded corpus could still launch a silent n²
-    * PPJoin). `massBound` is the window-free [[shingleDfSquaredMass]]
-    * bound (one narrow pass over the cached shingle table) — when it
-    * clears the budget nothing else runs, which is the honest-corpus
-    * steady state at every measured scale; only past it does
-    * `massExact` (one pass that re-derives the prefix rank window)
-    * decide, refusing or warning per [[PpjoinGuardKey]]. */
-  private def ppjoinPrefixGuard(spark: org.apache.spark.sql.SparkSession,
-      mode: String, massBound: => Long, massExact: => Long,
-      what: String): Unit = {
-    // `mode` is read ONCE by the caller and passed in (ADVICE r20): a
-    // conf flip between plan-build and guard execution must not leave a
-    // freq cache that was built for a guard that then never materializes
-    // it (the concurrent-first-reader recompute race)
-    if (mode == "off") return // by-name masses: off pays zero jobs
-    val budget = GuardConf.budget(spark, PpjoinBudgetKey, DefaultPpjoinBudget)
-    if (massBound <= budget) return
-    val mass = massExact
-    if (mass <= budget) return
-    ppjoinGuardTrips.incrementAndGet()
-    val msg =
-      f"$what: the prefix bucket join would materialize ~$mass%,d raw " +
-        f"candidate rows — past the $budget%,d budget " +
-        f"($PpjoinBudgetKey). Prefix mass tracks true near-dup density, " +
-        "so this corpus is pathologically self-similar (mass-duplicated " +
-        "boilerplate concentrating one prefix bucket). Exact-dedup first " +
-        "(dedupExact, d01) to collapse the verbatim mass, or raise the " +
-        "similarity threshold (shorter prefixes). Set " +
-        s"$PpjoinGuardKey=warn to override."
-    if (mode == "warn")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    else throw new IllegalStateException(msg)
-  }
+  /** Remedy text of the PPJoin prefix guard (r18 verdict item 3: guard
+    * parity — a boilerplate-flooded corpus must not launch a silent n²
+    * PPJoin). Both call sites pass the window-free
+    * [[shingleDfSquaredMass]] bound (one narrow pass over the cached df
+    * table) to [[GuardConf.check]], so only past it does the exact mass
+    * (one pass that re-derives the prefix rank window) decide. */
+  private def ppjoinRefusal(what: String)(mass: Long, budget: Long): String =
+    f"$what: the prefix bucket join would materialize ~$mass%,d raw " +
+      f"candidate rows — past the $budget%,d budget " +
+      f"($PpjoinBudgetKey). Prefix mass tracks true near-dup density, " +
+      "so this corpus is pathologically self-similar (mass-duplicated " +
+      "boilerplate concentrating one prefix bucket). Exact-dedup first " +
+      "(dedupExact, d01) to collapse the verbatim mass, or raise the " +
+      "similarity threshold (shorter prefixes)."
 
   /** Candidate pairs from the prefix index: hash each shingle to 64 bits,
     * explode, compute global document frequency (one aggregation), keep
@@ -343,15 +323,11 @@ object TextOps {
     val idxLen = col("__n") - ceil(lit(2 * t / (1 + t)) * col("__n")) + 1
     // a refusal must not strand the just-materialized df cache (the
     // shingle-cache discipline in every caller applies here too)
-    try ppjoinPrefixGuard(sh.sparkSession, guardMode,
-      dfSquaredMassOf(freq),
+    GuardConf.check(sh.sparkSession, PpjoinGuard, guardMode,
+      dfSquaredMassOf(freq).toDouble,
       ppjoinCandidateMass(prefix, col("__rk") <= idxLen),
-      f"ngramJaccardPairs(threshold=$t%.2f)")
-    catch {
-      case e: Throwable =>
-        if (!guardOff) freq.unpersist()
-        throw e
-    }
+      ppjoinRefusal(f"ngramJaccardPairs(threshold=$t%.2f)"),
+      freq.unpersist())
     // distinct key names per side: Column-equality on the same lineage
     // trips Spark's ambiguous-self-join fixup (and its warning)
     val probe = prefix.select(col("__id").as("id_p"), col("__n").as("n_p"),
@@ -443,16 +419,11 @@ object TextOps {
         col("__s").as("__s_p"), col("__df"))
     val index = ex.select(col("__id").as("id_b"), col("__n").as("n_b"),
       col("__s").as("__s_i"))
-    try ppjoinPrefixGuard(sh.sparkSession, guardMode,
-      dfSquaredMassOf(freq), prefixDfMassBound(probe),
-      f"containmentPairs(threshold=$t%.2f)")
-    catch {
-      case e: Throwable =>
-        // a refusal must not strand the shingle or df caches
-        sh.unpersist()
-        if (!guardOff) freq.unpersist()
-        throw e
-    }
+    // a refusal must not strand the shingle or df caches
+    GuardConf.check(sh.sparkSession, PpjoinGuard, guardMode,
+      dfSquaredMassOf(freq).toDouble, prefixDfMassBound(probe),
+      ppjoinRefusal(f"containmentPairs(threshold=$t%.2f)"),
+      { sh.unpersist(); freq.unpersist() })
     // size prune in the SAME integer-permille arithmetic as the verify
     // stage below: a double-rounded ceil(t*n_a) can be one stricter than
     // the permille compare at representation boundaries, dropping a pair
@@ -510,7 +481,7 @@ object TextOps {
     * candidates only; callers verify with [[jaccard]] on true shingle
     * sets. Bucket sizes are bounded in practice by hash uniformity;
     * pathological identical-doc floods are refused mechanically by the
-    * band-bucket density guard (see [[minhashBandGuard]] /
+    * band-bucket density guard (see [[minHashCandidatesFromHashed]] /
     * [[MinhashBudgetKey]]) — the remedy is dedup-first. */
   def minHashCandidates(
       df: DataFrame, idCol: String, textCol: String,
@@ -530,42 +501,40 @@ object TextOps {
     * of [[SimhashGuardKey]]. */
   val MinhashGuardKey = "spark.graft.minhash.guard"
 
-  private[graft] val DefaultMinhashBudget = 2000000000L
-
   /** Guard-trip counter (enforce + warn), suite observability. */
   private[graft] val minhashGuardTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** EXACT candidate mass of the (band, key) bucket self-join over a
-    * cached signature table (`__id`, `__bands`): Σ over buckets of
-    * c·(c−1)/2 — the [[simHashCandidateMass]] pattern on the LSH band
-    * layout. One linear partial-aggregating pass. */
-  def minHashCandidateMass(sig: DataFrame): Long =
+  private[graft] val MinhashGuard = GuardFamily(MinhashBudgetKey,
+    MinhashGuardKey, 2000000000L, minhashGuardTrips)
+
+  /** Per-doc MinHash band keys (`__id`, `__bands`) over an already-
+    * hashed shingle table — the signature stage shared by
+    * [[minHashCandidatesFromHashed]] and [[minHashMassProbe]]. One
+    * projection per stage: the band computation reads a materialized
+    * signature array instead of re-deriving the whole upstream
+    * expression per lambda element (see shingles() pitfall). */
+  private def minHashBandTable(sh: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    sh.select(col("__id"),
+        MinHashSig.column(sh.sparkSession, col("__sh"), numHashes).as("__sig"))
+      .select(col("__id"),
+        lshBandKeys(col("__sig"), bands, numHashes / bands).as("__bands"))
+
+  /** The (band, key) bucket of every (doc, band) — the key table of the
+    * band-bucket self-join and of its guard's [[GuardConf.bucketPairMass]]. */
+  private def minHashBucketKeys(sig: DataFrame): DataFrame =
     sig.select(posexplode(col("__bands")).as(Seq("__b", "__key")))
-      .groupBy(col("__b"), col("__key")).agg(count(lit(1)).as("c"))
-      // c cast to double BEFORE the multiply: long c*(c-1) wraps
-      // negative past ~3e9 rows in one bucket
-      .agg(coalesce(
-        sum(col("c").cast("double") * (col("c") - 1) / 2), lit(0.0)))
-      .head().getDouble(0).toLong
 
   /** Sweep face of the MinHash band guard: build the signature table
     * for (n, numHashes, bands) and return the exact band-bucket mass —
     * ScaleCheck prints it next to the default budget. */
   def minHashMassProbe(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, bands: Int): Long = {
-    val r = numHashes / bands
-    val sh = hashedShingleSets(df, idCol, textCol, n)
-    val sig = sh
-      .select(col("__id"),
-        MinHashSig.column(sh.sparkSession, col("__sh"), numHashes)
-          .as("__sig"))
-      .select(col("__id"), lshBandKeys(col("__sig"), bands, r).as("__bands"))
-      .cache()
-    sig.count()
-    val mass = minHashCandidateMass(sig)
-    sig.unpersist()
-    mass
+    val sig = minHashBandTable(hashedShingleSets(df, idCol, textCol, n),
+      numHashes, bands).cache() // the pushdown barrier under the explode
+    try GuardConf.bucketPairMass(minHashBucketKeys(sig))
+    finally sig.unpersist()
   }
 
   /** The d02-shape prefix frame at threshold `t` over a (string or
@@ -623,38 +592,6 @@ object TextOps {
     (bound, exact)
   }
 
-  /** Pre-flight density guard on the LSH band-bucket join (r18 verdict
-    * item 3: guard parity with the SimHash/IVF walls). Short-circuits
-    * when even the worst case (every signature identical:
-    * bands·n(n−1)/2) fits the budget — true at gate/bench scales, so
-    * the steady-state cost is the count() the eager cache pays anyway;
-    * above that it measures the EXACT bucket mass (linear) and refuses
-    * or warns per [[MinhashGuardKey]]. */
-  private def minhashBandGuard(sig: DataFrame, bands: Int, n: Long): Unit = {
-    val spark = sig.sparkSession
-    val mode = GuardConf.mode(spark, MinhashGuardKey)
-    if (mode == "off") return
-    val budget =
-      GuardConf.budget(spark, MinhashBudgetKey, DefaultMinhashBudget)
-    if (bands.toDouble * n * (n - 1) / 2 <= budget.toDouble) return
-    val mass = minHashCandidateMass(sig)
-    if (mass <= budget) return
-    minhashGuardTrips.incrementAndGet()
-    val msg =
-      f"minHashCandidates(bands=$bands): the band-bucket join would " +
-        f"surface ~$mass%,d candidate pairs over $n%,d documents — " +
-        f"past the $budget%,d budget ($MinhashBudgetKey). Band mass " +
-        "tracks true near-dup density, so this corpus is pathologically " +
-        "self-similar (verbatim duplicates concentrating the buckets). " +
-        "Exact-dedup first (dedupExact, d01) to collapse the verbatim " +
-        "mass, or use FEWER bands with more rows per band to sharpen " +
-        s"the collision threshold. Set $MinhashGuardKey=warn to " +
-        "override."
-    if (mode == "warn")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    else throw new IllegalStateException(msg)
-  }
-
   /** [[minHashCandidates]] over an ALREADY-HASHED shingle table
     * (`__id`, `__sh: array<long>` — [[hashedShingleSets]] output).
     * Callers that also verify exactly ([[verifyJaccard]]) pass their
@@ -664,26 +601,32 @@ object TextOps {
   def minHashCandidatesFromHashed(
       sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    // one projection per stage — signature and band computation each read
-    // a materialized array instead of re-deriving the whole upstream
-    // expression per lambda element (see shingles() pitfall)
+    val spark = sh.sparkSession
+    val mode = GuardConf.mode(spark, MinhashGuardKey)
     // cache the signature stage BEFORE the explode — the pushdown barrier
     // must sit under the Generate or the inferred size()>0 filter
     // re-derives the whole 128-hash chain per row (see ngramJaccardPairs);
     // materializing the sketch table once is also the 100 TB-scale shape
-    val sig = sh
-      .select(col("__id"),
-        MinHashSig.column(sh.sparkSession, col("__sh"), numHashes).as("__sig"))
-      .select(col("__id"), lshBandKeys(col("__sig"), bands, r).as("__bands"))
-      .cache()
+    val sig = minHashBandTable(sh, numHashes, bands).cache()
     val nDocs = sig.count() // eager: both self-join sides read it (first-reader race)
-    try minhashBandGuard(sig, bands, nDocs)
-    catch {
-      case e: Throwable =>
-        sig.unpersist() // a refusal must not strand the signature cache
-        throw e
-    }
+    // pre-flight (r18 verdict item 3: guard parity with the SimHash/IVF
+    // walls): short-circuits when even the worst case (every signature
+    // identical: bands·n(n−1)/2) fits the budget — true at gate/bench
+    // scales, so the steady-state cost is the count() the eager cache
+    // pays anyway; a refusal must not strand the signature cache
+    GuardConf.check(spark, MinhashGuard, mode,
+      bands.toDouble * nDocs * (nDocs - 1) / 2,
+      GuardConf.bucketPairMass(minHashBucketKeys(sig)),
+      (mass, budget) =>
+        f"minHashCandidates(bands=$bands): the band-bucket join would " +
+          f"surface ~$mass%,d candidate pairs over $nDocs%,d documents — " +
+          f"past the $budget%,d budget ($MinhashBudgetKey). Band mass " +
+          "tracks true near-dup density, so this corpus is pathologically " +
+          "self-similar (verbatim duplicates concentrating the buckets). " +
+          "Exact-dedup first (dedupExact, d01) to collapse the verbatim " +
+          "mass, or use FEWER bands with more rows per band to sharpen " +
+          "the collision threshold.",
+      sig.unpersist())
     val ex = sig.select(col("__id"), posexplode(col("__bands")).as(Seq("__b", "__key")))
     val l = ex.select(col("__id").as("id_a"), col("__b"), col("__key"))
     val rt = ex.select(col("__id").as("id_b"), col("__b"), col("__key"))
@@ -2511,143 +2454,6 @@ object TextOps {
               bc, numHashes))
           .cast("long").as("n_hit"))
 
-  /** Connected components over a near-duplicate pair graph via min-label
-    * propagation: every document's cluster id is the minimum doc id
-    * reachable through dup edges — the canonical-representative
-    * assignment a dedup pipeline needs after pair generation (keep
-    * `doc_id == cluster_id`, drop the rest).
-    *
-    * Iterative DataFrame algorithm: each round propagates labels across
-    * edges and keeps the per-node min; rounds needed = component
-    * diameter (near-dup clusters are small — planted clusters converge
-    * in 2-3). Every shuffle keys on uniformly distributed ids; the
-    * driver loop only reads convergence counts, never data.
-    *
-    * Only EDGE-INCIDENT vertices iterate: a doc with no dup edge can
-    * never receive a foreign label, so the loop runs over the pair
-    * subgraph (at corpus scale, orders of magnitude smaller than the
-    * corpus) and the full document set joins back once at the end —
-    * iteration cost tracks |dup graph|, not |corpus|.
-    *
-    * Small-graph fast path (the GraphX/GraphFrames move): when the edge
-    * set fits comfortably on the driver (`smallEdgeLimit`, default 1M
-    * pairs = 16 MB of longs), union-find with path compression replaces
-    * the iterative loop entirely — one collect, zero per-round Spark
-    * jobs, identical min-label fixpoint. Even on a 1000-executor
-    * cluster, scheduling `diameter x 3` stages over a few thousand rows
-    * costs more than the driver's O(E alpha(E)) — the distributed loop
-    * exists for the web-scale dup graphs that genuinely exceed the
-    * bound, and engages automatically above it. */
-  def duplicateClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 20, smallEdgeLimit: Long = 1000000L): DataFrame = {
-    // cache the (possibly expensive-to-produce) pair stream ONCE, then
-    // derive both edge directions from the cache — the naive
-    // `pairs ∪ pairs.reversed` union evaluates the upstream pair
-    // generator twice
-    val base = pairs
-      .select(col("id_a").as("__src"), col("id_b").as("__dst")).cache()
-    val edgeCount = base.count()
-    // fast path only when BOTH the pair ids and the docs id column are
-    // long (the corpus contract): any other id type takes the fully
-    // distributed loop unchanged — the fast path's output id column
-    // comes back as long, and a silent cast would change the schema (or
-    // null out string ids) depending on nothing but the edge count
-    val idsAreLong = base.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType) &&
-      docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType
-    if (edgeCount <= smallEdgeLimit && idsAreLong) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val es = base.as[(Long, Long)].collect()
-      base.unpersist()
-      // union-find, path-compressed; roots resolve to the component MIN
-      // id afterwards so the result equals the propagation fixpoint
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
-      }
-      val verts = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
-      verts.foreach { v =>
-        val r = find(v)
-        minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
-      }
-      val labels = verts.map(v => (v, minOfRoot(find(v)))).toSeq
-        .toDF("__v", "__lbl")
-      return docs.select(col(idCol).cast("long").as("__v"))
-        .join(broadcast(labels), Seq("__v"), "left")
-        .select(col("__v").as(idCol),
-          coalesce(col("__lbl"), col("__v")).as("cluster_id"))
-    }
-    val edges = base
-      .union(base.select(col("__dst").as("__src"), col("__src").as("__dst")))
-    // both directions are present, so base's two columns cover every
-    // incident vertex
-    var labels = base.select(col("__src").as("__v"))
-      .union(base.select(col("__dst").as("__v"))).distinct()
-      .select(col("__v"), col("__v").as("__lbl")).cache()
-    labels.count()
-    var prev: DataFrame = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // one job per round: incoming neighbor labels pre-aggregate to a
-      // per-vertex min (map-side partial), the left join folds them into
-      // the current labels, and the `changed` count is the SAME action
-      // that populates the round's cache — no separate compare job. The
-      // label side is subgraph-sized, so AQE broadcasts both joins; the
-      // only exchange is the groupBy on uniformly distributed ids.
-      val prop = edges.join(labels, edges("__src") === labels("__v"))
-        .groupBy(col("__dst")).agg(min("__lbl").as("__plbl"))
-      val next = labels.join(prop, labels("__v") === prop("__dst"), "left")
-        .select(labels("__v"),
-          least(labels("__lbl"), coalesce(col("__plbl"), labels("__lbl")))
-            .as("__lbl"),
-          // null when no incoming label — filtered out by the where
-          (col("__plbl") < labels("__lbl")).as("__chg"))
-        .cache()
-      val changed = next.where(col("__chg")).count()
-      if (prev != null) prev.unpersist()
-      prev = labels
-      // keep the CACHED frame itself (unpersist is identity-based; a
-      // select() over it would make the later unpersist a no-op) — the
-      // stray __chg column is dropped at the end
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    if (prev != null) prev.unpersist()
-    base.unpersist()
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"duplicateClusters: label propagation hit maxIters=$maxIters before " +
-          "converging — components wider than the iteration budget carry " +
-          "partially-propagated (non-minimal) cluster ids")
-    // cut the converged labels loose from the cache before returning: a
-    // localCheckpoint re-materializes the (already computed, subgraph-
-    // sized) labels into block storage owned by the result's lineage, so
-    // the loop's cache can be dropped NOW instead of leaking until the
-    // caller happens to evaluate the lazy join
-    val finalLabels = labels.localCheckpoint(true)
-    labels.unpersist()
-    // non-incident docs (the vast majority) are their own cluster; the
-    // converged subgraph labels are tiny, so AQE broadcasts
-    docs.select(col(idCol).as("__v"))
-      .join(finalLabels, Seq("__v"), "left")
-      .select(col("__v").as(idCol),
-        coalesce(col("__lbl"), col("__v")).as("cluster_id"))
-  }
-
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
     * MOSS scheme): hash every character k-gram of the normalized text,
     * slide a w-hash window, keep each window's MINIMUM hash, dedupe —
@@ -2727,12 +2533,13 @@ object TextOps {
     * `warn` (log and run anyway), or `off` (skip the pre-flight). */
   val SimhashGuardKey = "spark.graft.simhash.guard"
 
-  private[graft] val DefaultSimhashBudget = 2000000000L
-
   /** Count of guard evaluations that found the mass over budget (both
     * enforce and warn modes) — suite observability for the pre-flight. */
   private[graft] val simhashGuardTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
+
+  private[graft] val SimhashGuard = GuardFamily(SimhashBudgetKey,
+    SimhashGuardKey, 2000000000L, simhashGuardTrips)
 
   /** Block layout of the pigeonhole banding at `maxHamming`:
     * (blocks, bits per block). Any pair within Hamming d agrees exactly
@@ -2754,58 +2561,13 @@ object TextOps {
   }
 
   /** EXACT candidate mass of the banded join over a cached `(id,
-    * simhash)` table: Σ over (block, key) buckets of c·(c−1)/2 — the
-    * number of raw pairs the self-join materializes before the verify.
-    * One partial-aggregating pass over n·(maxHamming+1) rows; linear,
-    * vs the join it predicts. */
+    * simhash)` table: the [[GuardConf.bucketPairMass]] of its (block,
+    * key) buckets — the number of raw pairs the self-join materializes
+    * before the verify. One partial-aggregating pass over
+    * n·(maxHamming+1) rows; linear, vs the join it predicts. */
   def simHashCandidateMass(sims: DataFrame, maxHamming: Int): Long =
-    sims.select(explode(bandKeys(maxHamming)).as("__k"))
-      .groupBy(col("__k")).agg(count(lit(1)).as("c"))
-      // c cast to double BEFORE the multiply: long c*(c-1) wraps
-      // negative past ~3e9 rows in one bucket — silently under-
-      // reporting the mass at exactly the scale the guard exists for
-      .agg(coalesce(
-        sum(col("c").cast("double") * (col("c") - 1) / 2), lit(0.0)))
-      .head().getDouble(0).toLong
-
-  /** Pre-flight density guard on the banded join (r17 verdict item 1:
-    * the radius-11 wall was measured — sf5.0 spent 43% of the bench in
-    * one candidate-density-quadratic join — but only DOCUMENTED; this
-    * makes it mechanical). Short-circuits when even the worst case
-    * (every hash identical) fits the budget, so small corpora pay one
-    * count on the already-cached hash table and nothing else; above
-    * that it measures the EXACT bucket mass (linear) and refuses or
-    * warns per [[SimhashGuardKey]], naming the scale-safe operating
-    * points. */
-  private def simhashDensityGuard(cached: DataFrame, maxHamming: Int): Unit = {
-    val spark = cached.sparkSession
-    val mode = GuardConf.mode(spark, SimhashGuardKey)
-    if (mode == "off") return
-    val budget = GuardConf.budget(spark, SimhashBudgetKey, DefaultSimhashBudget)
-    val (blocks, width) = bandLayout(maxHamming)
-    val n = cached.count()
-    val worst = blocks.toDouble * n * (n - 1) / 2
-    if (worst <= budget.toDouble) return
-    val mass = simHashCandidateMass(cached, maxHamming)
-    if (mass <= budget) return
-    simhashGuardTrips.incrementAndGet()
-    val msg =
-      f"simHashPairs(maxHamming=$maxHamming): the banded join would " +
-        f"surface ~$mass%,d candidate pairs over $n%,d rows ($blocks " +
-        f"blocks of $width bits) — past the $budget%,d budget " +
-        f"($SimhashBudgetKey). Candidate mass grows ~n²·blocks/2^width, " +
-        "so this run is quadratic (the wall measured in SCALING.md: " +
-        "radius 11 at 250k docs = 43% of the whole bench). Scale-safe " +
-        "operating points: maxHamming=3 (4 blocks of 16 bits — the " +
-        "Manku configuration, d26) for tight near-dup, or MinHash LSH " +
-        "(minHashCandidatesFromHashed, d03) for aggressive-radius " +
-        "similarity, whose candidate mass tracks true near-dup density " +
-        s"instead of bucket collisions. Set $SimhashGuardKey=warn to " +
-        "override."
-    if (mode == "warn")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    else throw new IllegalStateException(msg)
-  }
+    GuardConf.bucketPairMass(
+      sims.select(explode(bandKeys(maxHamming)).as("__k")))
 
   /** SimHash near-dup candidates with Hamming distance <= maxHamming,
     * via block banding (pigeonhole: any pair within distance d shares at
@@ -2815,7 +2577,7 @@ object TextOps {
     * so wide radii on large corpora go quadratic (the measured d04
     * wall). A pre-flight estimates the exact mass and refuses past
     * [[SimhashBudgetKey]] (default 2e9 candidates), naming the
-    * scale-safe alternatives — see [[simhashDensityGuard]].
+    * scale-safe alternatives.
     *
     * Cache lifetime: the input is cached for the duration of the
     * returned frame (guard + both self-join sides read it) and is NOT
@@ -2826,20 +2588,36 @@ object TextOps {
     * input themselves; a refused call cleans up after itself. */
   def simHashPairs(
       sims: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
+    val spark = sims.sparkSession
+    val mode = GuardConf.mode(spark, SimhashGuardKey)
     // sims is typically an aggregate output (already a pushdown barrier);
     // cache it anyway — the guard, then both self-join sides, read it
     val cached = sims.cache()
-    try simhashDensityGuard(
-      cached.select(col(idCol).as("__id"), col("simhash")), maxHamming)
-    catch {
-      case e: Throwable =>
-        // a refusal must not strand the just-materialized hash table in
-        // executor storage (code-review finding): a driver probing
-        // several over-budget corpora would otherwise accumulate one
-        // corpus-sized cache entry per refusal
-        cached.unpersist()
-        throw e
-    }
+    val (blocks, width) = bandLayout(maxHamming)
+    lazy val n = cached.count() // by-name bound: off pays zero jobs
+    // pre-flight (r17 verdict item 1: the radius-11 wall was measured —
+    // sf5.0 spent 43% of the bench in one candidate-density-quadratic
+    // join — but only DOCUMENTED; this makes it mechanical). The worst
+    // case (every hash identical) short-circuits small corpora. A refusal
+    // must not strand the just-materialized hash table in executor
+    // storage: a driver probing several over-budget corpora would
+    // otherwise accumulate one corpus-sized cache entry per refusal
+    GuardConf.check(spark, SimhashGuard, mode,
+      blocks.toDouble * n * (n - 1) / 2,
+      simHashCandidateMass(cached, maxHamming),
+      (mass, budget) =>
+        f"simHashPairs(maxHamming=$maxHamming): the banded join would " +
+          f"surface ~$mass%,d candidate pairs over $n%,d rows ($blocks " +
+          f"blocks of $width bits) — past the $budget%,d budget " +
+          f"($SimhashBudgetKey). Candidate mass grows ~n²·blocks/2^width, " +
+          "so this run is quadratic (the wall measured in SCALING.md: " +
+          "radius 11 at 250k docs = 43% of the whole bench). Scale-safe " +
+          "operating points: maxHamming=3 (4 blocks of 16 bits — the " +
+          "Manku configuration, d26) for tight near-dup, or MinHash LSH " +
+          "(minHashCandidatesFromHashed, d03) for aggressive-radius " +
+          "similarity, whose candidate mass tracks true near-dup density " +
+          "instead of bucket collisions.",
+      cached.unpersist())
     val ex = cached.select(col(idCol).as("__id"), col("simhash"),
       explode(bandKeys(maxHamming)).as("__k"))
     val l = ex.select(col("__id").as("id_a"), col("simhash").as("sim_a"), col("__k"))

@@ -1842,18 +1842,14 @@ object VectorOps {
     // plane family (and the oracle's replay) is exactly dim wide, so a
     // vector of any other length fails loudly instead of folding extra
     // dimensions into silently-divergent signatures.
+    val mode = GuardConf.mode(spark, LshGuardKey)
     val sigs = c
       .withColumn("__sigs",
         PinnedHyperplaneSig.column(spark, col("__c"), bits, bands, dim))
       .select(col("__id"), col("__c"), col("__n"), col("__sigs"))
       .cache() // both self-join sides read it (see lshScoredCandidates)
     val nVecs = sigs.count() // eager: first-reader race
-    try lshBandGuard(sigs, bands, nVecs)
-    catch {
-      case e: Throwable =>
-        sigs.unpersist() // a refusal must not strand the signature cache
-        throw e
-    }
+    lshBandGuard(sigs, bands, nVecs, mode)
     val exploded = sigs.select(col("__id"), col("__c"), col("__n"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
     val l = exploded.select(col("__id").as("id_a"), col("__c").as("ca"),
@@ -1883,69 +1879,58 @@ object VectorOps {
     * twin of the MinHash guard's mode switch. */
   val LshGuardKey = "spark.graft.lsh.guard"
 
-  private[graft] val DefaultLshBudget = 2000000000L
-
   /** Guard-trip counter (enforce + warn), suite observability. */
   private[graft] val lshGuardTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** EXACT candidate mass of the (band, signature) bucket self-join
-    * over a cached signature table (`__sigs` array column): Σ over
-    * buckets of c·(c−1)/2 — one linear partial-aggregating pass. */
-  def lshCandidateMass(sigs: DataFrame): Long =
+  private[graft] val LshGuard = GuardFamily(LshBudgetKey, LshGuardKey,
+    2000000000L, lshGuardTrips)
+
+  /** The trained-family signature table (`__id`, `__v` unit vector,
+    * `__sigs` one signature per band) — shared by
+    * [[lshScoredCandidates]] and [[lshMassProbe]]. */
+  private def lshSignatureTable(df: DataFrame, idCol: String,
+      vecCol: String, bits: Int, bands: Int): DataFrame =
+    normalizedVectors(df, idCol, vecCol).select(col("__id"), col("__v"),
+      hyperplaneSignatures(df.sparkSession, col("__v"), bits, bands)
+        .as("__sigs"))
+
+  /** The (band, signature) bucket of every (vector, band) — the key
+    * table of the band-bucket self-join and of its guard's mass. */
+  private def lshBucketKeys(sigs: DataFrame): DataFrame =
     sigs.select(posexplode(col("__sigs")).as(Seq("__band", "__sig")))
-      .groupBy(col("__band"), col("__sig")).agg(count(lit(1)).as("c"))
-      // c cast to double BEFORE the multiply: long c*(c-1) wraps
-      // negative past ~3e9 rows in one bucket
-      .agg(coalesce(
-        sum(col("c").cast("double") * (col("c") - 1) / 2), lit(0.0)))
-      .head().getDouble(0).toLong
 
   /** Pre-flight density guard on the hyperplane-LSH bucket join —
     * guard parity across every bucket-join family (the r18 item 3
-    * pattern; the vector side of [[graft.functions.TextOps]]'s MinHash
-    * guard). Short-circuits when even the worst case (every signature
+    * pattern). Short-circuits when even the worst case (every signature
     * identical: bands·n(n−1)/2) fits the budget — true at gate/bench
-    * scales, zero extra jobs; above that one linear mass pass decides,
-    * refusing or warning per [[LshGuardKey]]. */
-  private def lshBandGuard(sigs: DataFrame, bands: Int, n: Long): Unit = {
-    val spark = sigs.sparkSession
-    val mode = GuardConf.mode(spark, LshGuardKey)
-    if (mode == "off") return
-    val budget = GuardConf.budget(spark, LshBudgetKey, DefaultLshBudget)
-    if (bands.toDouble * n * (n - 1) / 2 <= budget.toDouble) return
-    val mass = lshCandidateMass(sigs)
-    if (mass <= budget) return
-    lshGuardTrips.incrementAndGet()
-    val msg =
-      f"hyperplane-LSH pair join (bands=$bands): the band-bucket join " +
-        f"would surface ~$mass%,d candidate pairs over $n%,d vectors — " +
-        f"past the $budget%,d budget ($LshBudgetKey). Bucket mass " +
-        "tracks true angular near-dup density, so this corpus is " +
-        "pathologically self-similar (mass-duplicated vectors or one " +
-        "tight direction concentrating the buckets). Exact-dedup the " +
-        "vectors first, or sharpen the parameters (more bits per band " +
-        "— lshParamsFor derives the collision-bounded choice). Set " +
-        s"$LshGuardKey=warn to override."
-    if (mode == "warn")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    else throw new IllegalStateException(msg)
-  }
+    * scales, zero extra jobs; above that one linear mass pass decides.
+    * A refusal releases the cached signature table. */
+  private def lshBandGuard(sigs: DataFrame, bands: Int, n: Long,
+      mode: String): Unit =
+    GuardConf.check(sigs.sparkSession, LshGuard, mode,
+      bands.toDouble * n * (n - 1) / 2,
+      GuardConf.bucketPairMass(lshBucketKeys(sigs)),
+      (mass, budget) =>
+        f"hyperplane-LSH pair join (bands=$bands): the band-bucket join " +
+          f"would surface ~$mass%,d candidate pairs over $n%,d vectors — " +
+          f"past the $budget%,d budget ($LshBudgetKey). Bucket mass " +
+          "tracks true angular near-dup density, so this corpus is " +
+          "pathologically self-similar (mass-duplicated vectors or one " +
+          "tight direction concentrating the buckets). Exact-dedup the " +
+          "vectors first, or sharpen the parameters (more bits per band " +
+          "— lshParamsFor derives the collision-bounded choice).",
+      sigs.unpersist())
 
   /** Sweep face of the LSH band guard: build the trained-family
     * signature table at (bits, bands) and return the exact band-bucket
     * mass — ScaleCheck prints it next to the default budget. */
   def lshMassProbe(df: DataFrame, idCol: String, vecCol: String,
       bits: Int, bands: Int): Long = {
-    val base = normalizedVectors(df, idCol, vecCol)
-    val sigs = base.select(col("__id"),
-        hyperplaneSignatures(df.sparkSession, col("__v"), bits, bands)
-          .as("__sigs"))
-      .cache()
-    sigs.count()
-    val mass = lshCandidateMass(sigs)
-    sigs.unpersist()
-    mass
+    val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands)
+      .select(col("__sigs")).cache() // the pushdown barrier under the explode
+    try GuardConf.bucketPairMass(lshBucketKeys(sigs))
+    finally sigs.unpersist()
   }
 
   /** Conf key: within-list pair budget for the FIXED-nlist IVF dedup
@@ -1958,67 +1943,69 @@ object VectorOps {
     * the banded-SimHash guard's mode switch. */
   val IvfGuardKey = "spark.graft.ivf.guard"
 
-  private[graft] val DefaultIvfBudget = 200000000L
-
   /** Guard-trip counter (enforce + warn), suite observability. */
   private[graft] val ivfGuardTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** EXACT within-list pair mass of the bucket self-join: Σ over lists
-    * of c·(c−1)/2 — one linear partial-aggregating pass over the
-    * n·nassign assignment rows, vs the join it predicts. */
-  def ivfPairMass(assigned: DataFrame, bucketCol: String): Long =
-    assigned.groupBy(col(bucketCol)).agg(count(lit(1)).as("c"))
-      // c cast to double BEFORE the multiply: long c*(c-1) wraps
-      // negative past ~3e9 rows in one list — silently under-reporting
-      // the mass at exactly the scale the guard exists for
-      .agg(coalesce(
-        sum(col("c").cast("double") * (col("c") - 1) / 2), lit(0.0)))
-      .head().getDouble(0).toLong
+  private[graft] val IvfGuard = GuardFamily(IvfBudgetKey, IvfGuardKey,
+    200000000L, ivfGuardTrips)
 
   /** Pre-flight density guard on the FIXED-nlist IVF pair join — the
     * r17 weak-list's second half made mechanical (d04's banding guard
     * is the first): with nlist fixed, within-list pair mass is
     * n²·nassign²/nlist — quadratic — measured at 52 s for 100k vectors
-    * at sf5.0. Short-circuits when even the attainable worst case
-    * (k full buckets of n — multi-assignments land in distinct
-    * buckets) fits the budget (true at gate/bench scales: zero extra
-    * jobs beyond the corpus count the callers already take);
-    * otherwise measures the exact bucket mass (linear) and refuses or
-    * warns per [[IvfGuardKey]], naming the sqrt-scale operating point.
-    * The SCALED variant ([[ivfCosinePairsPinnedScaled]]) is
-    * deliberately unguarded: its mass is ~n^1.5 BY DESIGN — the
-    * operating curve a large corpus chooses knowingly. */
-  private def ivfPairGuard(spark: org.apache.spark.sql.SparkSession,
-      n: => Long, k: Int, assigned: => DataFrame, nlist: Int,
-      nassign: Int): Unit = {
-    val mode = GuardConf.mode(spark, IvfGuardKey)
-    if (mode == "off") return // by-name n: off mode pays zero jobs
-    val budget = GuardConf.budget(spark, IvfBudgetKey, DefaultIvfBudget)
-    // attainable worst case: a vector's k assignments land in DISTINCT
-    // buckets, so no bucket exceeds n rows — at most k full buckets of
-    // n, i.e. k·n(n−1)/2 (tighter by ~k than treating all n·k rows as
-    // one list; code-review finding). Known from the corpus count
-    // alone, so the short-circuit never computes an assignment.
-    val nv = n
-    if (k.toDouble * nv * (nv - 1) / 2 <= budget.toDouble) return
-    val mass = ivfPairMass(assigned, "__bucket")
-    if (mass <= budget) return
-    val a = nv * k
-    ivfGuardTrips.incrementAndGet()
-    val msg =
-      f"fixed-nlist IVF pair join: the within-list self-join would " +
-        f"surface ~$mass%,d pairs over $a%,d assignment rows " +
-        f"(nlist=$nlist, nassign=$nassign) — past the $budget%,d " +
-        f"budget ($IvfBudgetKey). With nlist fixed the pair mass grows " +
-        "~n²·nassign²/nlist (the wall measured in SCALING.md: 52 s at " +
-        "100k vectors). Scale-safe operating point: " +
-        "ivfCosinePairsPinnedScaled (d27), whose nlist grows as " +
-        "2*ceil(sqrt(n)) and bounds the mass at ~n^1.5 — or raise " +
-        s"nlist explicitly. Set $IvfGuardKey=warn to override."
-    if (mode == "warn")
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    else throw new IllegalStateException(msg)
+    * at sf5.0. Short-circuits when even the attainable worst case fits
+    * the budget (true at gate/bench scales: zero extra jobs beyond the
+    * corpus count the callers already take); otherwise measures the
+    * exact mass of the `buckets` assignment column, naming the
+    * sqrt-scale operating point on refusal, and runs `release`. The
+    * SCALED variant ([[ivfCosinePairsPinnedScaled]]) is deliberately
+    * unguarded: its mass is ~n^1.5 BY DESIGN — the operating curve a
+    * large corpus chooses knowingly. */
+  private def ivfPairGuard(spark: SparkSession, mode: String,
+      n: => Long, k: Int, buckets: => DataFrame, nlist: Int,
+      nassign: Int, release: => Unit): Unit = {
+    lazy val nv = n // by-name: off mode pays zero jobs
+    GuardConf.check(spark, IvfGuard, mode,
+      // attainable worst case: a vector's k assignments land in DISTINCT
+      // buckets, so no bucket exceeds n rows — at most k full buckets of
+      // n, i.e. k·n(n−1)/2 (tighter by ~k than treating all n·k rows as
+      // one list; code-review finding). Known from the corpus count
+      // alone, so the short-circuit never computes an assignment.
+      k.toDouble * nv * (nv - 1) / 2,
+      GuardConf.bucketPairMass(buckets),
+      (mass, budget) =>
+        f"fixed-nlist IVF pair join: the within-list self-join would " +
+          f"surface ~$mass%,d pairs over ${nv * k}%,d assignment rows " +
+          f"(nlist=$nlist, nassign=$nassign) — past the $budget%,d " +
+          f"budget ($IvfBudgetKey). With nlist fixed the pair mass grows " +
+          "~n²·nassign²/nlist (the wall measured in SCALING.md: 52 s at " +
+          "100k vectors). Scale-safe operating point: " +
+          "ivfCosinePairsPinnedScaled (d27), whose nlist grows as " +
+          "2*ceil(sqrt(n)) and bounds the mass at ~n^1.5 — or raise " +
+          "nlist explicitly.",
+      release)
+  }
+
+  /** The pinned coarse quantizer over a cached SQ8 code table (`__id`,
+    * `__c`): (k, each vector's k = min(nassign, |codebook|) nearest
+    * pinned centroid ids — integer-dot argsort, ties -> lowest id).
+    * Shared by [[ivfCosinePairsPinned]] and [[ivfMassProbe]]. */
+  private def pinnedAssignment(c: DataFrame, nlist: Int,
+      nassign: Int): (Int, Column) = {
+    val spark = c.sparkSession
+    val cents = pinnedCodebook(c, "__id", "__c", nlist)
+    val k = math.min(nassign, cents.length)
+    def dots(v: Column): Column =
+      array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
+    (k, slice(
+      transform(
+        array_sort(zip_with(
+          dots(col("__c")),
+          sequence(lit(0), lit(cents.length - 1)),
+          (d, i) => struct((-d).as("nd"), i.as("idx")))),
+        s => s.getField("idx")),
+      1, k))
   }
 
   /** Sweep face of the fixed-nlist IVF guard (r18 verdict item 4: the
@@ -2029,25 +2016,10 @@ object VectorOps {
     * position, the way CodegenSweep shows codegen health. */
   def ivfMassProbe(df: DataFrame, idCol: String, vecCol: String,
       nlist: Int, nassign: Int): Long = {
-    val spark = df.sparkSession
     val c = sq8Codes(df, idCol, vecCol, "__id", "__c").cache()
-    c.count()
-    val cents = pinnedCodebook(c, "__id", "__c", nlist)
-    val k = math.min(nassign, cents.length)
-    def dots(v: Column): Column =
-      array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
-    val assignList = slice(
-      transform(
-        array_sort(zip_with(
-          dots(col("__c")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1, k)
-    val mass = ivfPairMass(
-      c.select(explode(assignList).as("__bucket")), "__bucket")
-    c.unpersist()
-    mass
+    try GuardConf.bucketPairMass(
+      c.select(explode(pinnedAssignment(c, nlist, nassign)._2).as("__bucket")))
+    finally c.unpersist()
   }
 
   /** [[ivfCosinePairs]] (the SemDeDup semantic-dedup shape) with the
@@ -2061,32 +2033,18 @@ object VectorOps {
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
       nlist: Int, nassign: Int): DataFrame = {
     val spark = df.sparkSession
+    val mode = GuardConf.mode(spark, IvfGuardKey)
     // cached: the codebook collect, the guard, and both join sides read
     // it (the scaled variant's discipline, adopted here with the guard)
     val c = withCodeNorm(sq8Codes(df, idCol, vecCol, "__id", "__c"),
       "__c", "__n").cache()
     val n = c.count()
-    val cents = pinnedCodebook(c, "__id", "__c", nlist)
-    val k = math.min(nassign, cents.length)
-    def dots(v: Column): Column =
-      array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
-    val assignList = slice(
-      transform(
-        array_sort(zip_with(
-          dots(col("__c")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1, k)
+    val (k, assignList) = pinnedAssignment(c, nlist, nassign)
     val assigned = c.select(col("__id"), col("__c"), col("__n"),
       explode(assignList).as("__bucket"))
-    try ivfPairGuard(spark, n, k, assigned.select("__bucket"),
-      nlist, nassign)
-    catch {
-      case e: Throwable =>
-        c.unpersist() // a refusal must not strand the cached code table
-        throw e
-    }
+    ivfPairGuard(spark, mode, n, k, assigned.select("__bucket"),
+      nlist, nassign,
+      c.unpersist()) // a refusal must not strand the cached code table
     val l = assigned.select(col("__id").as("id_a"), col("__c").as("ca"),
       col("__n").as("na"), col("__bucket"))
     val r = assigned.select(col("__id").as("id_b"), col("__c").as("cb"),
@@ -2370,22 +2328,14 @@ object VectorOps {
   def lshScoredCandidates(
       df: DataFrame, idCol: String, vecCol: String,
       bits: Int, bands: Int): DataFrame = {
-    val base = normalizedVectors(df, idCol, vecCol)
+    val mode = GuardConf.mode(df.sparkSession, LshGuardKey)
     // compute + cache all band signatures BEFORE the explode: the cache is
     // a predicate-pushdown barrier, without which the optimizer's
     // inferred Generate/join-key filters re-evaluate the whole signature
     // chain per row (see TextOps); it also serves both self-join sides
-    val sigs = base.select(col("__id"), col("__v"),
-      hyperplaneSignatures(df.sparkSession, col("__v"), bits, bands)
-        .as("__sigs"))
-      .cache()
+    val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands).cache()
     val nVecs = sigs.count() // eager: both self-join sides read it (first-reader race)
-    try lshBandGuard(sigs, bands, nVecs)
-    catch {
-      case e: Throwable =>
-        sigs.unpersist() // a refusal must not strand the signature cache
-        throw e
-    }
+    lshBandGuard(sigs, bands, nVecs, mode)
     val withSigs = sigs.select(col("__id"), col("__v"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
     val l = withSigs.select(col("__id").as("id_a"), col("__v").as("va"),
@@ -2625,6 +2575,7 @@ object VectorOps {
       nlist: Int, nassign: Int,
       sampleSize: Int = 2048, iters: Int = 8): DataFrame = {
     val spark = df.sparkSession
+    val mode = GuardConf.mode(spark, IvfGuardKey)
     // cached (r18 ADVICE): the guard's count, the guard's mass
     // aggregation past the short-circuit, and both join sides all read
     // this lineage — uncached, the default enforce mode paid 1-2 extra
@@ -2651,13 +2602,9 @@ object VectorOps {
       explode(assignList).as("__bucket"))
     // n passed BY NAME: guard=off pays zero jobs (code-review finding —
     // a strict count here re-scanned the corpus even when switched off)
-    try ivfPairGuard(spark, c.count(), k, assigned.select("__bucket"),
-      nlist, nassign)
-    catch {
-      case e: Throwable =>
-        c.unpersist() // a refusal must not strand the cached corpus
-        throw e
-    }
+    ivfPairGuard(spark, mode, c.count(), k, assigned.select("__bucket"),
+      nlist, nassign,
+      c.unpersist()) // a refusal must not strand the cached corpus
     val l = assigned.select(col("__id").as("id_a"), col("__v").as("va"),
       col("__bucket"))
     val r = assigned.select(col("__id").as("id_b"), col("__v").as("vb"),

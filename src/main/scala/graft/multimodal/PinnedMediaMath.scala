@@ -1096,7 +1096,7 @@ object PinnedMediaMath {
     * two derivatives share NO modality with each other, yet must
     * co-cluster THROUGH the base item — the property a per-modality
     * dedup cannot express. Scale shape: the sum of two banded joins
-    * plus label-propagation CC — cost tracks candidates per band,
+    * plus one connected-components pass — cost tracks candidates per band,
     * never items². The synthetic planes/captions are fixture plumbing,
     * not production operators — the production machinery is the hash
     * chain and the two banded joins — and because both engines derive
@@ -1105,8 +1105,8 @@ object PinnedMediaMath {
   def crossModalDedupPinned(spark: SparkSession, maxHamming: Int): DataFrame = {
     val (imgEdges, txtEdges, items) = crossModalEdges(spark, maxHamming)
     val edges = imgEdges.unionByName(txtEdges).distinct()
-    graft.functions.TextOps
-      .duplicateClusters(items, "item_id", edges)
+    graft.functions.ScaleOps
+      .connectedComponents(items, "item_id", edges)
       .orderBy("item_id")
   }
 
@@ -1137,7 +1137,7 @@ object PinnedMediaMath {
     * through the shared DCT+hash chain and all-pairs Hamming, the
     * md5-derived captions through exact shingle Jaccard, both edge sets
     * unioned, and the cluster ids recovered by recursive transitive
-    * closure (min reachable id — the label-propagation fixpoint). */
+    * closure (min reachable id — the connected-components fixpoint). */
   def crossModalDedupOracle(maxHamming: Int): String = {
     val raw = noisePlanesSql(CrossModalItems)
     s"""

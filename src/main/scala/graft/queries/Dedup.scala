@@ -72,7 +72,7 @@ object Dedup {
 
   /** Transitive closure of the near-dup pair graph in DuckDB: the
     * recursive member walks edges from every document; min reachable id
-    * per node == the min-label-propagation fixpoint the Spark operator
+    * per node == the min-label fixpoint the Spark operator
     * computes. */
   private val oracleClustersCte = """
     WITH RECURSIVE toks AS (
@@ -302,7 +302,7 @@ object Dedup {
       (s, d) => {
         val docs = Tables.corpus(s, d)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        TextOps.duplicateClusters(docs, "doc_id", pairs)
+        ScaleOps.connectedComponents(docs, "doc_id", pairs)
           .orderBy("doc_id")
       },
       Some(oracleClusters),
@@ -312,7 +312,7 @@ object Dedup {
     // the SQL-surface capability gate: a recursively generated day spine
     // (the canonical UNION ALL recursion — Spark 4.1 does not yet accept
     // UNION-distinct steps, so cyclic-graph closures stay with d06's
-    // label propagation) driving a gap-filled daily series, replayed by
+    // connected components) driving a gap-filled daily series, replayed by
     // DuckDB's recursive CTE. Recursion depth = the DATE RANGE (30
     // levels here), independent of the event count; the per-day
     // aggregate underneath partially aggregates as usual.
@@ -376,7 +376,7 @@ object Dedup {
       (s, d) => {
         val docs = Tables.corpus(s, d)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        val clusters = TextOps.duplicateClusters(docs, "doc_id", pairs)
+        val clusters = ScaleOps.connectedComponents(docs, "doc_id", pairs)
         val toks = docs.select(col("doc_id"),
           size(TextOps.tokens(col("text"))).cast("long").as("v"))
         val per = clusters.join(toks, "doc_id")
@@ -465,17 +465,16 @@ object Dedup {
       bench = true),
 
     // ---- d17: connected components via large-star/small-star rounds -------
-    // d06's answer through the O(log n)-round star algorithm (Kiveris
-    // et al. 2014) instead of O(diameter) label propagation — the
-    // chain-robust CC for 100 TB graphs. Same oracle as d06: the
+    // d06's answer with the driver union-find disabled (smallEdgeLimit 0),
+    // so the gate covers the O(log² n)-round star path (Kiveris et al.
+    // 2014) that 100 TB graphs take. Same oracle as d06: the
     // recursive-CTE transitive closure.
     QueryDef(
       "d17_cc_star",
       (s, d) => {
         val docs = Tables.corpus(s, d)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        graft.functions.ScaleOps
-          .connectedComponentsStar(docs, "doc_id", pairs, "id_a", "id_b")
+        ScaleOps.connectedComponents(docs, "doc_id", pairs, smallEdgeLimit = 0L)
           .orderBy("doc_id")
       },
       Some(oracleClusters)),
@@ -743,7 +742,7 @@ object Dedup {
       (s, d) => {
         val docs = Tables.corpus(s, d)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        val clusters = TextOps.duplicateClusters(docs, "doc_id", pairs)
+        val clusters = ScaleOps.connectedComponents(docs, "doc_id", pairs)
         val toks = docs.select(col("doc_id"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_toks"))
         clusters.join(toks, Seq("doc_id"))

@@ -65,7 +65,8 @@ class SalesforceSource extends TableProvider with DataSourceRegister {
       schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new OrgTable(opts.get("org"), opts.get("sObject"), schema)
+    new OrgTable(opts.get("org"), opts.get("sObject"), schema,
+      partialWrites = Set("update", "upsert")(opts.getOrDefault("writeMode", "insert")))
   }
 }
 
@@ -82,13 +83,21 @@ object SalesforceSource {
     })
 }
 
-final class OrgTable(orgName: String, sObject: String, schema: StructType)
+/** An org object as a DSv2 table. An update or upsert (`partialWrites`)
+  * accepts any schema: Spark's by-name append would fill every column the
+  * frame lacks with NULL, and the org applies a NULL field, so such a
+  * write sends the org only the frame's own columns. Spark then resolves
+  * nothing, so [[OrgTable.partialSchema]] checks those columns by name and
+  * type in its place. */
+final class OrgTable(orgName: String, sObject: String, schema: StructType,
+    partialWrites: Boolean = false)
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"$orgName.$sObject"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE).asJava
+    (Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE) ++
+      (if (partialWrites) Set(TableCapability.ACCEPT_ANY_SCHEMA) else Set.empty)).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new OrgScanBuilder(orgName, sObject, schema,
@@ -96,10 +105,26 @@ final class OrgTable(orgName: String, sObject: String, schema: StructType)
       Option(options.get("maxRecordsPerBatch")).map(_.toLong))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new OrgWriteBuilder(orgName, sObject, info.schema(),
+    new OrgWriteBuilder(orgName, sObject,
+      if (partialWrites) OrgTable.partialSchema(schema, info.schema()) else info.schema(),
       info.options.getOrDefault("writeMode", "insert"),
       Option(info.options.get("externalIdField")),
       Option(info.options.get("writeId")))
+}
+
+object OrgTable {
+  /** The table's fields for a partial write's `frame` columns, in frame
+    * order: each column must name a table field (case-insensitively) of
+    * the same type, since no Spark cast runs on this path. */
+  def partialSchema(table: StructType, frame: StructType): StructType =
+    StructType(frame.fields.map { f =>
+      val t = table.fields.find(_.name.equalsIgnoreCase(f.name)).getOrElse(
+        throw new IllegalArgumentException(s"column ${f.name} is not a field of " +
+          table.fieldNames.mkString("(", ", ", ")")))
+      require(t.dataType == f.dataType, s"column ${f.name} is " +
+        s"${f.dataType.simpleString}, its field is ${t.dataType.simpleString}; cast it")
+      t
+    })
 }
 
 /** Negotiates the pushdown contract with Catalyst. Filters it can render

@@ -1502,7 +1502,7 @@ object Streams {
     val txtEdges = graft.functions.TextOps
       .ngramJaccardPairs(caps, "item_id", "caption", 3, 0.5)
       .select(col("id_a"), col("id_b"))
-    graft.functions.TextOps.duplicateClusters(
+    graft.functions.ScaleOps.connectedComponents(
         caps.select("item_id"), "item_id",
         imgEdges.unionByName(txtEdges).distinct())
       .orderBy("item_id")

@@ -68,7 +68,7 @@ object ScaleCheck {
         TextOps.repeatedPassageStats(docs, "doc_id", "text").count()),
       "d06_dup_clusters" -> { docs =>
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        TextOps.duplicateClusters(docs, "doc_id", pairs).count()
+        graft.functions.ScaleOps.connectedComponents(docs, "doc_id", pairs).count()
       },
       // iterative graph analytics: pair generation + 10 integer PageRank
       // rounds — the iteration cost must track the (tiny) dup graph and
@@ -215,7 +215,7 @@ object ScaleCheck {
         val sims = TextOps.simHash(corpus(copies), "doc_id", "text").cache()
         val masses = radii.map(r => TextOps.simHashCandidateMass(sims, r))
         val verdicts = radii.zip(masses).map { case (r, m) =>
-          if (m > TextOps.DefaultSimhashBudget) s"radius $r REFUSED"
+          if (m > TextOps.SimhashGuard.defaultBudget) s"radius $r REFUSED"
           else s"radius $r ok"
         }
         println(s"| ${copies}x | ${masses.mkString(" | ")} | ${verdicts.mkString(", ")} |")
@@ -235,7 +235,7 @@ object ScaleCheck {
         spark.catalog.clearCache()
         val m = TextOps.minHashMassProbe(corpus(copies), "doc_id", "text",
           n = 3, numHashes = 128, bands = 32)
-        val v = if (m > TextOps.DefaultMinhashBudget) "REFUSED" else "ok"
+        val v = if (m > TextOps.MinhashGuard.defaultBudget) "REFUSED" else "ok"
         println(s"| ${copies}x | $m | $v |")
       }
     }
@@ -252,7 +252,7 @@ object ScaleCheck {
         spark.catalog.clearCache()
         val (bound, exact) = TextOps.ppjoinMassProbe(
           corpus(copies), "doc_id", "text", n = 3, threshold = 0.5)
-        val v = if (exact > TextOps.DefaultPpjoinBudget) "REFUSED" else "ok"
+        val v = if (exact > TextOps.PpjoinGuard.defaultBudget) "REFUSED" else "ok"
         println(s"| ${copies}x | $bound | $exact | $v |")
       }
     }
@@ -291,7 +291,7 @@ object ScaleCheck {
         spark.catalog.clearCache()
         val m = VectorOps.ivfMassProbe(embCorpus(copies), "vec_id",
           "embedding", nlist = 16, nassign = 2)
-        val v = if (m > VectorOps.DefaultIvfBudget) "REFUSED" else "ok"
+        val v = if (m > VectorOps.IvfGuard.defaultBudget) "REFUSED" else "ok"
         println(s"| ${copies}x | $m | $v |")
       }
     }
@@ -307,7 +307,7 @@ object ScaleCheck {
         spark.catalog.clearCache()
         val m = VectorOps.lshMassProbe(embCorpus(copies), "vec_id",
           "embedding", bits = 8, bands = 32)
-        val v = if (m > VectorOps.DefaultLshBudget) "REFUSED" else "ok"
+        val v = if (m > VectorOps.LshGuard.defaultBudget) "REFUSED" else "ok"
         println(s"| ${copies}x | $m | $v |")
       }
     }

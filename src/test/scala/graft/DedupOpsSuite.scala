@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextOps, VectorOps}
+import graft.functions.{ScaleOps, TextOps, VectorOps}
 
 /** Quality properties of the sketch-based dedup/similarity operators,
   * measured against their exact counterparts on the sf0.001 corpus (the
@@ -990,7 +990,7 @@ class DedupOpsSuite extends SparkSuite {
 
   test("duplicate clusters equal union-find over the exact pair graph") {
     val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-    val clusters = TextOps.duplicateClusters(docs, "doc_id", pairs)
+    val clusters = ScaleOps.connectedComponents(docs, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     // reference union-find over the same exact pairs
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -1010,18 +1010,34 @@ class DedupOpsSuite extends SparkSuite {
     }
     // sanity: the planted dups produce at least one non-trivial cluster
     assert(clusters.exists { case (id, c) => id != c })
-    // the small-graph union-find fast path and the distributed
-    // label-propagation loop must compute the identical fixpoint
-    val distributed = TextOps.duplicateClusters(docs, "doc_id", pairs,
+    // the small-graph union-find fast path and the O(log² n)-round star
+    // algorithm (forced via smallEdgeLimit = 0) compute the same fixpoint
+    val star = ScaleOps.connectedComponents(docs, "doc_id", pairs,
         smallEdgeLimit = 0L)
       .as[(Long, Long)].collect().toMap
-    assert(distributed == clusters,
-      "fast path and distributed loop diverged")
-    // the O(log n)-round star algorithm computes the same fixpoint
-    val star = graft.functions.ScaleOps
-      .connectedComponentsStar(docs, "doc_id", pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
-    assert(star == clusters, "star CC diverged from label propagation")
+    assert(star == clusters, "star CC diverged from union-find")
+  }
+
+  test("connected components on string ids take the star path below " +
+      "the edge limit and label with the component minimum") {
+    // the union-find fast path is long-only; a string-id pair graph far
+    // below smallEdgeLimit must still come back with string ids (no
+    // cast) labelled with the lexicographic component minimum
+    val verts = Seq("d", "c", "b", "a", "e", "z").toDF("doc_id")
+    val pairs = Seq(("d", "c"), ("c", "b"), ("e", "z")).toDF("id_a", "id_b")
+    val cc = ScaleOps.connectedComponents(verts, "doc_id", pairs)
+    import org.apache.spark.sql.types.StringType
+    assert(cc.schema("doc_id").dataType == StringType &&
+      cc.schema("cluster_id").dataType == StringType, cc.schema.treeString)
+    val got = cc.as[(String, String)].collect().toMap
+    assert(got == Map("a" -> "a", "b" -> "b", "c" -> "b", "d" -> "b",
+      "e" -> "e", "z" -> "e"), got.toString)
+    // the star path cuts lineage with localCheckpoint (LogicalRDD); the
+    // union-find path would ship a LocalRelation instead
+    val plan = cc.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.nonEmpty, plan.treeString)
   }
 
   test("star CC resolves a 4000-node chain (diameter >> round budget)") {
@@ -1032,8 +1048,8 @@ class DedupOpsSuite extends SparkSuite {
     val verts = spark.range(n).select(col("id").as("doc_id"))
     val chain = spark.range(n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val cc = graft.functions.ScaleOps
-      .connectedComponentsStar(verts, "doc_id", chain, "id_a", "id_b")
+    val cc = ScaleOps.connectedComponents(verts, "doc_id", chain,
+      smallEdgeLimit = 0L)
     val clusters = cc.select("cluster_id").distinct().as[Long].collect()
     assert(clusters.toSeq == Seq(0L),
       s"chain must collapse to one component rooted at 0, got $clusters")
@@ -1073,14 +1089,14 @@ class DedupOpsSuite extends SparkSuite {
   }
 
   test("distributed loop still matches the fast path at sf0.01 (gate scale)") {
-    // the correctness gate now exercises only the fast path (its edge
-    // sets are driver-small); this keeps the distributed loop honest at
-    // a scale ten times the unit corpus
+    // d06's gate exercises only the fast path (its edge sets are
+    // driver-small); this keeps the distributed star rounds honest at a
+    // scale ten times the unit corpus
     val d01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val pairs = TextOps.ngramJaccardPairs(d01, "doc_id", "text", 3, 0.5).cache()
-    val fast = TextOps.duplicateClusters(d01, "doc_id", pairs)
+    val fast = ScaleOps.connectedComponents(d01, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
-    val dist = TextOps.duplicateClusters(d01, "doc_id", pairs,
+    val dist = ScaleOps.connectedComponents(d01, "doc_id", pairs,
         smallEdgeLimit = 0L)
       .as[(Long, Long)].collect().toMap
     pairs.unpersist()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.{ConnectorTableIO, MigrationEngine}
@@ -72,6 +72,12 @@ class OrgMigrationSuite extends SparkSuite {
     assert(srcRows("A1") == null, "unmigrated row must stay untouched")
     assert(srcRows("A2") == byOldId("A2").getString(0))
     assert(srcRows("A3") == byOldId("A3").getString(0))
+    // the write-back touches only its own column: every other source
+    // field of a migrated row keeps its value
+    val srcFields = srcOrg.rows("Account")
+      .map(r => r.getString(0) -> (r.getString(1), r.getDouble(2))).toMap
+    assert(srcFields("A2") == ("big", 500.0), srcFields)
+    assert(srcFields("A3") == ("huge", 900.0), srcFields)
 
     // the extraction pushed its WHERE into generated SOQL
     assert(srcOrg.statements.exists(_.contains("Amount >= 100")),
@@ -104,6 +110,33 @@ class OrgMigrationSuite extends SparkSuite {
     assert(out.processed == 1 && out.failed == 1, out)
     val byId = org.rows("Account").map(r => r.getString(0) -> r.getString(1)).toMap
     assert(byId("A1") == "renamed" && byId("A2") == "two")
+    // a column the update frame does not carry stays as it was
+    val a1 = org.rows("Account").find(_.getString(0) == "A1").get
+    assert(!a1.isNullAt(2) && a1.getDouble(2) == 1.0, a1)
+  }
+
+  test("a direct partial update keeps the columns its frame lacks and checks types") {
+    val org = new InMemoryOrg
+    org.createTable("Account", srcSchema, Seq(Row("A1", "one", 1.0, "K1")))
+    RemoteOrgRegistry.register("updd", org)
+    import spark.implicits._
+    def update(df: DataFrame): Unit =
+      df.write.format("salesforce-sim")
+        .option("org", "updd").option("sObject", "Account")
+        .option("writeMode", "update").mode(SaveMode.Append).save()
+    // a frame in neither table order nor table case
+    update(Seq(("renamed", "A1")).toDF("name", "Id"))
+    assert(org.rows("Account") == Seq(Row("A1", "renamed", 1.0, "K1")),
+      org.rows("Account"))
+    val wrongType = intercept[Exception](update(Seq(("A1", 2L)).toDF("Id", "Amount")))
+    assert(Iterator.iterate[Throwable](wrongType)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("column Amount is bigint"))),
+      wrongType)
+    val unknown = intercept[Exception](update(Seq(("A1", "x")).toDF("Id", "Nope")))
+    assert(Iterator.iterate[Throwable](unknown)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("column Nope is not a field"))),
+      unknown)
+    assert(org.rows("Account") == Seq(Row("A1", "renamed", 1.0, "K1")))
   }
 
   test("connector upsert inserts new keys and updates existing ones") {
@@ -124,6 +157,12 @@ class OrgMigrationSuite extends SparkSuite {
     assert(byKey("K1") == ("one-v2", 10.0)) // updated in place
     assert(byKey("K2") == ("two", 2.0))     // untouched
     assert(byKey("K3") == ("three", 3.0))   // inserted
+    // an upsert frame without Amount updates Name and keeps Amount
+    new ConnectorTableIO(spark, "upsm").upsert("Account",
+      Seq(("K2", "two-v2")).toDF("New_Id__c", "Name"), "New_Id__c")
+    val k2 = org.rows("Account").find(_.getString(3) == "K2").get
+    assert(k2.getString(1) == "two-v2" && !k2.isNullAt(2) &&
+      k2.getDouble(2) == 2.0, k2)
   }
 
   test("upsert is idempotent — the safe sink under Spark task retries") {

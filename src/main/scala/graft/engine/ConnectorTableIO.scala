@@ -12,9 +12,13 @@ import graft.sources.{OrgWriteMetrics, RemoteOrgRegistry, WriteOutcome}
   * Created-ID correlation mirrors the reference: after the bulk insert
   * the destination is re-queried for the just-created rows
   * (migration_engine.py:52 — the insert API's per-batch results are a
-  * connector TODO there too, data_connector.py:277-278). The re-query
-  * filters on the `src_id` column via the connector, so it pushes down
-  * as a SOQL IN-list exactly like mapping_parser.py:85-111 intended. */
+  * connector TODO there too, data_connector.py:277-278). The re-query is
+  * NOT an IN-list: only the semi-join's null check on the `src_id`
+  * column reaches the org (for `src_id` column `Old_Id__c`: `SELECT Id,
+  * Old_Id__c FROM Contact__c WHERE (Old_Id__c != null)`), and Spark
+  * semi-joins the result against the inserted rows' keys.
+  * [[MigrationEngine]] snapshots the returned rows, so the destination
+  * is read back once per insert. */
 final class ConnectorTableIO(
     spark: SparkSession,
     orgName: String,
@@ -46,8 +50,8 @@ final class ConnectorTableIO(
       .mode(SaveMode.Append).save()
     srcIdColumn match {
       case Some(k) =>
-        // created-records lookup keyed by the old-ID column (pushes down
-        // as an IN-list when the engine filters further)
+        // created-records lookup keyed by the old-ID column: the org
+        // filters `k != null`, the semi-join against `keys` runs in Spark
         val keys = clean.select(col(k)).distinct()
         reader(table).join(keys, Seq(k), "left_semi")
       case None => reader(table)

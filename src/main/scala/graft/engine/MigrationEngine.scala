@@ -125,22 +125,35 @@ final class MigrationEngine(
         org.apache.spark.sql.functions.lit(1)).as("n"))
 
     // 2. transform: rename + type + constants (migration_engine.py:25-41),
-    // then the caller's pre-insert hook (FK remapping in MigrationPlan)
+    // then the caller's pre-insert hook (FK remapping in MigrationPlan).
+    // Snapshotted once, hook included: every later action (the insert,
+    // the created-ID key set a TableIO derives from the inserted rows)
+    // reads these rows instead of re-running the source query and the
+    // FK id-map reads under them. localCheckpoint, not persist: a
+    // persisted plan containing a join leaves a cloned session behind
+    // per call even after unpersist. The checkpoint job is the pass
+    // that fires `obs`.
     val newRows = preInsert(MappingCompiler.destinationRows(extracted, spec))
+      .localCheckpoint()
 
-    // 3. load + correlate created IDs (migration_engine.py:43)
+    // 3. load + correlate created IDs (migration_engine.py:43). The
+    // created rows are snapshotted too: the destination is read back
+    // once, and the count and the write-back below share that read. Only
+    // the pair the write-back needs (new Id, old-ID column) is kept, so
+    // the read-back fetches two fields, not whole records.
     val withId = (mintId, spec.dstSrcIdColumn) match {
       case (Some(f), Some(srcIdCol)) => newRows.withColumn("Id", f(srcIdCol))
       case _ => newRows
     }
     val created = dst.insert(spec.destinationObject, withId)
+      .select((col("Id") +: spec.dstSrcIdColumn.toSeq.map(col)): _*)
+      .localCheckpoint()
     val nInserted = created.count()
     val nExtracted = obs.get("n").asInstanceOf[Long]
 
-    // 4. write-back join (migration_engine.py:50-68): new dst Id -> old src
-    // row. Everything derived from the source table must be materialized
-    // BEFORE src.overwrite — these plans are lazy and would otherwise
-    // recompute over the mutated table.
+    // 4. write-back join (migration_engine.py:50-68): new dst Id -> old
+    // src row, paired from the created-row snapshot — exactly the rows
+    // inserted above, with no further read of either org.
     val nUpdated = spec.srcOldIdColumn match {
       case Some(_) =>
         // targeted update of exactly the write-back rows (reference

@@ -239,16 +239,20 @@ object VectorOps {
         (array_position(col("__dots"), array_max(col("__dots"))) - 1).cast("int"))
       .drop("__dots")
 
+  /** Centroid indices best first: `dots` holds one dot product per
+    * centroid (`n` of them); (−dot, idx) structs sort ascending, so ties
+    * go to the lower index. Callers slice the top k. */
+  private def centroidOrder(dots: Column, n: Int): Column =
+    transform(
+      array_sort(zip_with(dots, sequence(lit(0), lit(n - 1)),
+        (d, i) => struct((-d).as("nd"), i.as("idx")))),
+      s => s.getField("idx"))
+
   /** Per-query best-first centroid order under the pinned codebook. */
   private def pinnedProbeOrder(q: DataFrame,
       cents: Seq[Seq[Double]]): DataFrame =
     q.withColumn("__probes",
-      transform(
-        array_sort(zip_with(
-          centDots(q.sparkSession, cents, col("__qc")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")))
+      centroidOrder(centDots(q.sparkSession, cents, col("__qc")), cents.length))
 
   private def pinnedIvfModel(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String,
@@ -1767,13 +1771,7 @@ object VectorOps {
           (array_position(scores, array_max(scores)) - 1).cast("int").as(s"__c$j")
         }): _*)
       .cache() // read by the code scan AND the shortlist refine join
-    val probeList = slice(
-      transform(
-        array_sort(zip_with(
-          coarseDots(col("__qc")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (dd, i) => struct((-dd).as("nd"), i.as("idx")))),
-        st => st.getField("idx")),
+    val probeList = slice(centroidOrder(coarseDots(col("__qc")), cents.length),
       1, math.min(nprobe, cents.length))
     val qStaged = q.select(
       (col("query_id") +: col("__qc") +: col("__qn") +:
@@ -1998,14 +1996,7 @@ object VectorOps {
     val k = math.min(nassign, cents.length)
     def dots(v: Column): Column =
       array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
-    (k, slice(
-      transform(
-        array_sort(zip_with(
-          dots(col("__c")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1, k))
+    (k, slice(centroidOrder(dots(col("__c")), cents.length), 1, k))
   }
 
   /** Sweep face of the fixed-nlist IVF guard (r18 verdict item 4: the
@@ -2182,14 +2173,7 @@ object VectorOps {
     val cents = pinnedCodebook(c, "__id", "__c", nlist)
     def dots(v: Column): Column =
       array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
-    val best = element_at(
-      transform(
-        array_sort(zip_with(
-          dots(col("__c")),
-          sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1)
+    val best = element_at(centroidOrder(dots(col("__c")), cents.length), 1)
     val assigned = c.select(col("__id"), best.cast("long").as("__cluster"))
     val counts = assigned.groupBy("__cluster")
       .agg(count(lit(1)).as("__cnt"))
@@ -2482,14 +2466,7 @@ object VectorOps {
 
     // query probes: indices of the nprobe highest-dot centroids —
     // sort (−dot, idx) structs ascending, slice, explode
-    val probeList = slice(
-      transform(
-        array_sort(zip_with(
-          dots(col("__qv")),
-          sequence(lit(0), lit(nlist - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1, nprobe)
+    val probeList = slice(centroidOrder(dots(col("__qv")), nlist), 1, nprobe)
     val probes = q.select(col("query_id"), col("__qv"),
         explode(probeList).as("__bucket"))
 
@@ -2588,16 +2565,10 @@ object VectorOps {
         .map(_.getSeq[Double](0).toArray)), nlist, iters)
     val centCols = centroids.map(ct => array(ct.map(lit): _*))
     val k = math.min(nassign, centroids.length)
-    // top-nassign centroid indices, same argsort idiom as ivfTopK
-    // (codegen literal arrays — see the ivfTopK note)
-    val assignList = slice(
-      transform(
-        array_sort(zip_with(
-          array(centCols.map(ct => nativeDot(spark, col("__v"), ct)): _*),
-          sequence(lit(0), lit(centroids.length - 1)),
-          (d, i) => struct((-d).as("nd"), i.as("idx")))),
-        s => s.getField("idx")),
-      1, k)
+    // top-nassign centroid indices (codegen literal arrays — see the
+    // ivfTopK note)
+    val assignList = slice(centroidOrder(
+      array(centCols.map(ct => nativeDot(spark, col("__v"), ct)): _*), centroids.length), 1, k)
     val assigned = c.select(col("__id"), col("__v"),
       explode(assignList).as("__bucket"))
     // n passed BY NAME: guard=off pays zero jobs (code-review finding —
@@ -2782,13 +2753,7 @@ object VectorOps {
       .cache() // read by the code scan AND the shortlist refine join
 
     // queries: nprobe bucket probes + the ADC lookup tables
-    val probeList = slice(
-      transform(
-        array_sort(zip_with(
-          coarseDots(col("__qv")),
-          sequence(lit(0), lit(coarse.length - 1)),
-          (dd, i) => struct((-dd).as("nd"), i.as("idx")))),
-        st => st.getField("idx")),
+    val probeList = slice(centroidOrder(coarseDots(col("__qv")), coarse.length),
       1, math.min(nprobe, coarse.length))
     val qStaged = q.select(
       (col("query_id") +: col("__qv") +: probeList.as("__probes") +:

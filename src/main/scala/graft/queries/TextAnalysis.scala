@@ -376,6 +376,13 @@ object TextAnalysis {
     // 0.63-0.72 s), output bit-identical (exceptAll both ways = 0; the
     // oracle replays the grouping form). At 100 TB the removed exchanges
     // are the whole token stream.
+    // Invariant: `doc_id` is unique in `documents`. The oracle groups by
+    // doc_id; the fold emits one row per input row, so the two agree only
+    // while no doc_id repeats (two rows sharing one would come out as two
+    // rows here, one merged row in the oracle).
+    // Skew bound: no key gathers more than one row, so the largest unit
+    // of work is a single document's token array (one sort + one fold in
+    // one task) — a huge document costs one task, never a hot partition.
     QueryDef(
       "t09_repetition",
       (s, d) => {
@@ -405,8 +412,10 @@ object TextAnalysis {
             (fld(a, "dup") +
               when(fld(a, "run") >= 2L, fld(a, "run")).otherwise(0L)).as("dup_c")))
         Tables.corpus(s, d)
-          // explode() dropped null-text docs; the projection form must too
-          .where(toks.isNotNull)
+          // explode() dropped null-text docs; the projection form must
+          // too. split(trim(text)) is null only for null text, so test the
+          // text itself rather than run the regex split a second time
+          .where(col("text").isNotNull)
           .select(col("doc_id"),
             size(toks).cast("long").as("n_tokens"), folded.as("__f"))
           .select(col("doc_id"), col("n_tokens"),

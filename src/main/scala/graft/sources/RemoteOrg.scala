@@ -100,8 +100,10 @@ object OrgWriteMetrics {
     last.getOrDefault((org, sObject), WriteOutcome(0L, 0L))
   /** Outcome of one specific write, keyed by the unique id the caller
     * passed as the `writeId` write option — immune to concurrent writes
-    * to the same (org, table) overwriting each other's slot. */
-  def forWrite(writeId: String): Option[WriteOutcome] = Option(byId.get(writeId))
+    * to the same (org, table) overwriting each other's slot. Reading an
+    * outcome removes it, so a second call for the same id returns None
+    * and one entry per write does not pile up. */
+  def forWrite(writeId: String): Option[WriteOutcome] = Option(byId.remove(writeId))
 }
 
 /** Process-local registry so the reflectively-instantiated DSv2 provider

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.{ConnectorTableIO, MigrationEngine}
+import graft.engine.{ConnectorTableIO, FkReference, MigrationEngine, MigrationPlan}
 import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
 import graft.spec.MappingSpec
 
@@ -95,6 +98,77 @@ class OrgMigrationSuite extends SparkSuite {
     assert(ins.processed == 2 && ins.failed == 0, ins)
     val upd = graft.sources.OrgWriteMetrics.lastCommit("mig_src", "Account")
     assert(upd.processed == 2 && upd.failed == 0, upd)
+
+    // each remote object is read once per migrate: the extract feeds the
+    // insert, the created-ID key set and the write-back from one
+    // snapshot, and the destination is read back once
+    assert(selects(srcOrg, "Account").size == 1, srcOrg.statements.mkString("\n"))
+    assert(selects(dstOrg, "Accounts__c").size == 1, dstOrg.statements.mkString("\n"))
+  }
+
+  /** The SOQL reads `org` logged against `sObject` (writes are logged
+    * as UPDATE/UPSERT/DELETE and never match). */
+  private def selects(org: InMemoryOrg, sObject: String): Seq[String] =
+    org.statements.toSeq.filter(_.matches(s"SELECT .* FROM $sObject( .*)?"))
+
+  test("a two-spec FK plan reads each object, and the parent's id map, once") {
+    val accSchema = StructType(Seq(
+      StructField("Id", StringType), StructField("Name", StringType),
+      StructField("New_Id__c", StringType)))
+    val conSchema = StructType(Seq(
+      StructField("Id", StringType), StructField("LastName", StringType),
+      StructField("AccountId", StringType), StructField("New_Id__c", StringType)))
+    def dstSchema(cols: String*) = StructType(
+      (Seq("Id", "Old_Id__c") ++ cols).map(StructField(_, StringType)))
+    val srcOrg = new InMemoryOrg
+    val dstOrg = new InMemoryOrg
+    srcOrg.createTable("Account", accSchema, Seq(
+      Row("A1", "acme", null), Row("A2", "zorg", null)))
+    srcOrg.createTable("Contact", conSchema, Seq(
+      Row("C1", "ann", "A1", null), Row("C2", "bob", "A2", null),
+      Row("C3", "cyn", "A9", null)))
+    dstOrg.createTable("Account__c", dstSchema("Name"))
+    dstOrg.createTable("Contact__c", dstSchema("LastName", "AccountId__c"))
+    RemoteOrgRegistry.register("fk_src", srcOrg)
+    RemoteOrgRegistry.register("fk_dst", dstOrg)
+
+    def elem(src: String, dst: String, from: String, to: String,
+        op: String = "copy", kind: String = "regular") =
+      s"""{"table_src": "$src", "column_src": "$from", "table_dst": "$dst",
+         "column_dst": "$to", "operation": "$op", "column_type": "$kind"}"""
+    def specFor(src: String, dst: String, cols: (String, String)*) =
+      s"""{"source_object": "$src", "destination_object": "$dst", "mapping": [
+         ${(elem(src, dst, "Id", "Old_Id__c", kind = "src_id") +:
+           cols.map { case (f, t) => elem(src, dst, f, t) } :+
+           elem(src, dst, "New_Id__c", "Id", op = "upd_src", kind = "dst_id"))
+           .mkString(",")}]}"""
+    val specs = MappingSpec.fromJson("[" + specFor("Account", "Account__c", "Name" -> "Name") +
+      "," + specFor("Contact", "Contact__c",
+        "LastName" -> "LastName", "AccountId" -> "AccountId__c") + "]")
+
+    val src = new ConnectorTableIO(spark, "fk_src")
+    val dst = new ConnectorTableIO(spark, "fk_dst", srcIdColumn = Some("Old_Id__c"))
+    val results = new MigrationPlan(src, dst, new MigrationEngine(src, dst),
+      Seq(FkReference("Contact__c", "AccountId__c", "Account"))).migrateAll(specs)
+    assert(results.map { case (d, m) => d -> (m.extracted, m.inserted, m.updated) } ==
+      Seq("Account__c" -> ((2L, 2L, 2L)), "Contact__c" -> ((3L, 3L, 3L))))
+
+    // FKs point at the new parent Ids; the dangling one is null
+    val newAcc = dstOrg.rows("Account__c").map(r => r.getString(1) -> r.getString(0)).toMap
+    val fk = dstOrg.rows("Contact__c").map(r => r.getString(1) -> r.getString(3)).toMap
+    assert(fk == Map("C1" -> newAcc("A1"), "C2" -> newAcc("A2"), "C3" -> null), fk)
+    // every source row carries its new destination Id
+    val newCon = dstOrg.rows("Contact__c").map(r => r.getString(1) -> r.getString(0)).toMap
+    assert(srcOrg.rows("Contact").map(r => r.getString(0) -> r.getString(3)).toMap == newCon)
+
+    // one extract per source object; Account__c twice in all — the
+    // parent's created-row read-back and the child's id map — and
+    // Contact__c once
+    val reads = srcOrg.statements.mkString("\n") + "\n" + dstOrg.statements.mkString("\n")
+    assert(selects(srcOrg, "Account").size == 1, reads)
+    assert(selects(srcOrg, "Contact").size == 1, reads)
+    assert(selects(dstOrg, "Account__c").size == 2, reads)
+    assert(selects(dstOrg, "Contact__c").size == 1, reads)
   }
 
   test("connector update counts missing Ids as failed, not as errors") {
@@ -113,6 +187,47 @@ class OrgMigrationSuite extends SparkSuite {
     // a column the update frame does not carry stays as it was
     val a1 = org.rows("Account").find(_.getString(0) == "A1").get
     assert(!a1.isNullAt(2) && a1.getDouble(2) == 1.0, a1)
+  }
+
+  test("a connector update's outcome is read once and then released") {
+    val org = new InMemoryOrg
+    org.createTable("Account", srcSchema, Seq(Row("A1", "one", 1.0, null)))
+    RemoteOrgRegistry.register("updonce", org)
+    import spark.implicits._
+    // the writeId ConnectorTableIO generates rides in the write's options
+    val writeIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case a: AppendData
+              if a.writeOptions.get("org").contains("updonce") =>
+            a.writeOptions.get("writeId").foreach(writeIds.add)
+          case _ =>
+        }
+      override def onFailure(funcName: String,
+          qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val n = new ConnectorTableIO(spark, "updonce")
+        .update("Account", Seq(("A1", "renamed")).toDF("Id", "Name"))
+      assert(n == 1)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writeIds.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(writeIds.size == 1, writeIds)
+      // update() consumed its outcome; nothing is left behind per write
+      assert(graft.sources.OrgWriteMetrics.forWrite(writeIds.peek()).isEmpty)
+    } finally spark.listenerManager.unregister(listener)
+
+    // a direct write keyed by the caller's own writeId reads back once
+    Seq(("A1", "again")).toDF("Id", "Name").write.format("salesforce-sim")
+      .option("org", "updonce").option("sObject", "Account")
+      .option("writeMode", "update").option("writeId", "updonce-direct")
+      .mode(SaveMode.Append).save()
+    assert(graft.sources.OrgWriteMetrics.forWrite("updonce-direct")
+      .contains(graft.sources.WriteOutcome(1L, 0L)))
+    assert(graft.sources.OrgWriteMetrics.forWrite("updonce-direct").isEmpty)
   }
 
   test("a direct partial update keeps the columns its frame lacks and checks types") {

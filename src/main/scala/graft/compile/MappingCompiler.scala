@@ -1,6 +1,6 @@
 package graft.compile
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.spec.{ColumnType, MappingSpec}
 
@@ -129,16 +129,6 @@ object MappingCompiler {
         df(keyColumn).cast("string") === keyDf(keyColumn), "left_semi")
     }
 
-  /** Created-records lookup (mapping_parser.py:85-111): the non-regular
-    * (ID-carrying) destination columns for rows whose `src_id` column is
-    * among the migrated old IDs. */
-  def createdRecords(dstDf: DataFrame, spec: MappingSpec, migratedIds: Seq[Any]): DataFrame = {
-    val srcIdCol = spec.dstSrcIdColumn.getOrElse(throw new IllegalArgumentException(
-      "mapping has no src_id column — cannot correlate created records"))
-    val cols = ("Id" +: spec.dstIdColumns).distinct
-    filterByKeys(dstDf.select(cols.map(col): _*), srcIdCol, migratedIds)
-  }
-
   /** The write-back pairing (migration_engine.py:53-58): from created
     * destination rows build `{srcOldIdColumn: new dst Id, Id: old src Id}`
     * update rows — the reference's driver-side dict loop expressed as one
@@ -152,22 +142,5 @@ object MappingCompiler {
     createdDst.select(
       col("Id").as(oldIdCol),
       col(srcIdCol).as("Id"))
-  }
-
-  /** Applies write-back updates to the source table: left join on `Id`
-    * (broadcast the small update side), overwriting the upd_src column
-    * where a pair matched — the distributed form of bulk_update
-    * (migration_engine.py:63, data_connector.py:281-291). */
-  def applyWriteBack(srcTable: DataFrame, updates: DataFrame, spec: MappingSpec): DataFrame = {
-    val oldIdCol = spec.srcOldIdColumn.getOrElse(throw new IllegalArgumentException(
-      "mapping has no upd_src column — nothing to write back"))
-    val u = updates.select(col("Id").as("__upd_id"), col(oldIdCol).as("__upd_val"))
-    val joined = srcTable.join(broadcast(u),
-      srcTable("Id") === u("__upd_id"), "left")
-    val replaced: Column = coalesce(col("__upd_val"), srcTable(oldIdCol)).as(oldIdCol)
-    joined.select(srcTable.columns.map {
-      case c if c == oldIdCol => replaced
-      case c => srcTable(c)
-    }: _*)
   }
 }

@@ -95,13 +95,12 @@ final class ConnectorTableIO(
     // rows first (they derive from the table being replaced), truncate
     // org-side (no driver ID collection), then re-insert with Ids intact
     // (the org honors provided Ids). The migration write-back path never
-    // comes here anymore — it issues targeted update() calls.
-    val materialized = rows.cache()
-    materialized.count()
+    // comes here anymore — it issues targeted update() calls. An eager
+    // localCheckpoint, not persist (see ParquetTableIO.overwrite).
+    val materialized = rows.localCheckpoint()
     RemoteOrgRegistry(orgName).deleteWhere(table, Seq("Id != null"))
     materialized.write.format("salesforce-sim")
       .option("org", orgName).option("sObject", table)
       .mode(SaveMode.Append).save()
-    materialized.unpersist()
   }
 }

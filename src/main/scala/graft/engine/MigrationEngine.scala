@@ -82,11 +82,11 @@ final class ParquetTableIO(
   }
 
   override def overwrite(table: String, rows: DataFrame): Unit = {
-    // materialize before truncating the directory we are reading from
-    val cached = rows.cache()
-    cached.count()
-    cached.write.mode("overwrite").parquet(path(table))
-    cached.unpersist()
+    // materialize before truncating the directory we are reading from.
+    // localCheckpoint, not persist: update/upsert/deleteMatching hand in
+    // join plans, and a persisted join plan leaves a cloned session
+    // behind per call even after unpersist (see migrate)
+    rows.localCheckpoint().write.mode("overwrite").parquet(path(table))
   }
 }
 

@@ -35,9 +35,6 @@ final class MigrationPlan(
     engine: MigrationEngine,
     references: Seq[FkReference] = Nil) {
 
-  /** Topological order: spec Y depends on spec X when a reference makes
-    * Y's destination point at X's source records. Kahn's algorithm with
-    * input order as the tiebreak, so unrelated specs keep their order. */
   /** The plan keys specs by sourceObject (FK resolution) and marks
     * progress by destinationObject (topo order) — duplicates in either
     * would silently shadow or skip a spec, so they are structural errors. */
@@ -54,6 +51,9 @@ final class MigrationPlan(
         "FK references resolve a parent by its source object, which must be unique")
   }
 
+  /** Topological order: spec Y depends on spec X when a reference makes
+    * Y's destination point at X's source records. Kahn's algorithm with
+    * input order as the tiebreak, so unrelated specs keep their order. */
   private[engine] def ordered(specs: Seq[MappingSpec]): Seq[MappingSpec] = {
     requireUnique(specs)
     val bySource = specs.map(s => s.sourceObject -> s).toMap

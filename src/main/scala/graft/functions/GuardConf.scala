@@ -99,3 +99,45 @@ private[graft] object GuardConf {
         sum(col("__c").cast("double") * (col("__c") - 1) / 2), lit(0.0)))
       .head().getDouble(0).toLong
 }
+
+/** The candidate generator of the equi-bucket pair operators (MinHash
+  * and SimHash banding, hyperplane LSH, the IVF lists): one guarded
+  * self-join of a keyed table on its bucket columns. Each operator
+  * builds its key table and keeps its own exact verify, dedup and
+  * remedy text — the filter-verify split of REPOSE (ICDE'21). */
+private[graft] object BucketSelfJoin {
+  /** A family's guard: its settings, the mode its caller read once
+    * before caching anything, and its refusal text `(mass, budget)`. */
+  final case class Guard(family: GuardFamily, mode: String,
+      refusal: (Long, Long) => String)
+
+  /** Every pair of distinct ids sharing a bucket of `keyed` (one row per
+    * (`__id`, bucket), the bucket being the `keys` columns). Each
+    * `payload` entry `(column, nameA, nameB)` rides along once per side.
+    * The result holds the keys, `id_a` with the side-a payload and
+    * `id_b` with the side-b payload, restricted to `id_a < id_b`; a pair
+    * sharing several buckets appears once per shared bucket.
+    *
+    * With a `guard`, [[GuardConf.check]] runs first: the worst case —
+    * every id in the same bucket for each of its `m` fan-outs (bands,
+    * blocks or assignments), m·n(n−1)/2 — short-circuits, and only past
+    * it does the exact [[GuardConf.bucketPairMass]] of the key columns
+    * decide. `n` (the id count) is by-name and read at most once, so
+    * mode `off` runs no job; `release` runs if the guard throws. */
+  def apply(keyed: DataFrame, keys: Seq[String],
+      payload: Seq[(String, String, String)], m: Int, n: => Long,
+      guard: Option[Guard], release: => Unit): DataFrame = {
+    guard.foreach { g =>
+      lazy val ids = n
+      GuardConf.check(keyed.sparkSession, g.family, g.mode,
+        m.toDouble * ids * (ids - 1) / 2,
+        GuardConf.bucketPairMass(keyed.select(keys.map(col): _*)),
+        g.refusal, release)
+    }
+    def side(id: String, name: ((String, String, String)) => String) =
+      keyed.select((col("__id").as(id) +:
+        payload.map(p => col(p._1).as(name(p)))) ++ keys.map(col): _*)
+    side("id_a", _._2).join(side("id_b", _._3), keys)
+      .where(col("id_a") < col("id_b"))
+  }
+}

@@ -360,12 +360,6 @@ object TextOps {
     (cands, if (guardOff) None else Some(freq))
   }
 
-  /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against
-    * the cached shingle-set table (string or hashed form); emits pairs
-    * with jac >= threshold. The intersection size is STAGED as its own
-    * column: referencing `array_intersect` twice inside one projection
-    * (as the naive jac formula does) evaluates the O(|A|·|B|) intersect
-    * twice per candidate — measured as the dominant d02 cost. */
   /** Directed shingle CONTAINMENT pairs: `C(A→B) = |Sh(A) ∩ Sh(B)| /
     * |Sh(A)| >= t` — the asymmetric quote/subset signal resemblance
     * (Jaccard, [[ngramJaccardPairs]]) misses: a short doc fully quoted
@@ -454,6 +448,12 @@ object TextOps {
     else out
   }
 
+  /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against
+    * the cached shingle-set table (string or hashed form); emits pairs
+    * with jac >= threshold. The intersection size is STAGED as its own
+    * column: referencing `array_intersect` twice inside one projection
+    * (as the naive jac formula does) evaluates the O(|A|·|B|) intersect
+    * twice per candidate — measured as the dominant d02 cost. */
   def verifyJaccard(sh: DataFrame, candidates: DataFrame,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -522,9 +522,9 @@ object TextOps {
         lshBandKeys(col("__sig"), bands, numHashes / bands).as("__bands"))
 
   /** The (band, key) bucket of every (doc, band) — the key table of the
-    * band-bucket self-join and of its guard's [[GuardConf.bucketPairMass]]. */
+    * band-bucket self-join, whose guard measures the mass of its keys. */
   private def minHashBucketKeys(sig: DataFrame): DataFrame =
-    sig.select(posexplode(col("__bands")).as(Seq("__b", "__key")))
+    sig.select(col("__id"), posexplode(col("__bands")).as(Seq("__b", "__key")))
 
   /** Sweep face of the MinHash band guard: build the signature table
     * for (n, numHashes, bands) and return the exact band-bucket mass —
@@ -533,7 +533,7 @@ object TextOps {
       n: Int, numHashes: Int, bands: Int): Long = {
     val sig = minHashBandTable(hashedShingleSets(df, idCol, textCol, n),
       numHashes, bands).cache() // the pushdown barrier under the explode
-    try GuardConf.bucketPairMass(minHashBucketKeys(sig))
+    try GuardConf.bucketPairMass(minHashBucketKeys(sig).drop("__id"))
     finally sig.unpersist()
   }
 
@@ -609,29 +609,20 @@ object TextOps {
     // materializing the sketch table once is also the 100 TB-scale shape
     val sig = minHashBandTable(sh, numHashes, bands).cache()
     val nDocs = sig.count() // eager: both self-join sides read it (first-reader race)
-    // pre-flight (r18 verdict item 3: guard parity with the SimHash/IVF
-    // walls): short-circuits when even the worst case (every signature
-    // identical: bands·n(n−1)/2) fits the budget — true at gate/bench
-    // scales, so the steady-state cost is the count() the eager cache
-    // pays anyway; a refusal must not strand the signature cache
-    GuardConf.check(spark, MinhashGuard, mode,
-      bands.toDouble * nDocs * (nDocs - 1) / 2,
-      GuardConf.bucketPairMass(minHashBucketKeys(sig)),
-      (mass, budget) =>
-        f"minHashCandidates(bands=$bands): the band-bucket join would " +
-          f"surface ~$mass%,d candidate pairs over $nDocs%,d documents — " +
-          f"past the $budget%,d budget ($MinhashBudgetKey). Band mass " +
-          "tracks true near-dup density, so this corpus is pathologically " +
-          "self-similar (verbatim duplicates concentrating the buckets). " +
-          "Exact-dedup first (dedupExact, d01) to collapse the verbatim " +
-          "mass, or use FEWER bands with more rows per band to sharpen " +
-          "the collision threshold.",
-      sig.unpersist())
-    val ex = sig.select(col("__id"), posexplode(col("__bands")).as(Seq("__b", "__key")))
-    val l = ex.select(col("__id").as("id_a"), col("__b"), col("__key"))
-    val rt = ex.select(col("__id").as("id_b"), col("__b"), col("__key"))
-    l.join(rt, Seq("__b", "__key"))
-      .where(col("id_a") < col("id_b"))
+    // the worst case (every signature identical) fits the budget at
+    // gate/bench scales, so the steady-state guard cost is the count()
+    // the eager cache pays anyway; a refusal releases the signature cache
+    val guard = BucketSelfJoin.Guard(MinhashGuard, mode, (mass, budget) =>
+      f"minHashCandidates(bands=$bands): the band-bucket join would " +
+        f"surface ~$mass%,d candidate pairs over $nDocs%,d documents — " +
+        f"past the $budget%,d budget ($MinhashBudgetKey). Band mass " +
+        "tracks true near-dup density, so this corpus is pathologically " +
+        "self-similar (verbatim duplicates concentrating the buckets). " +
+        "Exact-dedup first (dedupExact, d01) to collapse the verbatim " +
+        "mass, or use FEWER bands with more rows per band to sharpen " +
+        "the collision threshold.")
+    BucketSelfJoin(minHashBucketKeys(sig), Seq("__b", "__key"), Nil, bands,
+      nDocs, Some(guard), sig.unpersist())
       .select(col("id_a"), col("id_b")).distinct()
   }
 
@@ -2597,33 +2588,26 @@ object TextOps {
     lazy val n = cached.count() // by-name bound: off pays zero jobs
     // pre-flight (r17 verdict item 1: the radius-11 wall was measured —
     // sf5.0 spent 43% of the bench in one candidate-density-quadratic
-    // join — but only DOCUMENTED; this makes it mechanical). The worst
-    // case (every hash identical) short-circuits small corpora. A refusal
+    // join — but only DOCUMENTED; this makes it mechanical). A refusal
     // must not strand the just-materialized hash table in executor
     // storage: a driver probing several over-budget corpora would
     // otherwise accumulate one corpus-sized cache entry per refusal
-    GuardConf.check(spark, SimhashGuard, mode,
-      blocks.toDouble * n * (n - 1) / 2,
-      simHashCandidateMass(cached, maxHamming),
-      (mass, budget) =>
-        f"simHashPairs(maxHamming=$maxHamming): the banded join would " +
-          f"surface ~$mass%,d candidate pairs over $n%,d rows ($blocks " +
-          f"blocks of $width bits) — past the $budget%,d budget " +
-          f"($SimhashBudgetKey). Candidate mass grows ~n²·blocks/2^width, " +
-          "so this run is quadratic (the wall measured in SCALING.md: " +
-          "radius 11 at 250k docs = 43% of the whole bench). Scale-safe " +
-          "operating points: maxHamming=3 (4 blocks of 16 bits — the " +
-          "Manku configuration, d26) for tight near-dup, or MinHash LSH " +
-          "(minHashCandidatesFromHashed, d03) for aggressive-radius " +
-          "similarity, whose candidate mass tracks true near-dup density " +
-          "instead of bucket collisions.",
-      cached.unpersist())
-    val ex = cached.select(col(idCol).as("__id"), col("simhash"),
+    val guard = BucketSelfJoin.Guard(SimhashGuard, mode, (mass, budget) =>
+      f"simHashPairs(maxHamming=$maxHamming): the banded join would " +
+        f"surface ~$mass%,d candidate pairs over $n%,d rows ($blocks " +
+        f"blocks of $width bits) — past the $budget%,d budget " +
+        f"($SimhashBudgetKey). Candidate mass grows ~n²·blocks/2^width, " +
+        "so this run is quadratic (the wall measured in SCALING.md: " +
+        "radius 11 at 250k docs = 43% of the whole bench). Scale-safe " +
+        "operating points: maxHamming=3 (4 blocks of 16 bits — the " +
+        "Manku configuration, d26) for tight near-dup, or MinHash LSH " +
+        "(minHashCandidatesFromHashed, d03) for aggressive-radius " +
+        "similarity, whose candidate mass tracks true near-dup density " +
+        "instead of bucket collisions.")
+    val keyed = cached.select(col(idCol).as("__id"), col("simhash"),
       explode(bandKeys(maxHamming)).as("__k"))
-    val l = ex.select(col("__id").as("id_a"), col("simhash").as("sim_a"), col("__k"))
-    val r = ex.select(col("__id").as("id_b"), col("simhash").as("sim_b"), col("__k"))
-    l.join(r, Seq("__k"))
-      .where(col("id_a") < col("id_b"))
+    BucketSelfJoin(keyed, Seq("__k"), Seq(("simhash", "sim_a", "sim_b")),
+      blocks, n, Some(guard), cached.unpersist())
       .select(col("id_a"), col("id_b"),
         bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
       .distinct()

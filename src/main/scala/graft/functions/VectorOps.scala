@@ -1847,22 +1847,27 @@ object VectorOps {
       .select(col("__id"), col("__c"), col("__n"), col("__sigs"))
       .cache() // both self-join sides read it (see lshScoredCandidates)
     val nVecs = sigs.count() // eager: first-reader race
-    lshBandGuard(sigs, bands, nVecs, mode)
     val exploded = sigs.select(col("__id"), col("__c"), col("__n"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
-    val l = exploded.select(col("__id").as("id_a"), col("__c").as("ca"),
-      col("__n").as("na"), col("__band"), col("__sig"))
-    val r = exploded.select(col("__id").as("id_b"), col("__c").as("cb"),
-      col("__n").as("nb"), col("__band"), col("__sig"))
-    l.join(r, Seq("__band", "__sig"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (nativeDot(spark, col("ca"), col("cb")) /
+    sq8CosineAbove(BucketSelfJoin(exploded, Seq("__band", "__sig"),
+      Sq8Payload, bands, nVecs, Some(lshBandGuard(mode, bands, nVecs)),
+      sigs.unpersist()), threshold)
+  }
+
+  /** The two SQ8 columns (codes, code norm) each side of a pinned pair
+    * join carries into [[sq8CosineAbove]]. */
+  private val Sq8Payload = Seq(("__c", "ca", "cb"), ("__n", "na", "nb"))
+
+  /** The quantized-cosine verify of the SQ8-code pair joins: pairs at
+    * cosine >= `threshold`, one row per pair. A pair sharing several
+    * buckets repeats with a bit-identical cosine, so max == the value. */
+  private def sq8CosineAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        (nativeDot(pairs.sparkSession, col("ca"), col("cb")) /
           (col("na") * col("nb"))).as("cos"))
       .where(col("cos") >= threshold)
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("cos")).as("cos"))
-  }
 
   /** Conf key: band-bucket candidate budget for the hyperplane-LSH
     * pair joins ([[lshCosinePairs]], s02/s07's trained family, and the
@@ -1893,32 +1898,19 @@ object VectorOps {
       hyperplaneSignatures(df.sparkSession, col("__v"), bits, bands)
         .as("__sigs"))
 
-  /** The (band, signature) bucket of every (vector, band) — the key
-    * table of the band-bucket self-join and of its guard's mass. */
-  private def lshBucketKeys(sigs: DataFrame): DataFrame =
-    sigs.select(posexplode(col("__sigs")).as(Seq("__band", "__sig")))
-
-  /** Pre-flight density guard on the hyperplane-LSH bucket join —
-    * guard parity across every bucket-join family (the r18 item 3
-    * pattern). Short-circuits when even the worst case (every signature
-    * identical: bands·n(n−1)/2) fits the budget — true at gate/bench
-    * scales, zero extra jobs; above that one linear mass pass decides.
-    * A refusal releases the cached signature table. */
-  private def lshBandGuard(sigs: DataFrame, bands: Int, n: Long,
-      mode: String): Unit =
-    GuardConf.check(sigs.sparkSession, LshGuard, mode,
-      bands.toDouble * n * (n - 1) / 2,
-      GuardConf.bucketPairMass(lshBucketKeys(sigs)),
-      (mass, budget) =>
-        f"hyperplane-LSH pair join (bands=$bands): the band-bucket join " +
-          f"would surface ~$mass%,d candidate pairs over $n%,d vectors — " +
-          f"past the $budget%,d budget ($LshBudgetKey). Bucket mass " +
-          "tracks true angular near-dup density, so this corpus is " +
-          "pathologically self-similar (mass-duplicated vectors or one " +
-          "tight direction concentrating the buckets). Exact-dedup the " +
-          "vectors first, or sharpen the parameters (more bits per band " +
-          "— lshParamsFor derives the collision-bounded choice).",
-      sigs.unpersist())
+  /** The hyperplane-LSH band guard shared by [[lshScoredCandidates]]
+    * and [[lshCosinePairsPinned]]; a refusal names the remedies. */
+  private def lshBandGuard(mode: String, bands: Int,
+      n: Long): BucketSelfJoin.Guard =
+    BucketSelfJoin.Guard(LshGuard, mode, (mass, budget) =>
+      f"hyperplane-LSH pair join (bands=$bands): the band-bucket join " +
+        f"would surface ~$mass%,d candidate pairs over $n%,d vectors — " +
+        f"past the $budget%,d budget ($LshBudgetKey). Bucket mass " +
+        "tracks true angular near-dup density, so this corpus is " +
+        "pathologically self-similar (mass-duplicated vectors or one " +
+        "tight direction concentrating the buckets). Exact-dedup the " +
+        "vectors first, or sharpen the parameters (more bits per band " +
+        "— lshParamsFor derives the collision-bounded choice).")
 
   /** Sweep face of the LSH band guard: build the trained-family
     * signature table at (bits, bands) and return the exact band-bucket
@@ -1927,7 +1919,8 @@ object VectorOps {
       bits: Int, bands: Int): Long = {
     val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands)
       .select(col("__sigs")).cache() // the pushdown barrier under the explode
-    try GuardConf.bucketPairMass(lshBucketKeys(sigs))
+    try GuardConf.bucketPairMass(
+      sigs.select(posexplode(col("__sigs")).as(Seq("__band", "__sig"))))
     finally sigs.unpersist()
   }
 
@@ -1948,42 +1941,27 @@ object VectorOps {
   private[graft] val IvfGuard = GuardFamily(IvfBudgetKey, IvfGuardKey,
     200000000L, ivfGuardTrips)
 
-  /** Pre-flight density guard on the FIXED-nlist IVF pair join — the
-    * r17 weak-list's second half made mechanical (d04's banding guard
-    * is the first): with nlist fixed, within-list pair mass is
-    * n²·nassign²/nlist — quadratic — measured at 52 s for 100k vectors
-    * at sf5.0. Short-circuits when even the attainable worst case fits
-    * the budget (true at gate/bench scales: zero extra jobs beyond the
-    * corpus count the callers already take); otherwise measures the
-    * exact mass of the `buckets` assignment column, naming the
-    * sqrt-scale operating point on refusal, and runs `release`. The
-    * SCALED variant ([[ivfCosinePairsPinnedScaled]]) is deliberately
-    * unguarded: its mass is ~n^1.5 BY DESIGN — the operating curve a
-    * large corpus chooses knowingly. */
-  private def ivfPairGuard(spark: SparkSession, mode: String,
-      n: => Long, k: Int, buckets: => DataFrame, nlist: Int,
-      nassign: Int, release: => Unit): Unit = {
-    lazy val nv = n // by-name: off mode pays zero jobs
-    GuardConf.check(spark, IvfGuard, mode,
-      // attainable worst case: a vector's k assignments land in DISTINCT
-      // buckets, so no bucket exceeds n rows — at most k full buckets of
-      // n, i.e. k·n(n−1)/2 (tighter by ~k than treating all n·k rows as
-      // one list; code-review finding). Known from the corpus count
-      // alone, so the short-circuit never computes an assignment.
-      k.toDouble * nv * (nv - 1) / 2,
-      GuardConf.bucketPairMass(buckets),
-      (mass, budget) =>
-        f"fixed-nlist IVF pair join: the within-list self-join would " +
-          f"surface ~$mass%,d pairs over ${nv * k}%,d assignment rows " +
-          f"(nlist=$nlist, nassign=$nassign) — past the $budget%,d " +
-          f"budget ($IvfBudgetKey). With nlist fixed the pair mass grows " +
-          "~n²·nassign²/nlist (the wall measured in SCALING.md: 52 s at " +
-          "100k vectors). Scale-safe operating point: " +
-          "ivfCosinePairsPinnedScaled (d27), whose nlist grows as " +
-          "2*ceil(sqrt(n)) and bounds the mass at ~n^1.5 — or raise " +
-          "nlist explicitly.",
-      release)
-  }
+  /** The FIXED-nlist IVF pair guard shared by [[ivfCosinePairs]] and
+    * [[ivfCosinePairsPinned]]: with nlist fixed, within-list pair mass
+    * is n²·nassign²/nlist — quadratic, measured at 52 s for 100k
+    * vectors at sf5.0 — so a refusal names the sqrt-scale operating
+    * point. The worst case is attainable: a vector's k assignments land
+    * in DISTINCT lists, so at most k full lists of n. The SCALED variant
+    * ([[ivfCosinePairsPinnedScaled]]) is deliberately unguarded: its
+    * mass is ~n^1.5 BY DESIGN — the operating curve a large corpus
+    * chooses knowingly. `n` is by-name: read only on a refusal. */
+  private def ivfPairGuard(mode: String, n: => Long, k: Int, nlist: Int,
+      nassign: Int): BucketSelfJoin.Guard =
+    BucketSelfJoin.Guard(IvfGuard, mode, (mass, budget) =>
+      f"fixed-nlist IVF pair join: the within-list self-join would " +
+        f"surface ~$mass%,d pairs over ${n * k}%,d assignment rows " +
+        f"(nlist=$nlist, nassign=$nassign) — past the $budget%,d " +
+        f"budget ($IvfBudgetKey). With nlist fixed the pair mass grows " +
+        "~n²·nassign²/nlist (the wall measured in SCALING.md: 52 s at " +
+        "100k vectors). Scale-safe operating point: " +
+        "ivfCosinePairsPinnedScaled (d27), whose nlist grows as " +
+        "2*ceil(sqrt(n)) and bounds the mass at ~n^1.5 — or raise " +
+        "nlist explicitly.")
 
   /** The pinned coarse quantizer over a cached SQ8 code table (`__id`,
     * `__c`): (k, each vector's k = min(nassign, |codebook|) nearest
@@ -2033,23 +2011,10 @@ object VectorOps {
     val (k, assignList) = pinnedAssignment(c, nlist, nassign)
     val assigned = c.select(col("__id"), col("__c"), col("__n"),
       explode(assignList).as("__bucket"))
-    ivfPairGuard(spark, mode, n, k, assigned.select("__bucket"),
-      nlist, nassign,
-      c.unpersist()) // a refusal must not strand the cached code table
-    val l = assigned.select(col("__id").as("id_a"), col("__c").as("ca"),
-      col("__n").as("na"), col("__bucket"))
-    val r = assigned.select(col("__id").as("id_b"), col("__c").as("cb"),
-      col("__n").as("nb"), col("__bucket"))
-    l.join(r, Seq("__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (nativeDot(spark, col("ca"), col("cb")) /
-          (col("na") * col("nb"))).as("cos"))
-      .where(col("cos") >= threshold)
-      // a pair can co-occur in up to nassign shared buckets; the
-      // quantized cosine is bit-identical per pair, so max == the value
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("cos")).as("cos"))
+    // a refusal must not strand the cached code table
+    sq8CosineAbove(BucketSelfJoin(assigned, Seq("__bucket"), Sq8Payload, k,
+      n, Some(ivfPairGuard(mode, n, k, nlist, nassign)), c.unpersist()),
+      threshold)
   }
 
   /** [[ivfCosinePairsPinned]] at the SCALE operating point. Two things
@@ -2119,20 +2084,8 @@ object VectorOps {
       .select(col("__id"), col("__cid").as("__bucket"))
     val assigned = top.join(c, Seq("__id"))
       .select(col("__id"), col("__c"), col("__n"), col("__bucket"))
-    val l = assigned.select(col("__id").as("id_a"), col("__c").as("ca"),
-      col("__n").as("na"), col("__bucket"))
-    val r = assigned.select(col("__id").as("id_b"), col("__c").as("cb"),
-      col("__n").as("nb"), col("__bucket"))
-    l.join(r, Seq("__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (nativeDot(spark, col("ca"), col("cb")) /
-          (col("na") * col("nb"))).as("cos"))
-      .where(col("cos") >= threshold)
-      // a pair can co-occur in up to nassign shared buckets; the
-      // quantized cosine is bit-identical per pair, so max == the value
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("cos")).as("cos"))
+    sq8CosineAbove(BucketSelfJoin(assigned, Seq("__bucket"), Sq8Payload,
+      nassign, n, None, ()), threshold)
   }
 
   /** Cluster-balanced corpus selection — the DataComp/DCLM curation
@@ -2319,15 +2272,10 @@ object VectorOps {
     // chain per row (see TextOps); it also serves both self-join sides
     val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands).cache()
     val nVecs = sigs.count() // eager: both self-join sides read it (first-reader race)
-    lshBandGuard(sigs, bands, nVecs, mode)
     val withSigs = sigs.select(col("__id"), col("__v"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
-    val l = withSigs.select(col("__id").as("id_a"), col("__v").as("va"),
-      col("__band"), col("__sig"))
-    val r = withSigs.select(col("__id").as("id_b"), col("__v").as("vb"),
-      col("__band"), col("__sig"))
-    l.join(r, Seq("__band", "__sig"))
-      .where(col("id_a") < col("id_b"))
+    BucketSelfJoin(withSigs, Seq("__band", "__sig"), Seq(("__v", "va", "vb")),
+        bands, nVecs, Some(lshBandGuard(mode, bands, nVecs)), sigs.unpersist())
       .select(col("id_a"), col("id_b"),
         nativeDot(df.sparkSession, col("va"), col("vb")).as("cos"))
       .distinct()
@@ -2571,17 +2519,12 @@ object VectorOps {
       array(centCols.map(ct => nativeDot(spark, col("__v"), ct)): _*), centroids.length), 1, k)
     val assigned = c.select(col("__id"), col("__v"),
       explode(assignList).as("__bucket"))
-    // n passed BY NAME: guard=off pays zero jobs (code-review finding —
-    // a strict count here re-scanned the corpus even when switched off)
-    ivfPairGuard(spark, mode, c.count(), k, assigned.select("__bucket"),
-      nlist, nassign,
-      c.unpersist()) // a refusal must not strand the cached corpus
-    val l = assigned.select(col("__id").as("id_a"), col("__v").as("va"),
-      col("__bucket"))
-    val r = assigned.select(col("__id").as("id_b"), col("__v").as("vb"),
-      col("__bucket"))
-    l.join(r, Seq("__bucket"))
-      .where(col("id_a") < col("id_b"))
+    // n is lazy: guard=off pays zero jobs (code-review finding — a
+    // strict count here re-scanned the corpus even when switched off)
+    lazy val n = c.count()
+    // a refusal must not strand the cached corpus
+    BucketSelfJoin(assigned, Seq("__bucket"), Seq(("__v", "va", "vb")), k, n,
+        Some(ivfPairGuard(mode, n, k, nlist, nassign)), c.unpersist())
       .select(col("id_a"), col("id_b"),
         nativeDot(spark, col("va"), col("vb")).as("cos"))
       .where(col("cos") >= threshold)

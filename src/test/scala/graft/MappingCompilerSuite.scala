@@ -106,21 +106,4 @@ class MappingCompilerSuite extends SparkSuite {
     assert(out.as[(String, String)].collect().toMap ==
       Map("D2" -> "2", "D3" -> "3"))
   }
-
-  test("applyWriteBack overwrites only matched rows") {
-    val updates = Seq(("2", "D2")).toDF("Id", "dst_ref")
-    val out = MappingCompiler.applyWriteBack(srcDf, updates, spec)
-    val got = out.select("Id", "dst_ref").as[(String, String)]
-      .collect().toMap
-    assert(got == Map("1" -> null, "2" -> "D2", "3" -> null))
-    assert(out.columns.toSeq == srcDf.columns.toSeq)
-  }
-
-  test("createdRecords selects id columns filtered to migrated ids") {
-    val dst = Seq(("D2", "2", "x"), ("D3", "3", "y"), ("D9", "9", "z"))
-      .toDF("Id", "old_id", "name")
-    val out = MappingCompiler.createdRecords(dst, spec, Seq("2", "3"))
-    assert(out.columns.toSeq == Seq("Id", "old_id"))
-    assert(out.select("Id").as[String].collect().sorted.toSeq == Seq("D2", "D3"))
-  }
 }

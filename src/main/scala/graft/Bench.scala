@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: times the headline query set (SparkEntry.benchQueries)
   * on SPARK_GRAFT_SF_DIR and prints one JSON line. A warmup query runs
   * first so JIT/codegen cost doesn't land on the first measured query;
@@ -273,32 +271,12 @@ object Bench {
     // local[N] floors with numbers from a different execution model
     // (observed: local-cluster q01 at 0.43s vs the 1.20s local[32]
     // floor) and then flag every later canonical run as over-band
-    val sfKey = sys.env.get("SPARK_GRAFT_MASTER") match {
+    val sfKey = Session.masterOverride match {
       case Some(m) => s"$m/${new java.io.File(sfDir).getName}"
       case None    => new java.io.File(sfDir).getName
     }
     val cooldownSec = sys.env.getOrElse("SPARK_GRAFT_COOLDOWN_SEC", "30").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_MASTER lets the SCALING.md smoke run the same bench
-    // under local-cluster[n,cores,mem] — separate executor JVMs with
-    // real serialization/broadcast boundaries that local[n] hides.
-    // Executors forked by local-cluster don't inherit the sbt
-    // classpath, so it is passed through explicitly there.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // SPARK_GRAFT_SHUFFLE_PARTS: above-sf0.1 runs scale partitions
-      // proportionally with data (the SCALING.md round-9 lesson);
-      // the driver's sf0.1 runs leave it unset (= cpus, unchanged)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-        builder.config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-      else builder).getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def loadAvg: Double =
@@ -645,7 +623,7 @@ object Bench {
     val detail = f"""{"metric":"total","value":$valueJson,"unit":"sec","clean":$clean,"first_pass_total":$firstTotal%.3f,"window_total":$windowTotal%.3f,"floor_total":$floorTotal%.3f,"suspect":$suspect,"suspect_reasons":$reasonsJson,"queries":${json(results)},"query_floors":${json(floorResults)},"baseline_queries":${json(baselines)},"baseline_total":$baseTotal%.3f,"retried":$retriedJson,"failed":$failed,"loadavg":{"start":$loadStart%.2f,"end":$loadEnd%.2f},"query_load":$loadStampJson,"query_load_kind":"external (raw loadavg minus this JVM's own smoothed CPU)","quiet_gate":$quietLoad%.1f,"load_forced_retimes":${loadForced.length},"quiet_wait_sec":$quietWaitSec%.0f,"sf":"$sfDir"}"""
     // a master-overridden run (the local-cluster smoke) must not
     // clobber the canonical local[N] window the repo persists
-    val detailFile = if (sys.env.contains("SPARK_GRAFT_MASTER"))
+    val detailFile = if (Session.masterOverride.isDefined)
       "BENCH_DETAIL_master_override.json" else "BENCH_DETAIL.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(detailFile), detail.getBytes("UTF-8"))

@@ -8,11 +8,14 @@ import graft.functions.{DeletionSigs, DotProduct, HyperplaneSig, IntersectSize, 
   * expressions first-class SQL functions on any session built with
   *
   * {{{
-  *   SparkSession.builder()
+  *   graft.Session.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * or, on an existing session, via [[GraftExtensions.install]]. The
+  * or, on an existing session, via [[GraftExtensions.install]].
+  * [[Session.builder]] is the recommended way to build a graft session:
+  * it carries graft's conf. It leaves these extensions out, because their
+  * optimizer rules and strategies change plans, so a session opts in. The
   * functions (all whole-stage-codegen Catalyst expressions, no UDFs):
   *
   *   - `graft_dot(a, b)`       — double dot product of two numeric arrays

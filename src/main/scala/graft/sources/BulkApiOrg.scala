@@ -245,16 +245,7 @@ final class BulkApiOrg(
       val fields = request("GET", s"$restBase/sobjects/$sObject/describe",
         contentType = None) \ "fields" match {
         case JArray(fs) => fs.map { f =>
-          val name = str(f \ "name")
-          val tpe = str(f \ "type") match {
-            case "int" => LongType // SOAP int is widened; Bulk JSON numbers
-            case "double" | "currency" | "percent" => DoubleType
-            case "boolean" => BooleanType
-            case "date" => DateType
-            case "datetime" => TimestampType
-            case _ => StringType // id, string, reference, picklist, ...
-          }
-          StructField(name, tpe)
+          StructField(str(f \ "name"), Soql.fieldType(str(f \ "type")))
         }
         case other => throw new RuntimeException(s"bad describe response: $other")
       }
@@ -377,12 +368,7 @@ final class BulkApiOrg(
     * types; non-column select items (pushed aggregates) fall back to the
     * JSON value's own type. */
   override def query(soql: String): Iterator[Row] = {
-    val sel = soql.stripPrefix("SELECT ")
-    val fromIdx = sel.indexOf(" FROM ")
-    if (fromIdx < 0)
-      throw new IllegalArgumentException(s"no FROM clause in: $soql")
-    val obj = sel.substring(fromIdx + 6).split("\\s+").head
-    val items = sel.substring(0, fromIdx).split(",").map(_.trim).toSeq
+    val (obj, items) = Soql.selectFrom(soql)
     val schema = describe(obj)
     val fieldType: Map[String, DataType] =
       schema.fields.map(f => f.name -> f.dataType).toMap

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
 /** The remote-org boundary the connector talks to — the Spark-native
@@ -300,6 +300,34 @@ object Soql {
     val ord = if (orderBy.isEmpty) "" else s" ORDER BY ${orderBy.mkString(", ")}"
     val lim = limit.map(n => s" LIMIT $n").getOrElse("")
     s"SELECT ${columns.mkString(", ")} FROM $sObject$where$grp$ord$lim"
+  }
+
+  /** The half-open PK range (lo, hi] on Id as SOQL predicates; an open
+    * end renders nothing. */
+  def idRange(lo: Option[String], hi: Option[String]): Seq[String] =
+    lo.map(b => s"Id > '$b'").toSeq ++ hi.map(b => s"Id <= '$b'").toSeq
+
+  /** `SELECT items FROM obj …` → (obj, select items), the wire orgs'
+    * reading of the statement they are handed. */
+  def selectFrom(soql: String): (String, Seq[String]) = {
+    val sel = soql.stripPrefix("SELECT ")
+    val fromIdx = sel.indexOf(" FROM ")
+    if (fromIdx < 0)
+      throw new IllegalArgumentException(s"no FROM clause in: $soql")
+    (sel.substring(fromIdx + 6).split("\\s+").head,
+      sel.substring(0, fromIdx).split(",").map(_.trim).toSeq)
+  }
+
+  /** A describe field type → the Spark type the wire orgs coerce to.
+    * `int` widens to a long: SOAP ints are widened and Bulk JSON numbers
+    * carry no width. */
+  def fieldType(describeType: String): DataType = describeType match {
+    case "int" => LongType
+    case "double" | "currency" | "percent" => DoubleType
+    case "boolean" => BooleanType
+    case "date" => DateType
+    case "datetime" => TimestampType
+    case _ => StringType // id, string, reference, picklist, ...
   }
 }
 

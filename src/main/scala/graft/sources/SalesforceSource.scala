@@ -361,9 +361,7 @@ final class OrgScan(
     else {
       val ranges: Seq[Seq[String]] =
         (None +: pkBoundaries.map(Some(_))).zip(pkBoundaries.map(Some(_)) :+ None)
-          .map { case (lo, hi) =>
-            lo.map(b => s"Id > '$b'").toSeq ++ hi.map(b => s"Id <= '$b'").toSeq
-          }
+          .map { case (lo, hi) => Soql.idRange(lo, hi) }
       ranges.map { r =>
         // per-range ORDER BY + LIMIT is the partial top-N: each range
         // returns its own best n, Spark merges (isPartiallyPushed)
@@ -374,14 +372,8 @@ final class OrgScan(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val s = schema
-    (partition: InputPartition) => {
-      val p = partition.asInstanceOf[OrgInputPartition]
-      new OrgPartitionReader(
-        RemoteOrgRegistry.resolve(p.orgName, p.recipe).query(p.soql), s)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    OrgPartitionReader.factory(schema)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new OrgMicroBatchStream(orgName, sObject, schema, predicates,
@@ -447,9 +439,10 @@ final class OrgMicroBatchStream(
         // row order — without the ORDER BY, an unordered result could
         // hand back an Id near the table max and the "capped" batch
         // would swallow the whole remaining range
-        val pred = if (s.isEmpty) Nil else Seq(s"Id > '$s'")
         val page = RemoteOrgRegistry(orgName).query(Soql.render(
-          sObject, Seq("Id"), predicates ++ pred, Some(rl.maxRows().toInt),
+          sObject, Seq("Id"),
+          predicates ++ Soql.idRange(Some(s).filter(_.nonEmpty), None),
+          Some(rl.maxRows().toInt),
           orderBy = Seq("Id")))
           .map(_.getString(0)).toVector
         if (page.isEmpty) s else page.max
@@ -480,22 +473,16 @@ final class OrgMicroBatchStream(
         .filter(b => (s.isEmpty || b > s) && b < e)
       val bounds = (if (s.isEmpty) None else Some(s)) +: cuts.map(Some(_)) :+ Some(e)
       bounds.zip(bounds.tail).map { case (lo, hi) =>
-        val range = lo.map(b => s"Id > '$b'").toSeq ++ hi.map(b => s"Id <= '$b'").toSeq
         OrgInputPartition(orgName,
-          Soql.render(sObject, schema.fieldNames.toSeq, predicates ++ range, None),
+          Soql.render(sObject, schema.fieldNames.toSeq,
+            predicates ++ Soql.idRange(lo, hi), None),
           rec)
       }.toArray
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val sch = schema
-    (partition: InputPartition) => {
-      val p = partition.asInstanceOf[OrgInputPartition]
-      new OrgPartitionReader(
-        RemoteOrgRegistry.resolve(p.orgName, p.recipe).query(p.soql), sch)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    OrgPartitionReader.factory(schema)
 
   override def deserializeOffset(json: String): streaming.Offset = {
     import org.json4s._
@@ -522,6 +509,17 @@ final class OrgPartitionReader(rows: Iterator[Row], schema: StructType)
     else false
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+object OrgPartitionReader {
+  /** The batch and streaming scans' one reader factory: each partition
+    * resolves its org from the plan-time recipe and runs its SOQL. */
+  def factory(schema: StructType): PartitionReaderFactory =
+    (partition: InputPartition) => {
+      val p = partition.asInstanceOf[OrgInputPartition]
+      new OrgPartitionReader(
+        RemoteOrgRegistry.resolve(p.orgName, p.recipe).query(p.soql), schema)
+    }
 }
 
 /** Catalyst `Filter` → SOQL predicate rendering. Returns None for
@@ -597,16 +595,11 @@ final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType
         val rec = RemoteOrgRegistry(orgName).recipe // plan-time capture
         (_: Int, _: Long) => new OrgDataWriter(o, s, sch, m, ext, rec)
       }
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val outcome = messages.foldLeft(WriteOutcome(0L, 0L)) {
-          case (acc, OrgWriteCommit(p, f)) =>
-            WriteOutcome(acc.processed + p, acc.failed + f)
-          case (acc, _) => acc
-        }
+      override def commit(messages: Array[WriterCommitMessage]): Unit =
         // keyed by the caller's unique writeId (not just (org, table)) so
         // concurrent/interleaved writes can't race each other's outcome
-        OrgWriteMetrics.record(orgName, sObject, writeId, outcome)
-      }
+        OrgWriteMetrics.record(orgName, sObject, writeId,
+          OrgWriteCommit.total(messages))
       override def abort(messages: Array[WriterCommitMessage]): Unit = ()
     }
 
@@ -624,15 +617,9 @@ final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType
         val rec = RemoteOrgRegistry(orgName).recipe // plan-time capture
         (_: Int, _: Long, _: Long) => new OrgDataWriter(o, s, sch, m, ext, rec)
       }
-      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-        val outcome = messages.foldLeft(WriteOutcome(0L, 0L)) {
-          case (acc, OrgWriteCommit(p, f)) =>
-            WriteOutcome(acc.processed + p, acc.failed + f)
-          case (acc, _) => acc
-        }
+      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
         OrgWriteMetrics.record(orgName, sObject,
-          writeId.map(id => s"$id@$epochId"), outcome)
-      }
+          writeId.map(id => s"$id@$epochId"), OrgWriteCommit.total(messages))
       override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
     }
   }
@@ -640,6 +627,16 @@ final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType
 
 final case class OrgWriteCommit(processed: Long, failed: Long)
     extends WriterCommitMessage
+
+object OrgWriteCommit {
+  /** One write's outcome: the tasks' processed/failed counts summed. */
+  def total(messages: Array[WriterCommitMessage]): WriteOutcome =
+    messages.foldLeft(WriteOutcome(0L, 0L)) {
+      case (acc, OrgWriteCommit(p, f)) =>
+        WriteOutcome(acc.processed + p, acc.failed + f)
+      case (acc, _) => acc
+    }
+}
 
 /** DSv2 custom metrics: per-write processed/failed record counts surface
   * in the Spark SQL UI next to the write node — the live face of the

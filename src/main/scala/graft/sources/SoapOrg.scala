@@ -101,15 +101,7 @@ final class SoapOrg(
       val fields = blocks(resp, "fields").map { f =>
         val name = field(f, "name").getOrElse(
           throw new RuntimeException(s"field without name in describe: $f"))
-        val tpe = field(f, "type").getOrElse("string") match {
-          case "int" => LongType
-          case "double" | "currency" | "percent" => DoubleType
-          case "boolean" => BooleanType
-          case "date" => DateType
-          case "datetime" => TimestampType
-          case _ => StringType // id, string, reference, picklist, ...
-        }
-        StructField(name, tpe)
+        StructField(name, Soql.fieldType(field(f, "type").getOrElse("string")))
       }
       if (fields.isEmpty)
         throw new RuntimeException(s"empty describe for $sObject")
@@ -160,12 +152,7 @@ final class SoapOrg(
     * (the reference's cursor loop has the same property — fetch_all_data
     * pages queryMore with no mid-loop retry, data_connector.py:55-69). */
   override def query(soql: String): Iterator[Row] = {
-    val sel = soql.stripPrefix("SELECT ")
-    val fromIdx = sel.indexOf(" FROM ")
-    if (fromIdx < 0)
-      throw new IllegalArgumentException(s"no FROM clause in: $soql")
-    val obj = sel.substring(fromIdx + 6).split("\\s+").head
-    val items = sel.substring(0, fromIdx).split(",").map(_.trim).toSeq
+    val (obj, items) = Soql.selectFrom(soql)
     val fieldType: Map[String, DataType] =
       describe(obj).fields.map(f => f.name -> f.dataType).toMap
 

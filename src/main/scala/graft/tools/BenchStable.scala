@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drift-immune scale benchmark (r19 verdict item 4): this host's
   * above-sf0.1 walls drift ±30% with load across JVMs, so cross-round
   * comparison of one-shot sweeps is meaningless. This tool generalizes
@@ -34,15 +32,7 @@ object BenchStable {
     val sfKey = new java.io.File(sfDir).getName
     val outFile = args.drop(1).headOption.getOrElse(
       if (sfKey == "sf5.0") "BENCH_sf5.json" else s"BENCH_stable_$sfKey.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Codegen-health sweep: run registry queries with
   * `spark.sql.codegen.fallback=false`, so a whole-stage codegen stage
   * that fails to compile (janino's 64 KB method limit on a huge
@@ -21,12 +19,9 @@ import org.apache.spark.sql.SparkSession
 object CodegenSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder()
+      // a codegen failure must fail the query, not fall back silently to
+      // the interpreted path: that failure is what the sweep looks for
       .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

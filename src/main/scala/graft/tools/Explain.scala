@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection entry point: prints the formatted physical plan (the
   * `.explain("formatted")` view — scans with PushedFilters/ReadSchema,
   * exchanges, codegen spans) for one or more registry queries without
@@ -13,13 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <queryName> [more...]")
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-explain")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try args.tail.foreach { name =>
       val run = graft.SparkEntry.queries.getOrElse(name,

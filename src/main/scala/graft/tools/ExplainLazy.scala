@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan dumps for the PPJoin-family operators in their LAZY
   * (releaseCaches=false) form: the registered d02/d06/d16/p01 queries
   * release their caches via localCheckpoint, so their returned plan is
@@ -16,12 +14,7 @@ object ExplainLazy {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ExplainLazy <sfDir>")
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.execution.FormattedMode
     try {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: measure the candidate-mass guards' steady-state cost by
   * interleaving guard=enforce and guard=off reps of the guarded bucket
   * joins INSIDE one JVM — cross-JVM variance on this host (±30% under
@@ -15,14 +13,7 @@ object GuardCostProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val onlyOps = args.drop(1).toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.functions.{TextOps, VectorOps}
     val docs = graft.Tables.corpus(spark, sfDir)

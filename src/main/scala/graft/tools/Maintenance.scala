@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ONE documented maintenance entry point (r17 verdict item 8): the
   * scheduled-job face of the engine's parameter-free housekeeping,
   * folding what previously lived as two separate faces —
@@ -30,12 +28,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Maintenance {
   def main(args: Array[String]): Unit = {
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.Session.builder()
+    // the catalog sweep must look in the database the stores were
+    // registered under, when that is not the default one
     sys.env.get("SPARK_GRAFT_SIGSTORE_DB").foreach(db =>
       builder.config("spark.graft.sigstore.database", db))
     val spark = builder.getOrCreate()

@@ -121,11 +121,7 @@ object Migrate {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(0))), "UTF-8")
     val mappingJson = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(1))), "UTF-8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, configIni, mappingJson)
     finally spark.stop()

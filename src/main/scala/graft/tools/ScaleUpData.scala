@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a K-times replica of an sf test-data directory — the
@@ -74,13 +74,7 @@ object ScaleUpData {
     require(args.length == 3, "usage: ScaleUpData <srcDir> <dstDir> <copies>")
     val Array(src, dst, copiesStr) = args
     val copies = copiesStr.toInt
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String) = graft.Tables(spark, src, name)

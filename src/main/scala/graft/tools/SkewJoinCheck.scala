@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** AQE skew-join vs manual salting — the measured comparison behind the
@@ -41,12 +41,10 @@ object SkewJoinCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skew-join-check")
+    val spark = graft.Session.builder()
+      // the burden metric is rows per result partition, so its figures
+      // depend on the partition count: pinned to compare across hosts
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
       // force the shuffle join: the dimension WOULD broadcast here, but
       // at fact×fact scale it can't — that is the plan under test
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -8,12 +8,7 @@ package graft
 object ConnectorCrashChild {
   def main(args: Array[String]): Unit = {
     val Array(customerPath, base) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.streaming.Streams.connectorCrashChildRun(spark, customerPath, base)
   }

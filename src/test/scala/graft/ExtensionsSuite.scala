@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The SQL-facing function surface: graft_* functions resolve from plain
   * SQL once GraftExtensions installs them (the same code path a session
   * built with `spark.sql.extensions=graft.GraftExtensions` runs at
   * construction). Uses the shared test session — suites run in one JVM,
   * so building/stopping a private session here would break siblings. */
-class ExtensionsSuite extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtensionsSuite extends SparkSuite {
 
   test("graft functions are SQL-callable after extension install") {
     GraftExtensions.install(spark)

@@ -327,20 +327,6 @@ final class BulkApiOrg(
     (header +: lines).mkString("\n")
   }
 
-  /** CSV wire value → described JVM type; empty means null (Salesforce
-    * CSV has no way to carry an empty non-null string). */
-  private def coerceCsv(s: String, dt: DataType): Any =
-    if (s.isEmpty) null
-    else dt match {
-      case LongType => s.toLong
-      case DoubleType => s.toDouble
-      case BooleanType => s.toBoolean
-      case DateType => java.sql.Date.valueOf(s)
-      case TimestampType =>
-        java.sql.Timestamp.from(java.time.Instant.parse(s))
-      case _ => s
-    }
-
   private def toJson(rows: Seq[Row], schema: StructType): String = {
     val recs = rows.map { r =>
       JObject(schema.fields.zipWithIndex.collect {
@@ -394,7 +380,11 @@ final class BulkApiOrg(
               throw new RuntimeException(s"result CSV lacks column $item")))
             rows.tail.iterator.map { r =>
               Row.fromSeq(items.zip(idx).map { case (item, i) =>
-                coerceCsv(r(i), fieldType.getOrElse(item, StringType))
+                // empty means null: Salesforce CSV has no way to carry
+                // an empty non-null string
+                val v = r(i)
+                if (v.isEmpty) null
+                else Soql.coerceText(v, fieldType.getOrElse(item, StringType))
               })
             }
           }
@@ -417,36 +407,39 @@ final class BulkApiOrg(
     }
   }
 
-  /** Shared mutation path: run the job, return per-record results. CSV
-    * results (`"Id","Success","Created","Error"` lines) normalize into
-    * the same JSON shape the JSON wire returns, so the verbs upstream
-    * are mode-blind. */
+  /** Shared mutation path: run the job, return per-record results. A
+    * payload over the Bulk v1 batch cap runs as one job per
+    * [[BulkApiOrg.MaxBatchRecords]]-record slice, results concatenated
+    * in row order. CSV results (`"Id","Success","Created","Error"`
+    * lines) normalize into the same JSON shape the JSON wire returns, so
+    * the verbs upstream are mode-blind. */
   private def mutate(operation: String, sObject: String, rows: Seq[Row],
-      schema: StructType, externalIdField: Option[String] = None): List[JValue] = {
-    val payload =
-      if (csvMode) toCsv(rows, schema) else toJson(rows, schema)
-    val (jobId, batchId) = runJob(operation, sObject, payload, externalIdField)
-    val url = s"$asyncBase/job/$jobId/batch/$batchId/result"
-    if (csvMode) {
-      val parsed = parseCsv(requestRaw("GET", url, contentType = None))
-      if (parsed.isEmpty) Nil
-      else {
-        val pos = parsed.head.map(_.toLowerCase).zipWithIndex.toMap
-        def at(r: Seq[String], name: String): Option[String] =
-          pos.get(name).map(r(_)).filter(_.nonEmpty)
-        parsed.tail.map { r =>
-          JObject(List(
-            "id" -> at(r, "id").map(JString(_): JValue).getOrElse(JNull),
-            "success" -> JBool(at(r, "success").exists(_.toBoolean)),
-            "created" -> JBool(at(r, "created").exists(_.toBoolean)),
-            "errors" -> at(r, "error").map(JString(_): JValue).getOrElse(JNull)))
-        }.toList
+      schema: StructType, externalIdField: Option[String] = None): List[JValue] =
+    rows.grouped(BulkApiOrg.MaxBatchRecords).toList.flatMap { slice =>
+      val payload =
+        if (csvMode) toCsv(slice, schema) else toJson(slice, schema)
+      val (jobId, batchId) = runJob(operation, sObject, payload, externalIdField)
+      val url = s"$asyncBase/job/$jobId/batch/$batchId/result"
+      if (csvMode) {
+        val parsed = parseCsv(requestRaw("GET", url, contentType = None))
+        if (parsed.isEmpty) Nil
+        else {
+          val pos = parsed.head.map(_.toLowerCase).zipWithIndex.toMap
+          def at(r: Seq[String], name: String): Option[String] =
+            pos.get(name).map(r(_)).filter(_.nonEmpty)
+          parsed.tail.map { r =>
+            JObject(List(
+              "id" -> at(r, "id").map(JString(_): JValue).getOrElse(JNull),
+              "success" -> JBool(at(r, "success").exists(_.toBoolean)),
+              "created" -> JBool(at(r, "created").exists(_.toBoolean)),
+              "errors" -> at(r, "error").map(JString(_): JValue).getOrElse(JNull)))
+          }.toList
+        }
+      } else request("GET", url) match {
+        case JArray(rs) => rs
+        case other => throw new RuntimeException(s"bad mutation result: $other")
       }
-    } else request("GET", url) match {
-      case JArray(rs) => rs
-      case other => throw new RuntimeException(s"bad mutation result: $other")
     }
-  }
 
   override def insert(sObject: String, rows: Seq[Row],
       schema: StructType): Seq[String] =
@@ -483,6 +476,11 @@ final class BulkApiOrg(
       .map(_.getString(0)).toSeq
     if (ids.isEmpty) 0 else delete(sObject, ids)
   }
+}
+
+object BulkApiOrg {
+  /** Bulk v1's per-batch record cap: a larger mutation is sliced. */
+  val MaxBatchRecords: Int = 10000
 }
 
 /** The HTTP wire org's [[OrgRecipe]]: plain serializable connection

@@ -329,6 +329,18 @@ object Soql {
     case "datetime" => TimestampType
     case _ => StringType // id, string, reference, picklist, ...
   }
+
+  /** A non-null text wire value (Bulk CSV, SOAP XML) → the JVM value of
+    * its [[fieldType]]. Each wire keeps its own null rule. */
+  def coerceText(s: String, dt: DataType): Any = dt match {
+    case LongType => s.toLong
+    case DoubleType => s.toDouble
+    case BooleanType => s.toBoolean
+    case DateType => java.sql.Date.valueOf(s)
+    case TimestampType =>
+      java.sql.Timestamp.from(java.time.Instant.parse(s))
+    case _ => s
+  }
 }
 
 /** In-memory [[RemoteOrg]]: tables are row buffers with explicit schemas;

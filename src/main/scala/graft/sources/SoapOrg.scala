@@ -164,7 +164,8 @@ final class SoapOrg(
           .orElse(recordField(record, s"expr$i"))
         raw match {
           case None | Some(null) => null
-          case Some(v) => coerce(v, fieldType.getOrElse(item, StringType))
+          case Some(v) =>
+            Soql.coerceText(v, fieldType.getOrElse(item, StringType))
         }
       })
 
@@ -335,18 +336,6 @@ object SoapOrg {
     if (nil.findFirstIn(record).nonEmpty) Some(null)
     else field(record, name)
   }
-
-  private[sources] def coerce(s: String, dt: DataType): Any =
-    if (s == null) null
-    else dt match {
-      case LongType => s.toLong
-      case DoubleType => s.toDouble
-      case BooleanType => s.toBoolean
-      case DateType => java.sql.Date.valueOf(s)
-      case TimestampType =>
-        java.sql.Timestamp.from(java.time.Instant.parse(s))
-      case _ => s
-    }
 }
 
 /** The SOAP wire org's [[OrgRecipe]]: the plan-time session binding

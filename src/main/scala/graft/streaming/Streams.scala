@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface — the incremental counterpart of the
   * batch engine (SURVEY.md §2.9): the reference's cursor micro-batching
@@ -53,6 +54,47 @@ object Streams {
 
   private val gateRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The one runner every gate's streaming query goes through: an
+    * AvailableNow trigger admits everything the source holds at start,
+    * the query stops on its own once that is committed, and the
+    * finished query is returned (its `lastProgress` is the record of
+    * the last micro-batch). */
+  private def runToEnd(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** Drive `df` to its end into a uniquely named memory sink and read
+    * the sink back. `check` sees the finished query. */
+  private[streaming] def toMemory(df: DataFrame, tag: String,
+      mode: OutputMode,
+      check: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val sink = s"${tag}_gate_${gateRunSeq.incrementAndGet()}"
+    check(runToEnd(
+      df.writeStream.format("memory").queryName(sink).outputMode(mode)))
+    df.sparkSession.table(sink)
+  }
+
+  /** [[toMemory]]'s check for the per-row serving gates (w24/w33/w34):
+    * the finished query's progress must report no state operator. */
+  private def stateless(what: String)(q: StreamingQuery): Unit = {
+    val progress = q.lastProgress
+    require(progress == null || progress.stateOperators.isEmpty,
+      s"$what must be stateless — a state operator appeared in the " +
+        "streaming plan")
+  }
+
+  /** Drain `stream` to its end through a `foreachBatch` sink. */
+  private def drainInto(stream: DataFrame,
+      sink: (DataFrame, Long) => Unit): Unit =
+    runToEnd(stream.writeStream.foreachBatch(sink))
+
+  /** A fresh, uniquely named temp directory for one gate run. */
+  private def gateDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(
+      s"${tag}_${gateRunSeq.incrementAndGet()}_").toFile.getAbsolutePath
+
   /** Drive `tumblingCounts`-shaped aggregation THROUGH the streaming
     * engine to a terminal batch result: AvailableNow trigger over the
     * events file, complete-mode memory sink, await termination, read
@@ -79,14 +121,7 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum(col("v6")).as("sum_v6"))
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"), col("n"), col("sum_v6"))
-    val sink = s"w05_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Complete)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w05", OutputMode.Complete)
   }
 
   /** w06's gate: session windows driven THROUGH the streaming engine.
@@ -107,14 +142,7 @@ object Streams {
       .agg(count(lit(1)).as("n_events"))
       .select(unix_millis(col("session_window.start")).as("session_start_ms"),
         col("user_id"), col("n_events"))
-    val sink = s"w06_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Complete)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w06", OutputMode.Complete)
   }
 
   /** w07's gate: the flatMapGroupsWithState funnel state machine run
@@ -131,14 +159,7 @@ object Streams {
     val ev = retagTs(eventStream(spark, eventsPath))
       .select(col("user_id"), col("event_type"), col("ts"))
       .as[FunnelEvent]
-    val sink = s"w07_gate_${gateRunSeq.incrementAndGet()}"
-    val q = funnelProgress(ev, steps).toDF()
-      .writeStream.format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(funnelProgress(ev, steps).toDF(), "w07", OutputMode.Append)
   }
 
   /** w08's gate: a STREAM-STATIC broadcast join — the enrichment shape
@@ -165,14 +186,7 @@ object Streams {
       .agg(count(lit(1)).as("n"),
         sum(when(col("v6") > col("mean_v6"), 1L).otherwise(0L))
           .as("n_above_mean"))
-    val sink = s"w08_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Complete)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w08", OutputMode.Complete)
   }
 
   /** w09's gate: streaming dropDuplicates (keyed dedup state) through
@@ -185,14 +199,7 @@ object Streams {
     val deduped = ev
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    val sink = s"w09_gate_${gateRunSeq.incrementAndGet()}"
-    val q = deduped.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(deduped, "w09", OutputMode.Append)
   }
 
   /** w10's gate: the custom TopKAgg aggregate running INSIDE a
@@ -212,14 +219,7 @@ object Streams {
         posexplode(col("__ids")).as(Seq("__r0", "event_id")))
       .select(col("window_start_ms"),
         (col("__r0") + 1).cast("long").as("rank"), col("event_id"))
-    val sink = s"w10_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Complete)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w10", OutputMode.Complete)
   }
 
   /** w15's gate: CHAINED stateful operators in one streaming query —
@@ -246,19 +246,9 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"), col("n"))
-    val sink = s"w15_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w15", OutputMode.Append)
   }
 
-  /** The Tables.apply physical-layout dispatch for streaming reads
-    * (which bypass the loader): nanos-as-long -> micros truncation, or
-    * NTZ -> LTZ re-tag under the pinned UTC session. */
   /** w16's gate: stream-static AS-OF enrichment — every streamed
     * purchase picks up the latest static view at-or-before its event
     * time (the SCD2-style "dimension as of the event" lookup run
@@ -286,17 +276,13 @@ object Streams {
       .select(col("event_id"), col("user_id"),
         unix_millis(col("ts")).as("ts_ms"),
         col("__m.__vid").as("asof_view_event_id"))
-    val sink = s"w16_gate_${gateRunSeq.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Complete)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(agg, "w16", OutputMode.Complete)
   }
 
-  private def retagTs(raw: DataFrame): DataFrame =
+  /** The Tables.apply physical-layout dispatch for streaming reads
+    * (which bypass the loader): nanos-as-long -> micros truncation, or
+    * NTZ -> LTZ re-tag under the pinned UTC session. */
+  private[streaming] def retagTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -448,13 +434,6 @@ object Streams {
         OutputMode.Append())
   }
 
-  /** w13's gate: `transformWithState` through the engine. One input
-    * file = one micro-batch, so each (user, type) emits exactly one
-    * terminal snapshot — the exact grouped (count, micro-unit sum),
-    * which the oracle replays as a plain GROUP BY. transformWithState
-    * requires the RocksDB state store; the gate pins the provider conf
-    * for its run and restores the prior value (the other gates run the
-    * default HDFS-backed store). */
   /** `transformWithState` requires the RocksDB state store; two gates
     * pin the session-global provider conf for their run. The whole
     * set→run→restore window is SERIALIZED by this lock: without it,
@@ -478,6 +457,13 @@ object Streams {
       }
     }
 
+  /** w13's gate: `transformWithState` through the engine. One input
+    * file = one micro-batch, so each (user, type) emits exactly one
+    * terminal snapshot — the exact grouped (count, micro-unit sum),
+    * which the oracle replays as a plain GROUP BY. transformWithState
+    * requires the RocksDB state store; the gate pins the provider conf
+    * for its run and restores the prior value (the other gates run the
+    * default HDFS-backed store). */
   def typeTallyGate(spark: SparkSession, eventsPath: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
@@ -486,14 +472,7 @@ object Streams {
         .select(col("user_id"), col("event_type"),
           floor(col("value") * 1e6).cast("long").as("v6"))
         .as[TypedEvent]
-      val sink = s"w13_gate_${gateRunSeq.incrementAndGet()}"
-      val q = typeTallies(ev).toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sink)
+      toMemory(typeTallies(ev).toDF(), "w13", OutputMode.Append)
     }
   }
 
@@ -569,38 +548,50 @@ object Streams {
     * one terminal snapshot per user, which the oracle replays with
     * per-user latest-upsert/latest-delete windows. */
   def cdcMaterializeGate(spark: SparkSession, eventsPath: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import spark.implicits._
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
     withRocksDbProvider(spark) {
-      val ch = retagTs(eventStream(spark, eventsPath, maxFilesPerTrigger))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), floor(col("value") * 1e6).cast("long").as("v6"),
-          (col("event_type") === "purchase").as("is_del"))
-        .as[CdcChange]
-      val sink = s"w17_gate_${gateRunSeq.incrementAndGet()}"
-      val q = cdcMaterialize(ch).toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sink)
+      val ch = changeFeed(
+        retagTs(eventStream(spark, eventsPath, maxFilesPerTrigger)))
+      toMemory(cdcMaterialize(ch).toDF(), "w17", OutputMode.Append)
+    }
+
+  /** The events stream as w17/w18's change feed: a purchase is a
+    * tombstone delete, anything else a value upsert. */
+  private def changeFeed(events: DataFrame): Dataset[CdcChange] = {
+    import events.sparkSession.implicits._
+    events.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), floor(col("value") * 1e6).cast("long").as("v6"),
+        (col("event_type") === "purchase").as("is_del"))
+      .as[CdcChange]
+  }
+
+  /** The w18/w19 restart harness: `run` goes twice over one checkpoint,
+    * each time after staging its half as ONE parquet file named into
+    * `$base/src` (the file-stream source discovers it as the next
+    * batch's input) — run 1 sees `h1` and stops (the failure point),
+    * run 2 restarts with `h2` added. One copy, so the staging mechanics
+    * cannot drift between the two gates. */
+  private def runAcrossRestart(base: String, h1: DataFrame,
+      h2: DataFrame)(run: => Unit): Unit = {
+    new java.io.File(s"$base/src").mkdirs()
+    Seq("h1" -> h1, "h2" -> h2).foreach { case (name, half) =>
+      val tmp = s"$base/stage_$name"
+      half.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(s"$base/src", s"$name.parquet"))
+      run
     }
   }
 
-  /** Restart-gate staging: write `half` as ONE parquet file named into
-    * the shared source directory (the file-stream source discovers it as
-    * the next batch's input). Shared by the w18/w19 recovery gates so
-    * the staging mechanics cannot drift between them. */
-  private def stageHalf(base: String, srcDir: String,
-      half: DataFrame, name: String): Unit = {
-    val tmp = s"$base/stage_$name"
-    half.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-  }
+  /** The recovery gates' sink: parquet, exactly-once via its commit log
+    * at `$base/sink`, checkpoint at `$base/ckpt`. */
+  private def checkpointedParquet(df: DataFrame,
+      base: String): DataStreamWriter[Row] =
+    df.writeStream.format("parquet")
+      .option("path", s"$base/sink").option("checkpointLocation", s"$base/ckpt")
+      .outputMode(OutputMode.Append)
 
   /** w18's gate: CHECKPOINT RECOVERY of stateful streaming state — the
     * exactly-once restart contract a long-running deployment leans on,
@@ -622,36 +613,17 @@ object Streams {
     * back through that log, so replayed-but-uncommitted output can't
     * leak into the result either. */
   def checkpointRecoveryGate(spark: SparkSession, eventsPath: String): DataFrame = {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      s"w18_gate_${gateRunSeq.incrementAndGet()}_").toFile.getAbsolutePath
-    val srcDir = s"$base/src"
-    val ckpt = s"$base/ckpt"
-    val sinkDir = s"$base/sink"
-    new java.io.File(srcDir).mkdirs()
+    val base = gateDir("w18_gate")
     val raw = spark.read.parquet(eventsPath)
-    def stage(half: DataFrame, name: String): Unit =
-      stageHalf(base, srcDir, half, name)
-    def runOnce(): Unit = withRocksDbProvider(spark) {
-      val ch = retagTs(eventStream(spark, srcDir))
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), floor(col("value") * 1e6).cast("long").as("v6"),
-          (col("event_type") === "purchase").as("is_del"))
-        .as[CdcChange]
-      val q = cdcMaterialize(ch).toDF()
-        .writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    // run 1: the even half of the feed; run 2: restart, fold in the rest
+    runAcrossRestart(base, raw.where(col("event_id") % 2 === 0),
+        raw.where(col("event_id") % 2 =!= 0)) {
+      withRocksDbProvider(spark) {
+        val ch = changeFeed(retagTs(eventStream(spark, s"$base/src")))
+        runToEnd(checkpointedParquet(cdcMaterialize(ch).toDF(), base))
+      }
     }
-    stage(raw.where(col("event_id") % 2 === 0), "h1")
-    runOnce() // run 1: half the feed, then stop (the failure point)
-    stage(raw.where(col("event_id") % 2 =!= 0), "h2")
-    runOnce() // run 2: restart from the checkpoint, fold in the rest
-    spark.read.parquet(sinkDir)
+    spark.read.parquet(s"$base/sink")
       .groupBy("user_id")
       .agg(max(struct(col("n_changes"), col("live"), col("last_v6"),
         col("last_ms"))).as("__last"))
@@ -681,64 +653,28 @@ object Streams {
   def windowRecoveryGate(spark: SparkSession, eventsPath: String,
       windowLength: String = "1 hour",
       lateness: String = "1 hour"): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      s"w19_gate_${gateRunSeq.incrementAndGet()}_").toFile.getAbsolutePath
-    val srcDir = s"$base/src"
-    val ckpt = s"$base/ckpt"
-    val sinkDir = s"$base/sink"
-    new java.io.File(srcDir).mkdirs()
+    val base = gateDir("w19_gate")
     val rt = retagTs(spark.read.parquet(eventsPath))
     val mm = rt.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
     val (mn, mx) = (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
     val cut = new java.sql.Timestamp(mn + (mx - mn) / 2)
-    def stage(half: DataFrame, name: String): Unit =
-      stageHalf(base, srcDir, half, name)
-    def runOnce(): Unit = {
-      val ev = retagTs(eventStream(spark, srcDir))
+    // run 1: early windows finalize into the sink, then stop; run 2:
+    // restart — straddling windows need run-1 state
+    runAcrossRestart(base, rt.where(col("ts") <= lit(cut)),
+        rt.where(col("ts") > lit(cut))) {
+      val agg = retagTs(eventStream(spark, s"$base/src"))
         .select(col("ts"), col("event_type"),
           floor(col("value") * 1e6).cast("long").as("v6"))
-      val agg = ev.withWatermark("ts", lateness)
+        .withWatermark("ts", lateness)
         .groupBy(window(col("ts"), windowLength), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("v6")).as("sum_v6"))
         .select(unix_millis(col("window.start")).as("window_start_ms"),
           col("event_type"), col("n"), col("sum_v6"))
-      val q = agg.writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runToEnd(checkpointedParquet(agg, base))
     }
-    stage(rt.where(col("ts") <= lit(cut)), "h1")
-    runOnce() // run 1: early windows finalize into the sink, then stop
-    stage(rt.where(col("ts") > lit(cut)), "h2")
-    runOnce() // run 2: restart — straddling windows need run-1 state
-    spark.read.parquet(sinkDir)
+    spark.read.parquet(s"$base/sink")
   }
 
-  /** w22's gate: CHECKPOINT RECOVERY of the CONNECTOR stream — the
-    * PK-cursor offset restore of `OrgMicroBatchStream`
-    * (SalesforceSource.scala), which w18/w19 (file sources) leave
-    * unexercised, killed MID-BACKFILL rather than at a batch boundary.
-    *
-    * Run 1 starts the org backfill under a small admission cap
-    * (maxRecordsPerBatch) so the cursor pages many times, and is
-    * STOPPED after a few committed micro-batches with rows still
-    * unread — the simulated crash. More rows then land in the org
-    * (their minted Ids sort past the cursor, the org's append
-    * contract), and run 2 restarts from the same checkpoint with
-    * AvailableNow to drain. The parquet sink is read back through its
-    * commit log, so a batch in flight at the kill point replays
-    * without duplicating. The terminal sink equals the plain batch
-    * SELECT over the whole table ONLY if the restart resumed from the
-    * checkpointed Id cursor: a reset cursor re-reads run 1's pages
-    * (duplicate rows), a skipped-ahead cursor loses the unread gap.
-    *
-    * The "crash" here is a cooperative `stop()` (the in-flight batch
-    * aborts cleanly in-process); the SIGKILL-grade variant lives in
-    * StreamingSuite's hard-kill test, which forks run 1 into its own
-    * JVM via [[connectorCrashChildRun]] and `destroyForcibly`s it. */
   /** Shared sim-org construction for the connector recovery tests: the
     * org is created and registered under `orgName`, the customer dim is
     * read in a FIXED order (sorted by custkey, bounded — it is the dim
@@ -789,12 +725,9 @@ object Streams {
     * `\$base/sink`, checkpoint at `\$base/ckpt`. */
   private[graft] def connectorSinkStream(spark: SparkSession,
       orgName: String, base: String, maxPerBatch: Int = 64) =
-    spark.readStream.format("salesforce-sim")
+    checkpointedParquet(spark.readStream.format("salesforce-sim")
       .option("org", orgName).option("sObject", "Customer__c")
-      .option("maxRecordsPerBatch", maxPerBatch.toString).load()
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink").option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append)
+      .option("maxRecordsPerBatch", maxPerBatch.toString).load(), base)
 
   /** Forked-JVM child of the HARD-KILL w22 variant: land h1, free-run
     * the connector stream against the shared checkpoint/sink under
@@ -809,48 +742,77 @@ object Streams {
       .awaitTermination() // killed externally
   }
 
+  /** w22's gate: CHECKPOINT RECOVERY of the CONNECTOR stream — the
+    * PK-cursor offset restore of `OrgMicroBatchStream`
+    * (SalesforceSource.scala), which w18/w19 (file sources) leave
+    * unexercised, killed MID-BACKFILL rather than at a batch boundary.
+    *
+    * Run 1 starts the org backfill under a small admission cap
+    * (maxRecordsPerBatch) so the cursor pages many times, and is
+    * STOPPED after a few committed micro-batches with rows still
+    * unread — the simulated crash. More rows then land in the org
+    * (their minted Ids sort past the cursor, the org's append
+    * contract), and run 2 restarts from the same checkpoint with
+    * AvailableNow to drain. The parquet sink is read back through its
+    * commit log, so a batch in flight at the kill point replays
+    * without duplicating. The terminal sink equals the plain batch
+    * SELECT over the whole table ONLY if the restart resumed from the
+    * checkpointed Id cursor: a reset cursor re-reads run 1's pages
+    * (duplicate rows), a skipped-ahead cursor loses the unread gap.
+    *
+    * The "crash" here is a cooperative `stop()` (the in-flight batch
+    * aborts cleanly in-process); the SIGKILL-grade variant lives in
+    * StreamingSuite's hard-kill test, which forks run 1 into its own
+    * JVM via [[connectorCrashChildRun]] and `destroyForcibly`s it. */
   def connectorRecoveryGate(spark: SparkSession,
       customerPath: String): DataFrame = {
-    val seq = gateRunSeq.incrementAndGet()
-    val base = java.nio.file.Files
-      .createTempDirectory(s"w22_gate_${seq}_").toFile.getAbsolutePath
-    val sinkDir = s"$base/sink"
-    val orgName = s"w22_org_$seq"
+    val base = gateDir("w22_gate")
+    val orgName = s"w22_org_${gateRunSeq.incrementAndGet()}"
     val (h1, h2, land) = connectorSimOrg(spark, customerPath, orgName)
     // admission cap scales with the corpus: tiny SFs keep the 64-row
     // floor (the cursor still pages many times), big SFs stay at a few
     // dozen batches per run instead of thousands — what made this gate
     // infeasible at sf1.0 (150k customers / 64 = ~2300 micro-batches)
     val cap = math.max(64, h1.length / 24)
-    def stream = connectorSinkStream(spark, orgName, base, cap)
     land(h1)
-    // run 1: free-running micro-batches, killed after a few commits with
-    // most of the backfill still unread — NOT an AvailableNow drain.
-    // The kill point adapts to corpus size (ADVICE r11): under the
-    // admission cap a small SF never reaches batch 2, so waiting
-    // for a fixed batchId would silently spin out the whole deadline.
-    // Wait for min(2, last batch that can still admit input), and bail
-    // as soon as every currently-landed row has been admitted — at that
-    // point there is nothing left to kill mid-backfill, and the restart
-    // still exercises the cursor restore against run 2's fresh rows.
-    val q1 = stream.start()
-    val targetBatch = math.min(2L, math.ceil(h1.length.toDouble / cap).toLong - 1)
+    stopMidBackfillThenDrain(
+      () => connectorSinkStream(spark, orgName, base, cap), h1.length, cap) {
+      land(h2) // more rows land while the stream is down
+    }
+    spark.read.parquet(s"$base/sink")
+      .select(col("CKey__c").cast("long").as("c_custkey"),
+        col("Name__c").as("c_name"),
+        col("NKey__c").cast("long").as("c_nationkey"))
+  }
+
+  /** Run 1 and run 2 of the mid-backfill recovery gates (w22, w30),
+    * with `landed` rows in the org. Run 1 free-runs micro-batches and
+    * is stopped after a few commits with most of the backfill still
+    * unread — NOT a drain. The kill point adapts to corpus size: under
+    * the admission `cap` a small corpus never reaches batch 2, so
+    * waiting for a fixed batchId would silently spin out the whole
+    * deadline. It waits for min(2, last batch that can still admit
+    * input), and bails as soon as every landed row has been admitted —
+    * at that point there is nothing left to kill mid-backfill, and the
+    * restart still exercises the cursor restore against the fresh
+    * rows. `landWhileDown` adds rows while the stream is down; run 2
+    * then resumes the Id cursor and drains to the end. `newWriter`
+    * builds a fresh writer over the same checkpoint for each run. */
+  private def stopMidBackfillThenDrain(
+      newWriter: () => DataStreamWriter[Row], landed: Int, cap: Int)(
+      landWhileDown: => Unit): Unit = {
+    val q1 = newWriter().start()
+    val targetBatch = math.min(2L, math.ceil(landed.toDouble / cap).toLong - 1)
     def admitted: Long = q1.recentProgress.map(_.numInputRows).sum
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     while ((q1.lastProgress == null ||
-          (q1.lastProgress.batchId < targetBatch && admitted < h1.length)) &&
+          (q1.lastProgress.batchId < targetBatch && admitted < landed)) &&
         q1.isActive && System.nanoTime() < deadline)
       Thread.sleep(25)
     q1.stop()
     q1.awaitTermination()
-    land(h2) // more rows land while the stream is down
-    val q2 = stream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q2.awaitTermination() // run 2: resume the Id cursor, drain to the end
-    spark.read.parquet(sinkDir)
-      .select(col("CKey__c").cast("long").as("c_custkey"),
-        col("Name__c").as("c_name"),
-        col("NKey__c").cast("long").as("c_nationkey"))
+    landWhileDown
+    runToEnd(newWriter())
   }
 
   /** Canonical row rendering for result comparison in gates/suites. */
@@ -900,14 +862,7 @@ object Streams {
       .chunkOverlap(docs, "doc_id", "text", size_ = 64, step = 48)
       .dropDuplicates("chunk_md5")
       .select(col("chunk_md5"))
-    val sink = s"w21_gate_${gateRunSeq.incrementAndGet()}"
-    val q = distinctChunks.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(distinctChunks, "w21", OutputMode.Append)
   }
 
   /** PRODUCTION streaming benchmark decontamination for unbounded
@@ -952,18 +907,8 @@ object Streams {
     val scored = decontaminateStream(
       train = docs.where(col("doc_id") % 50 =!= 0),
       evalSuite = eval_, "doc_id", "text", n = 4)
-    val sink = s"w24_gate_${gateRunSeq.incrementAndGet()}"
-    val q = scored.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progress = q.lastProgress
-    require(progress == null || progress.stateOperators.isEmpty,
-      "bloom decontamination must be stateless — a state operator " +
-        "appeared in the streaming plan")
-    spark.table(sink)
+    toMemory(scored, "w24", OutputMode.Append,
+      stateless("bloom decontamination"))
   }
 
   /** PRODUCTION streaming importance scoring for unbounded document
@@ -1006,18 +951,8 @@ object Streams {
     val ref = spark.read.parquet(docsPath)
     val scored = importanceScoreStream(docs, ref, "doc_id", "text",
       col("lang") === "en")
-    val sink = s"w33_gate_${gateRunSeq.incrementAndGet()}"
-    val q = scored.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progress = q.lastProgress
-    require(progress == null || progress.stateOperators.isEmpty,
-      "importance scoring must be stateless — a state operator " +
-        "appeared in the streaming plan")
-    spark.table(sink)
+    toMemory(scored, "w33", OutputMode.Append,
+      stateless("importance scoring"))
   }
 
   /** Streaming serving face of p34's domain reweighting (the w33
@@ -1066,18 +1001,8 @@ object Streams {
     val docs = eventStream(spark, docsPath, Some(1))
     val ref = spark.read.parquet(docsPath)
     val mixed = domainMixStream(docs, ref, "doc_id", "text", "source")
-    val sink = s"w34_gate_${gateRunSeq.incrementAndGet()}"
-    val q = mixed.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progress = q.lastProgress
-    require(progress == null || progress.stateOperators.isEmpty,
-      "domain-mix serving must be stateless — a state operator " +
-        "appeared in the streaming plan")
-    spark.table(sink)
+    toMemory(mixed, "w34", OutputMode.Append,
+      stateless("domain-mix serving"))
   }
 
   /** PRODUCTION store-probe sink for unbounded document streams — the
@@ -1156,25 +1081,16 @@ object Streams {
   private[graft] def dedupStoreProbeStreamGate(spark: SparkSession,
       docsPath: String): DataFrame = {
     import graft.functions.TextOps
-    val store = java.nio.file.Files
-      .createTempDirectory(s"w25_store_${gateRunSeq.incrementAndGet()}_")
-      .toString
+    val store = gateDir("w25_store")
     val docs = spark.read.parquet(docsPath)
     val standing = docs.where(col("doc_id") % 20 =!= 0)
     TextOps.buildSignatureStore(standing, "doc_id", "text", store,
       n = 3, numHashes = 128, bands = 32)
-    val outDir = java.nio.file.Files
-      .createTempDirectory(s"w25_out_${gateRunSeq.incrementAndGet()}_")
-      .toString
-    val stream = eventStream(spark, docsPath, Some(1))
-      .where(col("doc_id") % 20 === 0)
-    val q = stream.writeStream
-      .foreachBatch(dedupStoreProbeBatch(standing, "doc_id", "text",
-        store, outDir, n = 3, numHashes = 128, bands = 32,
-        threshold = 0.5))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val outDir = gateDir("w25_out")
+    drainInto(eventStream(spark, docsPath, Some(1))
+        .where(col("doc_id") % 20 === 0),
+      dedupStoreProbeBatch(standing, "doc_id", "text", store, outDir,
+        n = 3, numHashes = 128, bands = 32, threshold = 0.5))
     spark.read.schema(dedupStorePairsSchema).parquet(outDir)
       .select("id_a", "id_b", "jac") // drop the epoch partition column
   }
@@ -1199,9 +1115,7 @@ object Streams {
     import spark.implicits._
     val docs = spark.read.parquet(docsPath).select("doc_id", "text")
     val standing = docs.where(col("doc_id") % 20 =!= 0)
-    val store = java.nio.file.Files
-      .createTempDirectory(s"w26_store_${gateRunSeq.incrementAndGet()}_")
-      .toString
+    val store = gateDir("w26_store")
     TextOps.buildSignatureStore(standing, "doc_id", "text", store,
       n = 3, numHashes = 128, bands = 32)
     // w27's twist: a standing slice is RETRACTED before ingest begins —
@@ -1210,9 +1124,7 @@ object Streams {
     // % 20 == 0, disjoint from the standing tombstone set)
     retractMod7.foreach(r => TextOps.retractFromSignatureStore(
       standing.where(col("doc_id") % 7 === r).select("doc_id"), store))
-    val outDir = java.nio.file.Files
-      .createTempDirectory(s"w26_out_${gateRunSeq.incrementAndGet()}_")
-      .toString
+    val outDir = gateDir("w26_out")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -1378,25 +1290,21 @@ object Streams {
       .filter(_.meta.kind == kind)
     val planted = media.union(
       media.map(m => m.copy(media_id = m.media_id + 1000000L)))
-    val seq = gateRunSeq.incrementAndGet()
-    val spool = java.nio.file.Files
-      .createTempDirectory(s"${label}_spool_${seq}_").toString
+    val spool = gateDir(s"${label}_spool")
     planted.toDF().select("media_id", "bytes")
       .repartition(6)
       .write.mode("overwrite").parquet(spool)
-    val outDir = java.nio.file.Files
-      .createTempDirectory(s"${label}_hashes_${seq}_").toString
-    val q = spark.readStream
-      .schema("media_id BIGINT, bytes BINARY")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(spool)
-      .writeStream
-      .foreachBatch(sink(outDir))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val outDir = gateDir(s"${label}_hashes")
+    drainInto(fileBatches(spark, spool, "media_id BIGINT, bytes BINARY"),
+      sink(outDir))
     outDir
   }
+
+  /** A parquet directory streamed one file per micro-batch. */
+  private def fileBatches(spark: SparkSession, dir: String,
+      schemaDdl: String): DataFrame =
+    spark.readStream.schema(schemaDdl)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** w29's gate: [[mediaNearDupStreamGate]]'s AUDIO sibling — clip
     * payloads (the deterministic fixture corpus plus re-keyed planted
@@ -1467,28 +1375,18 @@ object Streams {
       maxHamming: Int): DataFrame = {
     import spark.implicits._
     import graft.multimodal.PinnedMediaMath
-    val seq = gateRunSeq.incrementAndGet()
-    val base = java.nio.file.Files
-      .createTempDirectory(s"w32_gate_${seq}_").toFile.getAbsolutePath
-    def drain(src: String, schemaDdl: String,
-        sink: (DataFrame, Long) => Unit): Unit = {
-      val q = spark.readStream.schema(schemaDdl)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream.foreachBatch(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val base = gateDir("w32_gate")
     // image half: several source files → several real micro-batches,
     // each through the fused bytes→pHash kernel
     PinnedMediaMath.crossModalPngRows.toDF("media_id", "bytes")
       .repartition(6).write.mode("overwrite").parquet(s"$base/png_src")
-    drain(s"$base/png_src", "media_id BIGINT, bytes BINARY",
-      mediaPhashBatch(s"$base/hashes"))
+    drainInto(fileBatches(spark, s"$base/png_src",
+      "media_id BIGINT, bytes BINARY"), mediaPhashBatch(s"$base/hashes"))
     // caption half: the 240-item caption table accretes epoch-keyed
     PinnedMediaMath.crossModalCaptions(spark)
       .repartition(6).write.mode("overwrite").parquet(s"$base/cap_src")
-    drain(s"$base/cap_src", "item_id BIGINT, caption STRING",
+    drainInto(fileBatches(spark, s"$base/cap_src",
+        "item_id BIGINT, caption STRING"),
       (b: DataFrame, epochId: Long) => b.write.mode("overwrite")
         .parquet(s"$base/captions/epoch=$epochId"))
     // the closure over the two accreted spools — mm17's machinery;
@@ -1508,24 +1406,6 @@ object Streams {
       .orderBy("item_id")
   }
 
-  /** w30's gate: media payloads arriving through the CONNECTOR source —
-    * w22's recovery semantics married to the fused multimodal pipeline
-    * (r16 verdict item 8). The planted image corpus lands in the sim
-    * org as base64 `Body__c` strings (the Salesforce-faithful wire
-    * shape for binary fields); the PK-cursor micro-batch source streams
-    * them under a small admission cap; each micro-batch decodes base64
-    * and runs the FUSED bytes→pHash kernel into the epoch-idempotent
-    * hash spool ([[mediaPhashBatch]]). Run 1 is STOPPED mid-backfill
-    * with most rows unread; the duplicates half lands while the stream
-    * is down; run 2 restarts from the same checkpoint and drains. The
-    * final banded Hamming join must equal mm14's oracle verbatim —
-    * which only happens if the restart resumed the checkpointed Id
-    * cursor (a reset cursor re-hashes run 1's pages into LATER epochs:
-    * harmless for the union-shaped spool, but a skipped-ahead cursor
-    * loses unread media and their pairs) AND the connector-side decode
-    * + fused hash is bit-identical to the fixture replay. GATE-ONLY
-    * scope: production callers point [[mediaPhashBatch]]'s foreachBatch
-    * at their own connector stream. */
   /** Build + register the w30 media sim-org under `orgName`, recipe
     * provider wired for executor-side rebuild; returns the landing
     * function (inserts in the org's ≤200-row chunk contract). ONE copy
@@ -1544,14 +1424,29 @@ object Streams {
       simOrg.insert("Media__c", chunk, MediaOrgRecipe.schema))
   }
 
+  /** w30's gate: media payloads arriving through the CONNECTOR source —
+    * w22's recovery semantics married to the fused multimodal
+    * pipeline. The planted image corpus lands in the sim
+    * org as base64 `Body__c` strings (the Salesforce-faithful wire
+    * shape for binary fields); the PK-cursor micro-batch source streams
+    * them under a small admission cap; each micro-batch decodes base64
+    * and runs the FUSED bytes→pHash kernel into the epoch-idempotent
+    * hash spool ([[mediaPhashBatch]]). Run 1 is STOPPED mid-backfill
+    * with most rows unread; the duplicates half lands while the stream
+    * is down; run 2 restarts from the same checkpoint and drains. The
+    * final banded Hamming join must equal mm14's oracle verbatim —
+    * which only happens if the restart resumed the checkpointed Id
+    * cursor (a reset cursor re-hashes run 1's pages into LATER epochs:
+    * harmless for the union-shaped spool, but a skipped-ahead cursor
+    * loses unread media and their pairs) AND the connector-side decode
+    * + fused hash is bit-identical to the fixture replay. GATE-ONLY
+    * scope: production callers point [[mediaPhashBatch]]'s foreachBatch
+    * at their own connector stream. */
   private[graft] def mediaConnectorStreamGate(spark: SparkSession,
       maxHamming: Int): DataFrame = {
     import graft.sources.MediaOrgRecipe
-    val seq = gateRunSeq.incrementAndGet()
-    val orgName = s"w30_org_$seq"
-    val base = java.nio.file.Files
-      .createTempDirectory(s"w30_gate_${seq}_").toFile.getAbsolutePath
-    val outDir = s"$base/hashes"
+    val orgName = s"w30_org_${gateRunSeq.incrementAndGet()}"
+    val base = gateDir("w30_gate")
     val land = buildMediaOrg(orgName)
     val rows = MediaOrgRecipe.rows
     // originals land before the crash; the re-keyed duplicates land
@@ -1559,26 +1454,12 @@ object Streams {
     // restart and exists only if the cursor resumed correctly
     val (h1, h2) = rows.splitAt(rows.length / 2)
     val cap = 16 // 80 originals / 16 = 5 micro-batches in run 1
-    def stream = mediaConnectorSinkStream(spark, orgName, base, cap)
     land(h1)
-    // run 1: free-running, stopped after a few commits with most of the
-    // backfill unread (w22's adaptive kill point)
-    val q1 = stream.start()
-    val targetBatch =
-      math.min(2L, math.ceil(h1.length.toDouble / cap).toLong - 1)
-    def admitted: Long = q1.recentProgress.map(_.numInputRows).sum
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while ((q1.lastProgress == null ||
-          (q1.lastProgress.batchId < targetBatch && admitted < h1.length)) &&
-        q1.isActive && System.nanoTime() < deadline)
-      Thread.sleep(25)
-    q1.stop()
-    q1.awaitTermination()
-    land(h2) // the duplicates land while the stream is down
-    val q2 = stream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q2.awaitTermination() // resume the Id cursor, drain to the end
-    mediaSpoolPairs(spark, outDir, maxHamming)
+    stopMidBackfillThenDrain(
+      () => mediaConnectorSinkStream(spark, orgName, base, cap), h1.length, cap) {
+      land(h2) // the duplicates land while the stream is down
+    }
+    mediaSpoolPairs(spark, s"$base/hashes", maxHamming)
   }
 
   /** The connector media stream both w30 recovery tests share: the
@@ -1692,13 +1573,6 @@ object Streams {
     epochDirs.foreach(fs.delete(_, true))
   }
 
-  /** Forked-JVM child of the HARD-KILL w30 variant: build the media
-    * org with the ORIGINALS half landed, free-run the connector media
-    * stream against the checkpoint/spool under `base`, and never
-    * return — the parent `destroyForcibly`s this process mid-batch, so
-    * a spool epoch dir can die HALF-WRITTEN with no clean abort (the
-    * torn-parquet window the epoch-keyed overwrite must absorb on
-    * replay). */
   /** Admission cap for the w30 HARD-KILL pair (child free-run + the
     * suite's mid-backfill guard): 4 rows/batch → 20 micro-batches for
     * the originals half, so the parent's poll-detect-kill latency after
@@ -1708,6 +1582,13 @@ object Streams {
     * its drain math from THIS constant. */
   private[graft] val MediaCrashCap = 4
 
+  /** Forked-JVM child of the HARD-KILL w30 variant: build the media
+    * org with the ORIGINALS half landed, free-run the connector media
+    * stream against the checkpoint/spool under `base`, and never
+    * return — the parent `destroyForcibly`s this process mid-batch, so
+    * a spool epoch dir can die HALF-WRITTEN with no clean abort (the
+    * torn-parquet window the epoch-keyed overwrite must absorb on
+    * replay). */
   private[graft] def mediaCrashChildRun(spark: SparkSession,
       base: String): Unit = {
     import graft.sources.MediaOrgRecipe
@@ -1731,9 +1612,7 @@ object Streams {
   def streamingIndexIngestGate(spark: SparkSession,
       embPath: String): DataFrame = {
     import graft.functions.VectorOps
-    val path = java.nio.file.Files
-      .createTempDirectory(s"w20_index_${gateRunSeq.incrementAndGet()}_")
-      .toString
+    val path = gateDir("w20_index")
     val emb = spark.read.parquet(embPath)
     VectorOps.buildPinnedIvfIndex(emb.where(col("vec_id") < 16),
       "vec_id", "embedding", nlist = 16, path = path)
@@ -1745,16 +1624,11 @@ object Streams {
     // fresh per-run root => fresh lineage (a durable-checkpoint caller
     // derives it from the checkpoint instead: VectorOps.lineageOfCheckpoint)
     val lineage = java.util.UUID.randomUUID().toString
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-keyed overwrite, NOT blind append: foreachBatch is
-        // at-least-once, so a retried batch must replace itself
-        VectorOps.appendPinnedIvfIndexBatch(batch, "vec_id", "embedding",
-          path, batchId, lineage)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainInto(stream, (batch: DataFrame, batchId: Long) =>
+      // batch-keyed overwrite, NOT blind append: foreachBatch is
+      // at-least-once, so a retried batch must replace itself
+      VectorOps.appendPinnedIvfIndexBatch(batch, "vec_id", "embedding",
+        path, batchId, lineage))
     VectorOps.queryPinnedIvfIndex(spark, path,
       emb.where(col("vec_id") < 20), "vec_id", "embedding",
       k = 5, nprobe = 6)
@@ -1776,9 +1650,7 @@ object Streams {
   def streamingIndexMaintainGate(spark: SparkSession,
       embPath: String): DataFrame = {
     import graft.functions.VectorOps
-    val path = java.nio.file.Files
-      .createTempDirectory(s"w23_index_${gateRunSeq.incrementAndGet()}_")
-      .toString
+    val path = gateDir("w23_index")
     val emb = spark.read.parquet(embPath)
     VectorOps.buildPinnedIvfIndex(emb.where(col("vec_id") < 16),
       "vec_id", "embedding", nlist = 16, path = path)
@@ -1786,16 +1658,12 @@ object Streams {
     val stream = eventStream(spark, embPath, Some(1))
       .where(col("vec_id") >= 16)
     val lineage = java.util.UUID.randomUUID().toString
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        VectorOps.appendPinnedIvfIndexBatch(batch, "vec_id", "embedding",
-          path, batchId, lineage)
-        VectorOps.deleteFromPinnedIvfIndex(batch.where(isDoomed),
-          "vec_id", path)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainInto(stream, { (batch: DataFrame, batchId: Long) =>
+      VectorOps.appendPinnedIvfIndexBatch(batch, "vec_id", "embedding",
+        path, batchId, lineage)
+      VectorOps.deleteFromPinnedIvfIndex(batch.where(isDoomed),
+        "vec_id", path)
+    })
     VectorOps.compactPinnedIvfIndex(spark, path)
     VectorOps.queryPinnedIvfIndex(spark, path,
       emb.where(col("vec_id") < 20), "vec_id", "embedding",
@@ -1858,17 +1726,23 @@ object Streams {
   def migrateStream(
       stream: DataFrame,
       spec: graft.spec.MappingSpec,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
+      trigger: Option[Trigger] = None)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = migrateWriter(stream, spec)(sink)
+    trigger.fold(writer)(writer.trigger).start()
+  }
+
+  /** [[migrateStream]]'s unstarted writer; m11's gate drives it through
+    * [[runToEnd]]. */
+  private def migrateWriter(stream: DataFrame, spec: graft.spec.MappingSpec)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val out = graft.compile.MappingCompiler.destinationRows(
           spec.whereExpr.map(w => batch.where(expr(w))).getOrElse(batch), spec)
         sink(out, id)
       }
-    trigger.fold(writer)(writer.trigger).start()
-  }
 
   /** m11's gate: the reference's OWN pipeline — extract → where →
     * rename/enrich projection → created-ID write-back pairing (the m02
@@ -1885,16 +1759,13 @@ object Streams {
   def migrateStreamGate(spark: SparkSession, srcPath: String,
       spec: graft.spec.MappingSpec, dress: DataFrame => DataFrame,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_m11_sink_").toString
+    val outDir = gateDir("m11_sink")
     val stream = dress(eventStream(spark, srcPath, maxFilesPerTrigger))
-    val q = migrateStream(stream, spec,
-      Some(org.apache.spark.sql.streaming.Trigger.AvailableNow())) { (out, _) =>
+    runToEnd(migrateWriter(stream, spec) { (out, _) =>
       val created = out.withColumn("Id", concat(lit("D"), col("old_id")))
       graft.compile.MappingCompiler.writeBackRows(created, spec)
         .write.mode("append").parquet(outDir)
-    }
-    q.awaitTermination()
+    })
     spark.read.parquet(outDir)
   }
 
@@ -1921,14 +1792,7 @@ object Streams {
       key = "user_id", leftTs = "click_ts", rightTs = "view_ts",
       maxDelay = maxDelay, lateness = lateness)
       .select(col("user_id"), col("view_id"), col("click_id"))
-    val sink = s"w11_gate_${gateRunSeq.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(joined, "w11", OutputMode.Append)
   }
 
   /** w14's gate: LEFT OUTER stream-stream interval join — the
@@ -1957,14 +1821,7 @@ object Streams {
           l.col("click_ts") <= r.col("view_ts") + expr(s"INTERVAL $maxDelay"),
         "left_outer")
       .select(l("user_id"), col("view_id"), col("click_id"))
-    val sink = s"w14_gate_${gateRunSeq.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(joined, "w14", OutputMode.Append)
   }
 
   /** w12's gate: [[dedupWithinWatermark]] —
@@ -1989,14 +1846,7 @@ object Streams {
       keys = Seq("user_id", "event_type", "minute_ms"),
       tsCol = "ts", lateness = lateness)
       .select(col("user_id"), col("event_type"), col("minute_ms"))
-    val sink = s"w12_gate_${gateRunSeq.incrementAndGet()}"
-    val q = deduped.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    toMemory(deduped, "w12", OutputMode.Append)
   }
 
   /** Streaming near-dup detection against a STANDING corpus — the

@@ -190,6 +190,36 @@ class BulkApiOrgSuite extends AnyFunSuite {
     assert(http.calls(1)._3 == """[{"Id":"A1"},{"Id":"A2"}]""")
   }
 
+  test("a delete over the batch cap posts one job per 10,000 records") {
+    // each job's result echoes its own batch payload's Ids, so the count
+    // only reaches 10,001 if every slice ran and the results concatenate
+    var jobN = 0
+    lazy val http: ScriptedHttp = new ScriptedHttp({
+      case ("POST", u) if u == s"$async/job" =>
+        jobN += 1; (201, s"""{"id": "J$jobN"}""")
+      case ("POST", u) if u.endsWith("/batch") => (201, s"""{"id": "B$jobN"}""")
+      case ("POST", u) if u.matches(s"$async/job/J\\d+") =>
+        (200, """{"state": "Closed"}""")
+      case ("GET", u) if u.matches(s"$async/job/J\\d+/batch/B\\d+") =>
+        (200, """{"state": "Completed"}""")
+      case ("GET", u) if u.endsWith("/result") =>
+        val payload = http.calls.filter(_._2.endsWith("/batch")).last._3
+        val ids = "\"Id\":\"([^\"]+)\"".r.findAllMatchIn(payload).map(_.group(1))
+        (200, ids.map(id => s"""{"id": "$id", "success": true}""")
+          .mkString("[", ",", "]"))
+    })
+    val org = new BulkApiOrg(tok, http, sleeper = _ => ())
+    val ids = (0 to 10000).map(i => f"A$i%05d")
+    assert(org.delete("Account", ids) == 10001)
+    val batches = http.calls.filter(_._2.endsWith("/batch")).map(_._3)
+    assert(batches.size == 2, s"${batches.size} batches posted")
+    val sent = batches.map(b => "\"Id\":\"([^\"]+)\"".r.findAllMatchIn(b)
+      .map(_.group(1)).toSeq)
+    assert(sent.forall(_.size <= BulkApiOrg.MaxBatchRecords),
+      sent.map(_.size).toString)
+    assert(sent.flatten == ids, "slices must keep row order")
+  }
+
   test("failed batch state surfaces as an error, not an empty result") {
     val http = new ScriptedHttp({
       case ("POST", u) if u == s"$async/job" => (201, """{"id": "J1"}""")

@@ -1329,6 +1329,27 @@ class StreamingSuite extends SparkSuite {
     }
   }
 
+  test("w22/w30 gates: stopped mid-backfill, restarted, every row once") {
+    // the two gates that share the stop-mid-backfill-then-drain runner:
+    // w22's sink must hold the customer projection exactly once (a reset
+    // cursor duplicates run 1's pages, a skipped-ahead one loses the
+    // unread gap), and w30's pair set must equal mm14's pinned answer
+    import graft.multimodal.PinnedMediaMath
+    val customerPath = "/root/testdata/sf0.001/customer.parquet"
+    val got = Streams.connectorRecoveryGate(spark, customerPath)
+    val keys = got.select("c_custkey").as[Long].collect().toSeq
+    assert(keys.distinct.size == keys.size,
+      s"${keys.size - keys.distinct.size} duplicate c_custkey rows")
+    val want = spark.read.parquet(customerPath).select(col("c_custkey"),
+      col("c_name"), col("c_nationkey").cast("long"))
+    assert(Streams.rowsOfSorted(got) == Streams.rowsOfSorted(want),
+      s"got ${keys.size} rows, want ${want.count()}")
+    val pairs = Streams.rowsOfSorted(
+      Streams.mediaConnectorStreamGate(spark, maxHamming = 4))
+    assert(pairs.nonEmpty && pairs == Streams.rowsOfSorted(
+      PinnedMediaMath.imageNearDupPinned(spark, maxHamming = 4)))
+  }
+
   test("w22 hard-kill: SIGKILLed connector stream resumes its Id cursor exactly") {
     // upgrade of the gate's cooperative stop() (VERDICT r11 stretch):
     // run 1 happens in a FORKED JVM that is destroyForcibly'd (SIGKILL)

@@ -47,7 +47,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // a filtered run writes only the oracles of the queries it ran, so
+    // check.py over its outDir can read 0 fail
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Failed queries are silently ABSENT from the correctness artifact

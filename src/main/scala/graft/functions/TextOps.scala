@@ -200,15 +200,23 @@ object TextOps {
     * callers cache it so the corpus-sized explode runs once per query
     * instead of once per consumer (measured: the guard's own pass was
     * the bulk of its +0.19 s d02 steady-state cost). */
-  private[graft] def shingleFreq(sh: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    val hashed = sh.schema("__sh").dataType match {
-      case ArrayType(LongType, _) => col("__sh")
-      case _ => array_distinct(transform(col("__sh"), s => xxhash64(s)))
-    }
-    sh.select(explode(hashed).as("__s"))
+  private[graft] def shingleFreq(sh: DataFrame): DataFrame =
+    hashedForm(sh).select(explode(col("__sh")).as("__s"))
       .groupBy(col("__s")).agg(count(lit(1)).as("__df"))
       .select(col("__s").as("__sf"), col("__df"))
+
+  /** `sh` with `__sh` in hash space: [[hashedShingleSets]] output
+    * (array<bigint>) passes through untouched — re-hashing every element
+    * per row would double the projection cost of the hottest stage for
+    * nothing — and string sets (tests, ad-hoc callers) are hashed to
+    * distinct 64-bit keys. */
+  private def hashedForm(sh: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    sh.schema("__sh").dataType match {
+      case ArrayType(LongType, _) => sh
+      case _ => sh.select(col("__id"),
+        array_distinct(transform(col("__sh"), s => xxhash64(s))).as("__sh"))
+    }
   }
 
   /** Σdf² over a [[shingleFreq]] frame — the window-free PPJoin mass
@@ -221,34 +229,9 @@ object TextOps {
         sum(col("__df").cast("double") * col("__df")), lit(0.0)))
       .head().getDouble(0).toLong
 
-  /** EXACT raw matched rows of the containment probe join: Σ over
-    * probe-prefix rows of that shingle's global document frequency
-    * (the index side IS the full inverted index). One aggregation over
-    * the probe frame — evaluated only past [[shingleDfSquaredMass]]'s
-    * short-circuit, where it re-derives the rank window once. */
-  def prefixDfMassBound(prefix: DataFrame): Long =
-    prefix.agg(coalesce(sum(col("__df").cast("double")), lit(0.0)))
-      .head().getDouble(0).toLong
-
-  /** EXACT raw row count the [[prefixCandidates]] bucket join
-    * materializes before its pruning predicates: Σ over shingle hashes
-    * of probeCount·indexCount (non-equi prunes are evaluated per
-    * matched row, so the equi-key match count IS the join's work).
-    * `idxPred` marks the index-subset rows. ONE partial-aggregating
-    * pass over the cached prefix frame. */
-  def ppjoinCandidateMass(prefix: DataFrame, idxPred: Column): Long =
-    prefix.withColumn("__ii", idxPred.cast("long"))
-      .groupBy(col("__s"))
-      .agg(count(lit(1)).as("__cp"), sum(col("__ii")).as("__ci"))
-      // double BEFORE the multiply: the per-bucket product can exceed
-      // Long at exactly the scale the guard exists for
-      .agg(coalesce(
-        sum(col("__cp").cast("double") * col("__ci")), lit(0.0)))
-      .head().getDouble(0).toLong
-
   /** Remedy text of the PPJoin prefix guard (r18 verdict item 3: guard
     * parity — a boilerplate-flooded corpus must not launch a silent n²
-    * PPJoin). Both call sites pass the window-free
+    * PPJoin). [[PrefixJoin]] passes the window-free
     * [[shingleDfSquaredMass]] bound (one narrow pass over the cached df
     * table) to [[GuardConf.check]], so only past it does the exact mass
     * (one pass that re-derives the prefix rank window) decide. */
@@ -261,21 +244,116 @@ object TextOps {
       "(dedupExact, d01) to collapse the verbatim mass, or raise the " +
       "similarity threshold (shorter prefixes)."
 
-  /** Candidate pairs from the prefix index: hash each shingle to 64 bits,
-    * explode, compute global document frequency (one aggregation), keep
-    * each doc's `|S| - ceil(t*|S|) + 1` rarest shingles, self-join on the
-    * hash with the size-compatibility prune (jac >= t implies t|A| <=
-    * |B| <= |A|/t). Exact-recall superset of the >= t pairs.
+  /** The candidate generator of the PPJoin family: d02/d06/p01 through
+    * [[prefixCandidates]], d16 through [[containmentPairs]] and the
+    * ScaleCheck face [[ppjoinMassProbe]]; each keeps its own verify.
+    * Every document's shingles are ranked rarest first by (`__df`,
+    * `__s`), a total order identical across documents, as the prefix
+    * principle needs. The first `probeLen` (over the set size `__n`)
+    * form the probe prefix; the index is the first `indexLen` of each
+    * prefix, or with `None` the full inverted index. All in hash space:
+    * every shuffled row carries an 8-byte key, not the shingle string
+    * (2-4x fewer shuffle bytes), and sizes and frequencies come from the
+    * hashed sets, so a collision only merges elements and every
+    * string-space qualifying pair survives.
     *
-    * The ENTIRE candidate stage runs in hash space: every shuffled row
-    * carries an 8-byte key instead of the shingle string (2-4x fewer
-    * shuffle bytes — the dominant cost at corpus scale). Correctness is
-    * one-sided: set sizes and frequencies are computed over the hashed
-    * sets themselves, so hash-Jaccard >= string-Jaccard (collisions only
-    * merge elements) and every string-space qualifying pair survives the
-    * filter. On the [[hashedShingleSets]] path [[verifyJaccard]] also
-    * runs in hash space, so a collision can nudge the final jac by at
-    * most ~1/|S| with probability ~|S|²/2⁶⁴ per pair (vanishing — see
+    * The guard mode is read ONCE, before anything is cached (ADVICE
+    * r20: a conf flip between two reads could strand a cache). One
+    * [[shingleFreq]] pass serves the guard's Σdf² bound and the rank
+    * window; it is cached (vocab-sized) only when the guard will read
+    * it, and the bound's aggregation materializes it, so `off` pays no
+    * extra job. The prefix frame stays UNCACHED: both join sides reuse
+    * the rank window's exchange, and caching it was measured +35% on
+    * the d02/d06/d16 family at sf5.0. */
+  private[graft] final class PrefixJoin(sh: DataFrame, probeLen: Column,
+      indexLen: Option[Column]) {
+    import org.apache.spark.sql.expressions.Window
+    private val spark = sh.sparkSession
+    private val mode = GuardConf.mode(spark, PpjoinGuardKey)
+    private val freq =
+      if (mode == "off") shingleFreq(sh) else shingleFreq(sh).cache()
+    private val ex = hashedForm(sh).select(col("__id"),
+      size(col("__sh")).as("__n"), explode(col("__sh")).as("__s"))
+    // __rk is kept for the positional bound; __df rides along for the
+    // full index's exact mass
+    private val probe = ex.join(freq, col("__s") === col("__sf"))
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy(col("__id")).orderBy(col("__df"), col("__s"))))
+      .where(col("__rk") <= probeLen)
+      .select(col("__id"), col("__n"), col("__s"), col("__rk"), col("__df"))
+    private val index = indexLen.fold(ex)(len => probe.where(col("__rk") <= len))
+
+    /** The cached df table, for the caller to release once its verify
+      * has materialized (None with the guard off: nothing is cached). */
+    def cachedFreq: Option[DataFrame] =
+      if (mode == "off") None else Some(freq)
+
+    /** The guard's window-free bound: Σdf² over the df table. */
+    def bound: Long = dfSquaredMassOf(freq)
+
+    /** The guard's exact mass: the rows the join matches on the
+      * shingle hash before any prune (prunes are evaluated per matched
+      * row, so this IS the join's work), Σ over shingle hashes of probe
+      * rows × index rows. A prefix cut counts its index rows among the
+      * probe rows; the full index holds df(s) rows of shingle s, so
+      * there the mass is Σ df over the probe rows. One
+      * partial-aggregating pass. */
+    def mass: Long = probe.groupBy(col("__s"))
+      .agg(count(lit(1)).as("__cp"), indexLen.fold(max(col("__df")))(
+        len => sum((col("__rk") <= len).cast("long"))).as("__ci"))
+      // double BEFORE the multiply: the per-bucket product can exceed
+      // Long at exactly the scale the guard exists for
+      .agg(coalesce(
+        sum(col("__cp").cast("double") * col("__ci")), lit(0.0)))
+      .head().getDouble(0).toLong
+
+    /** The guarded probe×index join. [[GuardConf.check]] runs first (a
+      * refusal releases the df cache); then the probe side, as `id_p`,
+      * `n_p`, `__s_p` (and `rk_p` under a prefix cut) for `p`, joins the
+      * index side, named the same way for `i` with `__s_i`, on the
+      * shingle hash under `prune`. Distinct names per side:
+      * Column-equality on the same lineage trips Spark's
+      * ambiguous-self-join fixup (and its warning). A pair sharing
+      * several qualifying shingles appears once per shingle. */
+    def join(p: String, i: String, prune: Column, what: String): DataFrame = {
+      GuardConf.check(spark, PpjoinGuard, mode, bound.toDouble, mass,
+        ppjoinRefusal(what), freq.unpersist())
+      def side(df: DataFrame, r: String, s: String) = df.select(Seq(
+        col("__id").as(s"id_$r"), col("__n").as(s"n_$r"),
+        col("__s").as(s"__s_$s")) ++
+        indexLen.map(_ => col("__rk").as(s"rk_$r")): _*)
+      side(probe, p, "p").join(side(index, i, "i"),
+        col("__s_p") === col("__s_i") && prune)
+    }
+  }
+
+  private[graft] object PrefixJoin {
+    /** The PPJoin shape at Jaccard threshold `t`: probe prefix
+      * `|S| - ceil(t|S|) + 1` (the classic prefix filter) and the PPJoin
+      * role split (Xiao et al. 2008) — for a qualifying pair the
+      * size-SMALLER record is guaranteed a shared token inside its
+      * shorter INDEX prefix `|S| - ceil(2t/(1+t)|S|) + 1`, matched
+      * against the larger record's probe prefix, so only that sliver of
+      * the smaller side enters the join. */
+    def jaccard(sh: DataFrame, t: Double): PrefixJoin =
+      new PrefixJoin(sh, col("__n") - ceil(lit(t) * col("__n")) + 1,
+        Some(col("__n") - ceil(lit(2 * t / (1 + t)) * col("__n")) + 1))
+
+    /** The asymmetric containment shape at threshold `t`: the contained
+      * side's `ceil((1-t)|A|) + 1` rarest shingles probe the full
+      * inverted index (containment puts no upper bound on |B|). */
+    def containment(sh: DataFrame, t: Double): PrefixJoin =
+      new PrefixJoin(sh, ceil(lit(1 - t) * col("__n")) + 1, None)
+  }
+
+  /** Candidate pairs from the prefix index ([[PrefixJoin.jaccard]]):
+    * keep each doc's `|S| - ceil(t*|S|) + 1` rarest shingles, join on
+    * the hash with the size-compatibility prune (jac >= t implies
+    * t|A| <= |B| <= |A|/t) and the positional overlap bound.
+    * Exact-recall superset of the >= t pairs. On the
+    * [[hashedShingleSets]] path [[verifyJaccard]] also runs in hash
+    * space, so a collision can nudge the final jac by at most ~1/|S|
+    * with probability ~|S|²/2⁶⁴ per pair (vanishing — see
     * hashedShingleSets); string-form inputs get the exact string verify.
     *
     * Output MAY CONTAIN DUPLICATE (id_a, id_b) rows — one per qualifying
@@ -297,44 +375,7 @@ object TextOps {
   private[graft] def prefixCandidatesAndFreq(sh: DataFrame,
       threshold: Double): (DataFrame, Option[DataFrame]) = {
     val t = threshold
-    // ONE explode+groupBy pass serves BOTH the guard's window-free Σdf²
-    // bound and the prefix frame's rank window: the df table is cached
-    // (vocab-sized — two longs per distinct shingle hash, orders of
-    // magnitude smaller than the occurrence stream it aggregates), and
-    // the guard's bound aggregation is what materializes it. With the
-    // guard off no bound runs, so the table stays uncached and the
-    // prefix frame computes it in-line exactly as before (off pays zero
-    // extra jobs). The PREFIX frame itself stays deliberately UNCACHED:
-    // both join sides derive from it, but the rank window's shuffle is
-    // exchange-reused while a 20M-row columnar cache write is not free —
-    // caching it was measured +35% on the whole d02/d06/d16 family at
-    // sf5.0 (and only ~-1s at sf0.1), so the scale shape wins.
-    val guardMode = GuardConf.mode(sh.sparkSession, PpjoinGuardKey)
-    val guardOff = guardMode == "off"
-    val freq =
-      if (guardOff) shingleFreq(sh) else shingleFreq(sh).cache()
-    val prefix = ppjoinPrefixFrame(sh, t, freq)
-    // PPJoin role split (Xiao et al. 2008): for a qualifying pair the
-    // size-SMALLER record is guaranteed a shared token inside its shorter
-    // INDEX prefix (|S| - ceil(2t/(1+t)|S|) + 1) matched against the
-    // larger record's probe prefix — so only that sliver of the smaller
-    // side enters the join. Roles use the (size, id) total order so
-    // equal-size pairs keep exactly one orientation.
-    val idxLen = col("__n") - ceil(lit(2 * t / (1 + t)) * col("__n")) + 1
-    // a refusal must not strand the just-materialized df cache (the
-    // shingle-cache discipline in every caller applies here too)
-    GuardConf.check(sh.sparkSession, PpjoinGuard, guardMode,
-      dfSquaredMassOf(freq).toDouble,
-      ppjoinCandidateMass(prefix, col("__rk") <= idxLen),
-      ppjoinRefusal(f"ngramJaccardPairs(threshold=$t%.2f)"),
-      freq.unpersist())
-    // distinct key names per side: Column-equality on the same lineage
-    // trips Spark's ambiguous-self-join fixup (and its warning)
-    val probe = prefix.select(col("__id").as("id_p"), col("__n").as("n_p"),
-      col("__s").as("__s_p"), col("__rk").as("rk_p"))
-    val index = prefix.where(col("__rk") <= idxLen)
-      .select(col("__id").as("id_i"), col("__n").as("n_i"),
-        col("__s").as("__s_i"), col("__rk").as("rk_i"))
+    val pj = PrefixJoin.jaccard(sh, t)
     // overlap form of the threshold: jac >= t  <=>  |A∩B| >= t/(1+t)(|A|+|B|)
     val needed = ceil(lit(t / (1 + t)) * (col("n_p") + col("n_i")))
     // positional upper bound on the overlap given a match at ranks
@@ -347,17 +388,19 @@ object TextOps {
     // the candidate stream buying a 5% row reduction; the caller's
     // verify tolerates duplicates and dedups its (threshold-surviving,
     // orders-of-magnitude smaller) output instead
-    val cands = probe.join(index,
-      col("__s_p") === col("__s_i") &&
-        // index side is the (size, id)-smaller record
+    val cands = pj.join("p", "i",
+        // index side is the (size, id)-smaller record: roles use the
+        // (size, id) total order so equal-size pairs keep exactly one
+        // orientation
         (col("n_i") < col("n_p") ||
           (col("n_i") === col("n_p") && col("id_i") < col("id_p"))) &&
         // size compatibility: t*|A| <= |B| <= |A|
         col("n_i") >= lit(t) * col("n_p") &&
-        ubound >= needed)
+        ubound >= needed,
+        f"ngramJaccardPairs(threshold=$t%.2f)")
       .select(least(col("id_p"), col("id_i")).as("id_a"),
         greatest(col("id_p"), col("id_i")).as("id_b"))
-    (cands, if (guardOff) None else Some(freq))
+    (cands, pj.cachedFreq)
   }
 
   /** Directed shingle CONTAINMENT pairs: `C(A→B) = |Sh(A) ∩ Sh(B)| /
@@ -367,11 +410,12 @@ object TextOps {
     * two-measure framing; the dedup policy usually drops the CONTAINED
     * side.
     *
-    * Candidate stage: prefix filter on the contained side only — A must
-    * share one of its `ceil((1-t)|A|)+1` RAREST shingles with B (the
-    * asymmetric prefix principle; containment puts no upper bound on
-    * |B|, so the container side is the full inverted index with just
-    * the `|B| >= t|A|` size prune). Rarest-first prefixes keep stop
+    * Candidate stage ([[PrefixJoin.containment]]): prefix filter on the
+    * contained side only — A must share one of its `ceil((1-t)|A|)+1`
+    * RAREST shingles with B (the asymmetric prefix principle;
+    * containment puts no upper bound on |B|, so the container side is
+    * the full inverted index with just the `|B| >= t|A|` size prune).
+    * Rarest-first prefixes keep stop
     * shingles out of the probe, which is what bounds the join fan-out
     * at corpus scale. Verify is exact: the codegen two-pointer
     * intersect over the sorted hash sets, permille-floored integral
@@ -384,40 +428,9 @@ object TextOps {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double,
       releaseCaches: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = threshold
     val sh = hashedShingleSets(df, idCol, textCol, n).cache()
     sh.count() // eager: prefix, index, and both verify sides read it
-    val ex = sh.select(col("__id"), size(col("__sh")).as("__n"),
-      explode(col("__sh")).as("__s"))
-    // ONE explode+groupBy pass serves the guard's Σdf² bound and the
-    // probe prefix's rank window (the prefixCandidates shape): cached
-    // because it is vocab-sized; with the guard off no bound runs and
-    // the table stays uncached, in-line, as before. Mode is read ONCE
-    // and passed to the guard (ADVICE r20: a conf flip between the two
-    // reads could strand an unmaterialized cache).
-    val guardMode = GuardConf.mode(sh.sparkSession, PpjoinGuardKey)
-    val guardOff = guardMode == "off"
-    val freq =
-      if (guardOff) shingleFreq(sh) else shingleFreq(sh).cache()
-    val w = Window.partitionBy(col("__id")).orderBy(col("__df"), col("__s"))
-    // __df rides along: containment's index side is the FULL inverted
-    // index, so Σ df over probe rows IS the join's exact raw matched-
-    // row count when the guard's window-free bound doesn't clear.
-    // The probe frame itself stays deliberately UNCACHED (the
-    // prefixCandidates measurement).
-    val probe = ex.join(freq, col("__s") === col("__sf"))
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") <= ceil(lit(1 - t) * col("__n")) + 1)
-      .select(col("__id").as("id_a"), col("__n").as("n_a"),
-        col("__s").as("__s_p"), col("__df"))
-    val index = ex.select(col("__id").as("id_b"), col("__n").as("n_b"),
-      col("__s").as("__s_i"))
-    // a refusal must not strand the shingle or df caches
-    GuardConf.check(sh.sparkSession, PpjoinGuard, guardMode,
-      dfSquaredMassOf(freq).toDouble, prefixDfMassBound(probe),
-      ppjoinRefusal(f"containmentPairs(threshold=$t%.2f)"),
-      { sh.unpersist(); freq.unpersist() })
     // size prune in the SAME integer-permille arithmetic as the verify
     // stage below: a double-rounded ceil(t*n_a) can be one stricter than
     // the permille compare at representation boundaries, dropping a pair
@@ -426,16 +439,19 @@ object TextOps {
     // NO pre-verify distinct (the prefixCandidates measurement: 1.04
     // multiplicity at sf0.1 — the distinct's full candidate-stream
     // shuffle bought a 4% row reduction); duplicates verify
-    // idempotently and the dedup runs over the qualifying pairs
-    val cand = probe.join(index,
-        col("__s_p") === col("__s_i") && col("id_a") =!= col("id_b") &&
-          // long arithmetic: n_b is a 32-bit size() and n_b * 1000 would
-          // wrap for >2.1M-shingle documents, silently dropping pairs
-          col("n_b").cast("long") * 1000L >= lit(tPm) * col("n_a").cast("long"))
-      .select("id_a", "id_b")
-    val out = cand
-      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), "id_a")
-      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
+    // idempotently and the dedup runs over the qualifying pairs.
+    // A guard refusal must not strand the shingle cache.
+    val (cand, freq) = try {
+      val pj = PrefixJoin.containment(sh, t)
+      (pj.join("a", "b",
+          col("id_a") =!= col("id_b") &&
+            // long arithmetic: n_b is a 32-bit size() and n_b * 1000 would
+            // wrap for >2.1M-shingle documents, silently dropping pairs
+            col("n_b").cast("long") * 1000L >= lit(tPm) * col("n_a").cast("long"),
+          f"containmentPairs(threshold=$t%.2f)")
+        .select("id_a", "id_b"), pj.cachedFreq)
+    } catch { case e: Throwable => sh.unpersist(); throw e }
+    val out = withPairSets(sh, cand)
       .withColumn("__i",
         IntersectSize.column(df.sparkSession, col("__sh_a"), col("__sh_b")))
       .select(col("id_a"), col("id_b"),
@@ -444,9 +460,16 @@ object TextOps {
       .distinct()
     if (releaseCaches)
       try out.localCheckpoint(true)
-      finally { sh.unpersist(); if (!guardOff) freq.unpersist() }
+      finally { sh.unpersist(); freq.foreach(_.unpersist()) }
     else out
   }
+
+  /** Candidate (id_a, id_b) pairs joined to both sides' shingle sets
+    * (`__sh_a`, `__sh_b`) — the input of every exact verify. */
+  private def withPairSets(sh: DataFrame, pairs: DataFrame): DataFrame =
+    pairs
+      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), "id_a")
+      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against
     * the cached shingle-set table (string or hashed form); emits pairs
@@ -465,9 +488,7 @@ object TextOps {
         (a, b) => IntersectSize.column(sh.sparkSession, a, b)
       case _ => (a, b) => size(array_intersect(a, b))
     }
-    candidates
-      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), "id_a")
-      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
+    withPairSets(sh, candidates)
       .withColumn("__i", overlap(col("__sh_a"), col("__sh_b")).cast("double"))
       .select(col("id_a"), col("id_b"),
         (col("__i") /
@@ -490,8 +511,8 @@ object TextOps {
       hashedShingleSets(df, idCol, textCol, n), numHashes, bands)
 
   /** Conf key: band-bucket candidate budget for the MinHash LSH join
-    * ([[minHashCandidatesFromHashed]] — d03/d11 and the streamed w21
-    * path). Default 2e9 raw pairs: band-bucket mass tracks TRUE
+    * ([[minHashCandidatesFromHashed]] — d03; the delta×corpus band
+    * joins of d11/d23/d24 run no guard). Default 2e9 raw pairs: band-bucket mass tracks TRUE
     * near-dup density (uniform hashes collide negligibly), so the
     * budget exists for the mass-duplicated-boilerplate corpus where
     * identical documents concentrate one giant band bucket. */
@@ -509,11 +530,16 @@ object TextOps {
     MinhashGuardKey, 2000000000L, minhashGuardTrips)
 
   /** Per-doc MinHash band keys (`__id`, `__bands`) over an already-
-    * hashed shingle table — the signature stage shared by
-    * [[minHashCandidatesFromHashed]] and [[minHashMassProbe]]. One
-    * projection per stage: the band computation reads a materialized
-    * signature array instead of re-deriving the whole upstream
-    * expression per lambda element (see shingles() pitfall). */
+    * hashed shingle table — the signature stage of every MinHash
+    * operator: [[minHashCandidatesFromHashed]], [[minHashMassProbe]],
+    * [[incrementalJaccardPairs]], the signature store's appends and its
+    * delta probe. With [[minHashBucketKeys]] it is the only place that
+    * turns shingles into `(__id, __b, __key)` rows, the store's on-disk
+    * format, so a store-served probe and a compute-in-place join see the
+    * same keys by construction. One projection per stage: the band
+    * computation reads a materialized signature array instead of
+    * re-deriving the whole upstream expression per lambda element (see
+    * shingles() pitfall). */
   private def minHashBandTable(sh: DataFrame, numHashes: Int,
       bands: Int): DataFrame =
     sh.select(col("__id"),
@@ -537,59 +563,17 @@ object TextOps {
     finally sig.unpersist()
   }
 
-  /** The d02-shape prefix frame at threshold `t` over a (string or
-    * hashed) shingle table: per doc the `|S| - ceil(t|S|) + 1` globally
-    * rarest shingles with (`__id`, `__n` set size, `__s` shingle hash,
-    * `__rk` prefix rank, `__df` global document frequency). Shared by
-    * [[prefixCandidates]] and [[ppjoinMassProbe]]. */
-  private def ppjoinPrefixFrame(sh: DataFrame, t: Double): DataFrame =
-    ppjoinPrefixFrame(sh, t, shingleFreq(sh))
-
-  /** [[ppjoinPrefixFrame]] over a caller-provided (typically cached)
-    * [[shingleFreq]] table, so the guard's mass bound and the prefix
-    * window read ONE materialization of the explode+groupBy pass. */
-  private def ppjoinPrefixFrame(sh: DataFrame, t: Double,
-      freq: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    // [[hashedShingleSets]] input is ALREADY hashed (array<bigint>) — re-
-    // hashing every element per row would double the projection cost of
-    // the hottest stage for nothing
-    val hashed = sh.schema("__sh").dataType match {
-      case ArrayType(LongType, _) => col("__sh")
-      case _ => array_distinct(transform(col("__sh"), s => xxhash64(s)))
-    }
-    val ex = sh
-      .select(col("__id"), hashed.as("__hs"))
-      .select(col("__id"), size(col("__hs")).as("__n"),
-        explode(col("__hs")).as("__s"))
-    // (df asc, hash asc) is a TOTAL order, identical across docs —
-    // required for the prefix principle to hold
-    val w = Window.partitionBy(col("__id")).orderBy(col("__df"), col("__s"))
-    // probe prefix: |S| - ceil(t|S|) + 1 rarest shingles (classic prefix
-    // filter); the __rk position is kept for the positional bound; __df
-    // rides along for the guard's ~free df-sum mass bound
-    ex.join(freq, col("__s") === col("__sf"))
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") <= col("__n") - ceil(lit(t) * col("__n")) + 1)
-      .select(col("__id"), col("__n"), col("__s"), col("__rk"), col("__df"))
-  }
-
-  /** Sweep face of the PPJoin prefix guard: build the d02-shape prefix
-    * frame at (n, threshold) and return (window-free df² bound, exact
-    * mass) — the two numbers the guard consults, for ScaleCheck's
+  /** Sweep face of the PPJoin prefix guard: build the d02-shape
+    * [[PrefixJoin]] at (n, threshold) and return (window-free df² bound,
+    * exact mass) — the two numbers the guard consults, for ScaleCheck's
     * table. */
   def ppjoinMassProbe(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): (Long, Long) = {
-    val t = threshold
     val sh = hashedShingleSets(df, idCol, textCol, n).cache()
     sh.count()
-    val idxLen = col("__n") - ceil(lit(2 * t / (1 + t)) * col("__n")) + 1
-    val bound = shingleDfSquaredMass(sh)
-    val exact =
-      ppjoinCandidateMass(ppjoinPrefixFrame(sh, t), col("__rk") <= idxLen)
-    sh.unpersist()
-    (bound, exact)
+    val pj = PrefixJoin.jaccard(sh, threshold)
+    try (pj.bound, pj.mass)
+    finally { sh.unpersist(); pj.cachedFreq.foreach(_.unpersist()) }
   }
 
   /** [[minHashCandidates]] over an ALREADY-HASHED shingle table
@@ -854,8 +838,6 @@ object TextOps {
       n: Int, numHashes: Int, bands: Int, threshold: Double,
       releaseCaches: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val spark = delta.sparkSession
     // ONE shingle materialization per side (the d03 discipline): the
     // sketch derives from the cached hash sets and the exact verify
     // reads the SAME caches — the previous shape re-ran the whole
@@ -864,21 +846,15 @@ object TextOps {
     // (serial actions — no first-reader race).
     val dSh = hashedShingleSets(delta, idCol, textCol, n).cache()
     val cSh = hashedShingleSets(corpus, idCol, textCol, n).cache()
-    def bandSig(sh: DataFrame): DataFrame =
-      // cache BEFORE the explode (pushdown barrier — see minHashCandidates);
-      // EAGERLY (count()): concurrent first readers of an unpopulated cache
-      // each recompute the partition (see ngramJaccardPairs).
-      // hashed form: the signature reads [[hashedShingleSets]] longs —
-      // no shingle string is ever built on either side
-      sh.select(col("__id"),
-          MinHashSig.column(spark, col("__sh"), numHashes).as("__sig"))
-        .select(col("__id"), lshBandKeys(col("__sig"), bands, r).as("__bands"))
-        .cache()
+    // cache BEFORE the explode (pushdown barrier — see minHashCandidates);
+    // EAGERLY (count()): concurrent first readers of an unpopulated cache
+    // each recompute the partition (see ngramJaccardPairs).
+    // hashed form: the signature reads [[hashedShingleSets]] longs —
+    // no shingle string is ever built on either side
+    val dSig = minHashBandTable(dSh, numHashes, bands).cache(); dSig.count()
+    val cSig = minHashBandTable(cSh, numHashes, bands).cache(); cSig.count()
     def bandEx(sig: DataFrame, side: String): DataFrame =
-      sig.select(col("__id").as(side),
-        posexplode(col("__bands")).as(Seq("__b", "__key")))
-    val dSig = bandSig(dSh); dSig.count()
-    val cSig = bandSig(cSh); cSig.count()
+      minHashBucketKeys(sig).withColumnRenamed("__id", side)
     val candsLazy = bandEx(dSig, "id_a")
       .join(bandEx(cSig, "id_b"), Seq("__b", "__key"))
       .select(col("id_a"), col("id_b")).distinct()
@@ -1157,12 +1133,8 @@ object TextOps {
       val id = java.util.UUID.randomUUID().toString
       val staging = new org.apache.hadoop.fs.Path(s"$path/_staging_$id")
       val committed = new org.apache.hadoop.fs.Path(s"$path/batches/$id")
-      hashedShingleSets(docs, idCol, textCol, n)
-        .select(col("__id"),
-          MinHashSig.column(spark, col("__sh"), numHashes).as("__sig"))
-        .select(col("__id"),
-          posexplode(lshBandKeys(col("__sig"), bands, numHashes / bands))
-            .as(Seq("__b", "__key")))
+      minHashBucketKeys(minHashBandTable(
+        hashedShingleSets(docs, idCol, textCol, n), numHashes, bands))
         .write.parquet(staging.toString)
       fs.mkdirs(committed.getParent)
       fence.around {
@@ -1751,12 +1723,8 @@ object TextOps {
     val spark = dSh.sparkSession
     val deltaDocs = // eager: two readers below (band keys + verification)
       dSh.count()
-    val dKeys = dSh
-      .select(col("__id"),
-        MinHashSig.column(spark, col("__sh"), numHashes).as("__sig"))
-      .select(col("__id").as("id_a"),
-        posexplode(lshBandKeys(col("__sig"), bands, numHashes / bands))
-          .as(Seq("__b", "__key")))
+    val dKeys = minHashBucketKeys(minHashBandTable(dSh, numHashes, bands))
+      .withColumnRenamed("__id", "id_a")
     val (bucketedKeys, looseKeys) =
       signatureStoreKeyFrames(spark, storePath)
     // tombstone mask: the retracted-id set is usually tombstone-tiny,

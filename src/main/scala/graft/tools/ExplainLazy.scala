@@ -5,8 +5,11 @@ package graft.tools
   * release their caches via localCheckpoint, so their returned plan is
   * a checkpoint scan — the pipeline's actual physical shape (the
   * candidate join, the dedup placement, the verify joins) is only
-  * inspectable through the lazy variant. Mirrors PlanAuditSuite's
-  * audit-the-lazy-twin discipline.
+  * inspectable through the lazy variant. Both dumps show the one
+  * prefix generator, `TextOps.PrefixJoin`: the rarest-first rank window
+  * and the probe×index equi-join on the shingle hash, under d02's and
+  * d16's own prunes. Mirrors PlanAuditSuite's audit-the-lazy-twin
+  * discipline.
   *
   *   sbt "runMain graft.tools.ExplainLazy /root/testdata/sf0.1"
   */

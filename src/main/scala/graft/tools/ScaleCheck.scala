@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * and cluster sizes scale linearly instead of exploding combinatorially
   * the way naive row duplication would.
   *
+  * The `ppjoin_guard` sweep prints the two numbers the PPJoin family's
+  * guard consults, read from the one prefix generator the operators
+  * themselves use (`TextOps.PrefixJoin`, through `ppjoinMassProbe`):
+  * the window-free Σdf² bound and the exact mass, Σ over shingle hashes
+  * of probe rows × index rows.
+  *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.ScaleCheck"
   */
 object ScaleCheck {

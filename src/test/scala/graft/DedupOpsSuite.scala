@@ -436,6 +436,40 @@ class DedupOpsSuite extends SparkSuite {
     }
   }
 
+  test("ppjoin guard's exact mass equals the bare shingle-hash match of " +
+      "the probe x index join (jaccard and containment, honest and flooded)") {
+    // the guard bounds the rows the candidate join matches on the
+    // shingle hash before any non-equi prune runs, so its mass formula
+    // must count exactly those rows: a prefix cut counts index rows
+    // inside the probe frame, the full index counts them as df
+    val corpus = docs.select("doc_id", "text")
+    // a boilerplate flood: 100 verbatim copies of one document
+    val flood = corpus.orderBy("doc_id").limit(1)
+      .crossJoin(spark.range(100).toDF("__k"))
+      .select((col("__k") + 1000000000L).as("doc_id"), col("text"))
+    val masses = for {
+      (name, c) <- Seq("sf0.001" -> corpus,
+        "flooded" -> corpus.unionByName(flood))
+      (shape, t) <- Seq("jaccard" -> 0.5, "containment" -> 0.8)
+    } yield {
+      val sh = TextOps.hashedShingleSets(c, "doc_id", "text", 3).cache()
+      try {
+        val pj =
+          if (shape == "jaccard") TextOps.PrefixJoin.jaccard(sh, t)
+          else TextOps.PrefixJoin.containment(sh, t)
+        val mass = pj.mass
+        val matched = pj.join("p", "i", lit(true), shape).count()
+        assert(mass == matched,
+          s"$name $shape t=$t: guard mass $mass != $matched matched rows")
+        (name, shape) -> mass
+      } finally { sh.unpersist(); spark.catalog.clearCache() }
+    }
+    val m = masses.toMap
+    for (shape <- Seq("jaccard", "containment"))
+      assert(m(("flooded", shape)) > m(("sf0.001", shape)) + 100L * 100L,
+        s"$shape: the flood must concentrate a prefix bucket: $m")
+  }
+
   test("ppjoin success path releases every cache and emits distinct pairs") {
     // r20 verdict item 4: the guard-refusal path always unpersisted the
     // shingle+df caches; the SUCCESS path must too (repeat invocations

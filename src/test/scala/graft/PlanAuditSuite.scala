@@ -733,6 +733,86 @@ class PlanAuditSuite extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  /** The PPJoin-family candidate shape, the non-equi twin of
+    * [[assertBucketSelfJoin]]: exactly one equi-join keyed on the
+    * shingle hash (probe `__s_p` against index `__s_i`), whose condition
+    * carries every named prune, and no cartesian or nested-loop join
+    * anywhere in the plan. Each prune is a `left op right` comparison
+    * over exactly the named attribute sets. */
+  private def assertPrefixJoin(name: String,
+      df: org.apache.spark.sql.DataFrame,
+      prunes: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression => Boolean)]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    try {
+      val p = df.queryExecution.sparkPlan
+      assert(p.collect {
+        case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
+      }.isEmpty, s"$name must join on shingle hashes, never all pairs:\n$p")
+      def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        es.map { case a: Attribute => a.name; case e => e.sql }
+      val hashJoins = p.collect {
+        case j: BaseJoinExec if Set(names(j.leftKeys), names(j.rightKeys)) ==
+            Set(Seq("__s_p"), Seq("__s_i")) => j
+      }
+      assert(hashJoins.size == 1,
+        s"$name: expected one equi-join on the shingle hash:\n$p")
+      val cond = hashJoins.head.condition
+      prunes.foreach { case (what, holds) =>
+        assert(cond.exists(_.exists(holds)),
+          s"$name: the shingle-hash join must carry the $what:\n$p")
+      }
+    } finally spark.catalog.clearCache()
+  }
+
+  /** `l op r` with `l` over exactly `ls` and `r` over exactly `rs`. */
+  private def compares(ls: Set[String], rs: Set[String])(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.BinaryComparison
+    e match {
+      case c: BinaryComparison =>
+        c.left.references.map(_.name).toSet == ls &&
+          c.right.references.map(_.name).toSet == rs
+      case _ => false
+    }
+  }
+
+  test("d02: one shingle-hash equi-join carrying the index role and the size prune") {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThan}
+    val df = graft.functions.TextOps.ngramJaccardPairs(
+      graft.Tables.corpus(spark, sf), "doc_id", "text",
+      n = 3, threshold = 0.5, releaseCaches = false)
+    assertPrefixJoin("d02", df, Seq(
+      // the index side is the (size, id)-smaller record
+      "index-role predicate" -> {
+        case e: LessThan => compares(Set("n_i"), Set("n_p"))(e)
+        case _ => false
+      },
+      "index-role id tiebreak" -> {
+        case e: LessThan => compares(Set("id_i"), Set("id_p"))(e)
+        case _ => false
+      },
+      // t·|probe| <= |index|
+      "size prune" -> {
+        case e: GreaterThanOrEqual => compares(Set("n_i"), Set("n_p"))(e)
+        case _ => false
+      }))
+  }
+
+  test("d16: one shingle-hash equi-join carrying the size prune") {
+    import org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual
+    val df = graft.functions.TextOps.containmentPairs(
+      graft.Tables.corpus(spark, sf), "doc_id", "text",
+      n = 3, threshold = 0.8, releaseCaches = false)
+    assertPrefixJoin("d16", df, Seq(
+      // |container|·1000 >= t‰·|contained|
+      "size prune" -> {
+        case e: GreaterThanOrEqual => compares(Set("n_b"), Set("n_a"))(e)
+        case _ => false
+      }))
+  }
+
   test("q51: recursion executes through the UnionLoop operator") {
     val df = SparkEntry.queries("q51_recursive_cte")(spark, sf)
     val p = df.queryExecution.optimizedPlan.toString

@@ -17,9 +17,8 @@ private[graft] final case class GuardFamily(budgetKey: String,
   *
   * Budget parsing is centralized so a malformed value fails NAMED: a
   * bare `s.toLong` surfaces as a raw NumberFormatException with no hint
-  * of which conf key carried the bad value — and inside a
-  * catch-unpersist-rethrow path it was indistinguishable from a genuine
-  * guard refusal (r18 ADVICE). */
+  * of which conf key carried the bad value, indistinguishable from a
+  * genuine guard refusal (r18 ADVICE). */
 private[graft] object GuardConf {
   /** Parse the long budget at `key` (default when unset/blank). A
     * malformed value throws IllegalArgumentException naming the key and
@@ -53,37 +52,32 @@ private[graft] object GuardConf {
 
   /** The pre-flight itself. `mode` is read ONCE by the caller (ADVICE
     * r20: a conf flip between plan-build and guard execution must not
-    * strand a cache built for a guard that then never materializes it).
+    * let one call run half guarded).
     * With the mode `off` nothing runs — `bound` and `mass` are by-name,
     * so off pays zero jobs. Otherwise the budget is parsed first, then
     * the cheap worst-case `bound` short-circuits (the honest-corpus
     * steady state at every measured scale); only past it does the exact
     * `mass` decide. Over budget the family's trip counter counts it and
     * `refusal(mass, budget)` — the family's remedy text — is logged
-    * (`warn`) or thrown as IllegalStateException (`enforce`). If the
-    * guard throws for any reason (refusal, bad budget, failed mass job)
-    * `release` runs first, so no refusal strands the caller's caches. */
+    * (`warn`) or thrown as IllegalStateException (`enforce`). */
   def check(spark: SparkSession, family: GuardFamily, mode: String,
-      bound: => Double, mass: => Long, refusal: (Long, Long) => String,
-      release: => Unit): Unit =
-    if (mode != "off")
-      try {
-        val budget = GuardConf.budget(spark, family.budgetKey,
-          family.defaultBudget)
-        if (bound > budget.toDouble) {
-          val m = mass
-          if (m > budget) {
-            family.trips.incrementAndGet()
-            val msg = refusal(m, budget) +
-              s" Set ${family.modeKey}=warn to override."
-            if (mode == "warn")
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-            else throw new IllegalStateException(msg)
-          }
+      bound: => Double, mass: => Long,
+      refusal: (Long, Long) => String): Unit =
+    if (mode != "off") {
+      val budget = GuardConf.budget(spark, family.budgetKey,
+        family.defaultBudget)
+      if (bound > budget.toDouble) {
+        val m = mass
+        if (m > budget) {
+          family.trips.incrementAndGet()
+          val msg = refusal(m, budget) +
+            s" Set ${family.modeKey}=warn to override."
+          if (mode == "warn")
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+          else throw new IllegalStateException(msg)
         }
-      } catch {
-        case e: Throwable => release; throw e
       }
+    }
 
   /** EXACT candidate mass of a bucket self-join: Σ over buckets of
     * c·(c−1)/2, where a bucket is one distinct row of `keys` (grouped by
@@ -107,7 +101,7 @@ private[graft] object GuardConf {
   * remedy text — the filter-verify split of REPOSE (ICDE'21). */
 private[graft] object BucketSelfJoin {
   /** A family's guard: its settings, the mode its caller read once
-    * before caching anything, and its refusal text `(mass, budget)`. */
+    * before building anything, and its refusal text `(mass, budget)`. */
   final case class Guard(family: GuardFamily, mode: String,
       refusal: (Long, Long) => String)
 
@@ -123,16 +117,16 @@ private[graft] object BucketSelfJoin {
     * blocks or assignments), m·n(n−1)/2 — short-circuits, and only past
     * it does the exact [[GuardConf.bucketPairMass]] of the key columns
     * decide. `n` (the id count) is by-name and read at most once, so
-    * mode `off` runs no job; `release` runs if the guard throws. */
+    * mode `off` runs no job. */
   def apply(keyed: DataFrame, keys: Seq[String],
       payload: Seq[(String, String, String)], m: Int, n: => Long,
-      guard: Option[Guard], release: => Unit): DataFrame = {
+      guard: Option[Guard]): DataFrame = {
     guard.foreach { g =>
       lazy val ids = n
       GuardConf.check(keyed.sparkSession, g.family, g.mode,
         m.toDouble * ids * (ids - 1) / 2,
         GuardConf.bucketPairMass(keyed.select(keys.map(col): _*)),
-        g.refusal, release)
+        g.refusal)
     }
     def side(id: String, name: ((String, String, String)) => String) =
       keyed.select((col("__id").as(id) +:

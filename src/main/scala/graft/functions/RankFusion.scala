@@ -40,14 +40,12 @@ object RankFusion {
     val toks = docs.select(col(idCol).as("__doc"),
       explode(TextOps.tokens(lower(col(textCol)))).as("__term"))
     // tf serves the document-frequency aggregate AND the query join; dl
-    // serves lengths and the avgdl scalar — cache both EAGERLY (the
-    // ngramJaccardPairs stance: concurrent first readers of a cold cache
-    // recompute the partition) so the corpus is tokenized twice total,
-    // not once per consumer. Gate/bench callers clear caches per query.
-    val tf = toks.groupBy("__doc", "__term").agg(count(lit(1)).as("__tf")).cache()
-    tf.count()
-    val dl = toks.groupBy("__doc").agg(count(lit(1)).as("__dl")).cache()
-    dl.count()
+    // serves lengths and the avgdl scalar — checkpoint both so the
+    // corpus is tokenized twice total, not once per consumer
+    val tf = toks.groupBy("__doc", "__term").agg(count(lit(1)).as("__tf"))
+      .localCheckpoint()
+    val dl = toks.groupBy("__doc").agg(count(lit(1)).as("__dl"))
+      .localCheckpoint()
     val dfreq = tf.groupBy("__term").agg(count(lit(1)).as("__df"))
     val stats = dl.agg(sum("__dl").as("__total"))
       .crossJoin(broadcast(docs.agg(count(lit(1)).as("__n"))))

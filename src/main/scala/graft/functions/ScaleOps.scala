@@ -217,7 +217,7 @@ object ScaleOps {
     *      the partition count, never by rows) and prefix-sums them on
     *      the driver into per-partition offsets;
     *   3. an in-partition running-sum window (keyed by the stable
-    *      partition id of the CACHED sorted frame) plus the broadcast
+    *      partition id of the CHECKPOINTED sorted frame) plus the broadcast
     *      offset yields the global cumulative value.
     *
     * The cumulative values are independent of where the range
@@ -237,15 +237,12 @@ object ScaleOps {
         org.apache.spark.sql.types.ByteType).contains(vt),
       s"runningTotal needs an integral value column, got $vt")
     val n = spark.sessionState.conf.numShufflePartitions
-    // the cache is deliberately retained (same stance as the PPJoin
-    // shingle cache): the result's lineage reads it, the pid column must
-    // stay pinned to one materialization, and gate/bench callers clear
-    // caches between queries
+    // checkpointed: the pid column must stay pinned to one
+    // materialization for the two readers below
     val sorted = df.repartitionByRange(n, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .cache()
-    sorted.count() // pin the pid assignment before the two readers below
+      .localCheckpoint()
     val partSums = sorted.groupBy(col("__pid"))
       .agg(sum(col(valueCol).cast("long")).as("__s"))
       .collect().map(r => r.getInt(0) ->
@@ -277,9 +274,9 @@ object ScaleOps {
     *
     * One of two paths computes the identical min-label fixpoint. While
     * union-find is possible (long ids, `smallEdgeLimit > 0`) the pair
-    * stream is cached and counted ONCE to choose (the pair generator
-    * upstream is usually the expensive part); otherwise star rounds read
-    * it once, through their first localCheckpoint:
+    * stream is checkpointed and counted ONCE to choose (the pair
+    * generator upstream is usually the expensive part); otherwise star
+    * rounds read it once, through their first localCheckpoint:
     *
     *   - at most `smallEdgeLimit` edges (default 1M pairs = 16 MB of
     *     longs) and long ids everywhere: driver union-find with path
@@ -305,16 +302,12 @@ object ScaleOps {
     val base = pairs.select(col("id_a").as("__cu"), col("id_b").as("__cv"))
     val longIds = (base.schema.fields :+ vertices.schema(idCol))
       .forall(_.dataType == LongType)
-    // (__v, __lbl) for edge-incident vertices; both paths have read
-    // `base` completely before returning, so the cache (kept only while
-    // union-find is still possible) can go right after
+    // (__v, __lbl) for edge-incident vertices
     val labels =
       if (smallEdgeLimit > 0 && longIds) {
-        val cached = base.cache()
-        try {
-          if (cached.count() <= smallEdgeLimit) unionFindLabels(cached)
-          else starLabels(cached)
-        } finally cached.unpersist()
+        val edges = base.localCheckpoint()
+        if (edges.count() <= smallEdgeLimit) unionFindLabels(edges)
+        else starLabels(edges)
       } else starLabels(base)
     vertices.select(col(idCol))
       .join(labels, col(idCol) === col("__v"), "left")
@@ -426,16 +419,16 @@ object ScaleOps {
       iters: Int, scale: Long = 1000000L, dampNum: Long = 85L,
       smallEdgeLimit: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale > 0 && dampNum > 0 && dampNum < 100)
-    val verts = vertices.select(col(idCol).as("__v")).cache()
+    val verts = vertices.select(col(idCol).as("__v")).localCheckpoint()
     val nV = verts.count()
     require(nV > 0, "empty vertex set")
     val init = scale / nV
     val base = scale * (100L - dampNum) / 100L / nV
     // edges materialize ONCE here — deg and the joined edge table both
-    // read this cache, so an expensive edge-generation lineage (d14's
+    // read this checkpoint, so an expensive edge-generation lineage (d14's
     // whole PPJoin pipeline) never re-runs per consumer
     val ew = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .cache()
+      .localCheckpoint()
     val nE = ew.count()
 
     // driver fast path (the d06 union-find move): when the edge set is
@@ -458,7 +451,6 @@ object ScaleOps {
             .unionByName(ew.select(col("__dst").as("__v"))).distinct(),
           Seq("__v"), "left_semi")
         .collect().map(_.getLong(0)).toSet
-      ew.unpersist()
       val deg = new scala.collection.mutable.HashMap[Long, Long]
       es.foreach { case (s, _) => deg.update(s, deg.getOrElse(s, 0L) + 1L) }
       var r = incident.iterator.map(_ -> init).toMap
@@ -476,23 +468,19 @@ object ScaleOps {
       val spark = vertices.sparkSession
       import spark.implicits._
       val small = r.toSeq.toDF("__v", "__r")
-      val out = verts.join(broadcast(small), Seq("__v"), "left")
+      return verts.join(broadcast(small), Seq("__v"), "left")
         .select(col("__v").as(idCol),
           coalesce(col("__r"), lit(base)).as("rank_micro"))
-      verts.unpersist() // `out` recomputes the (cheap) vertex projection
-      return out
     }
     val deg = ew.groupBy("__src").agg(count(lit(1)).as("__deg"))
-    val edgesDeg = ew.join(deg, "__src").cache()
-    edgesDeg.count()
+    val edgesDeg = ew.join(deg, "__src").localCheckpoint()
     // only vertices an edge can ever reach iterate; everyone else is
     // base from round 1 on (in-degree 0 ⇒ contribution sum is 0)
     val incident = verts.join(
         edgesDeg.select(col("__src").as("__v"))
           .unionByName(edgesDeg.select(col("__dst").as("__v"))).distinct(),
         Seq("__v"), "left_semi")
-      .cache()
-    incident.count()
+      .localCheckpoint()
     var ranks = incident.select(col("__v"), lit(init).as("__r"))
     var i = 0
     while (i < iters) {
@@ -507,13 +495,8 @@ object ScaleOps {
         .localCheckpoint(true)
       i += 1
     }
-    val out = verts.join(ranks, Seq("__v"), "left")
+    verts.join(ranks, Seq("__v"), "left")
       .select(col("__v").as(idCol),
         coalesce(col("__r"), lit(base)).as("rank_micro"))
-    verts.unpersist()
-    ew.unpersist()
-    edgesDeg.unpersist()
-    incident.unpersist()
-    out
   }
 }

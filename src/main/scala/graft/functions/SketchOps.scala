@@ -28,7 +28,7 @@ object SketchOps {
     * instances directly (addition is associative), so the sketch is
     * value-identical while the corpus is tokenized once instead of
     * twice, the `depth` salted md5 bucket hashes are computed per
-    * DISTINCT token instead of per instance, and the only cached frame
+    * DISTINCT token instead of per instance, and the only materialized frame
     * is the vocab-bounded count table (the previous token-stream cache
     * grew with the corpus — the wrong shape at 100 TB).
     *
@@ -47,11 +47,9 @@ object SketchOps {
     require(width > 0 && (width & (width - 1)) == 0,
       s"width must be a power of two, got $width")
     // the exact count table feeds both the sketch and the top-K;
-    // materialize the cache BEFORE the branch fan-out (concurrent first
-    // readers of an unpopulated cache recompute partitions)
+    // materialize it BEFORE the branch fan-out
     val counts = df.select(explode(TextOps.tokens(col(textCol))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("true_n")).cache()
-    counts.count()
+      .groupBy("tok").agg(count(lit(1)).as("true_n")).localCheckpoint()
     val cells = counts.select(col("true_n"),
       explode(array((0 until depth).map(r =>
         struct(lit(r).as("r"), bucketOf(col("tok"), r, width).as("bucket"))): _*))

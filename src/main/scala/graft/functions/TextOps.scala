@@ -113,47 +113,28 @@ object TextOps {
     *   2. verify candidates exactly on the full shingle sets.
     *
     * Returns (idA, idB, jac) with idA < idB and jac >= threshold —
-    * byte-identical to the plain inverted-index algorithm.
-    *
-    * `releaseCaches` (default true, the d11 discipline): the verified
-    * pairs — near-dup-density-sized, orders of magnitude smaller than
-    * the corpus — are cut loose via localCheckpoint and the shingle and
-    * document-frequency caches are unpersisted HERE, so repeated
-    * invocations in a long-lived session do not accumulate storage
-    * (r20 verdict item 4). Pass false for the lazy plan-inspectable
-    * variant (PlanAuditSuite pins the hash-space shuffles through it);
-    * the caches then live until the caller clears them. */
+    * byte-identical to the plain inverted-index algorithm. The result is
+    * a plan over the checkpointed shingle table (and, guarded, df
+    * table): a caller reading it twice checkpoints it itself. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double,
-      releaseCaches: Boolean = true): DataFrame = {
-    // cache the EXPENSIVE stage, and cache it BEFORE any explode: the
-    // optimizer infers filters from Generate/join keys and pushes them
-    // down with full alias substitution — without an InMemoryRelation
-    // barrier the whole shingle chain is re-evaluated inside a pushed
-    // Filter for every row (measured 20x slowdown). The cache serves four
-    // downstream branches (freq, prefix, both verify sides), so it is
-    // materialized EAGERLY: concurrent first-readers of an unpopulated
-    // cache each recompute the partition, and the branch fan-out makes
-    // that race ~4x the whole shingle cost (measured 10x on p01).
-    // hash space end-to-end: the cache holds long arrays (4-5x smaller
-    // than shingle strings), and every downstream stage — frequency,
-    // prefix, candidate join, intersection verify — works on 8-byte keys
-    val sh = hashedShingleSets(df, idCol, textCol, n).cache()
-    sh.count()
-    // a guard refusal inside the candidate stage must not strand the
-    // just-materialized shingle cache (the simHashPairs discipline)
-    val (cands, freq) = try prefixCandidatesAndFreq(sh, threshold)
-    catch { case e: Throwable => sh.unpersist(); throw e }
+      n: Int, threshold: Double): DataFrame = {
+    // checkpoint the EXPENSIVE stage, BEFORE any explode: the optimizer
+    // infers filters from Generate/join keys and pushes them down with
+    // full alias substitution — without a LogicalRDD barrier the whole
+    // shingle chain is re-evaluated inside a pushed Filter for every row
+    // (measured 20x slowdown). It serves four downstream branches (freq,
+    // prefix, both verify sides), so it is materialized eagerly, once.
+    // hash space end-to-end: the checkpoint holds long arrays (4-5x
+    // smaller than shingle strings), and every downstream stage —
+    // frequency, prefix, candidate join, intersection verify — works on
+    // 8-byte keys
+    val sh = hashedShingleSets(df, idCol, textCol, n).localCheckpoint()
     // candidates may carry duplicate pairs (one per qualifying shared
     // prefix shingle — see prefixCandidates); jac is a deterministic
     // function of the pair, so dedup AFTER the threshold filter where
     // the stream is qualifying-pairs-sized, not candidate-sized
-    val out = verifyJaccard(sh, cands, threshold).distinct()
-    if (releaseCaches)
-      try out.localCheckpoint(true)
-      finally { sh.unpersist(); freq.foreach(_.unpersist()) }
-    else out
+    verifyJaccard(sh, prefixCandidates(sh, threshold), threshold).distinct()
   }
 
   /** Conf key: raw candidate budget for the PPJoin-family prefix bucket
@@ -181,7 +162,7 @@ object TextOps {
     * the full inverted-index mass Σ over shingle hashes of df(s)² —
     * probe and index sides are both subsets of the occurrence lists,
     * so no equi-key bucket can match more than df² raw rows. One
-    * explode + partial-aggregating groupBy over the cached shingle
+    * explode + partial-aggregating groupBy over the checkpointed shingle
     * table (no freq join, no rank window — the stages that dominate
     * the candidate pipeline), so the guard's common case costs one
     * narrow pass. The bound is TIGHT ENOUGH because honest corpora
@@ -197,7 +178,7 @@ object TextOps {
     * explode+partial-aggregating pass, vocab-bounded output (one narrow
     * row per distinct shingle hash). This is the SHARED input of the
     * guard's window-free Σdf² bound and the prefix frame's rank window:
-    * callers cache it so the corpus-sized explode runs once per query
+    * callers checkpoint it so the corpus-sized explode runs once per query
     * instead of once per consumer (measured: the guard's own pass was
     * the bulk of its +0.19 s d02 steady-state cost). */
   private[graft] def shingleFreq(sh: DataFrame): DataFrame =
@@ -220,7 +201,8 @@ object TextOps {
   }
 
   /** Σdf² over a [[shingleFreq]] frame — the window-free PPJoin mass
-    * bound, one narrow aggregation over the (cached) vocab-sized table. */
+    * bound, one narrow aggregation over the (checkpointed) vocab-sized
+    * table. */
   private[graft] def dfSquaredMassOf(freq: DataFrame): Long =
     freq
       // double BEFORE the multiply: a flooded bucket's df² can exceed
@@ -232,8 +214,8 @@ object TextOps {
   /** Remedy text of the PPJoin prefix guard (r18 verdict item 3: guard
     * parity — a boilerplate-flooded corpus must not launch a silent n²
     * PPJoin). [[PrefixJoin]] passes the window-free
-    * [[shingleDfSquaredMass]] bound (one narrow pass over the cached df
-    * table) to [[GuardConf.check]], so only past it does the exact mass
+    * [[shingleDfSquaredMass]] bound (one narrow pass over the
+    * checkpointed df table) to [[GuardConf.check]], so only past it does the exact mass
     * (one pass that re-derives the prefix rank window) decide. */
   private def ppjoinRefusal(what: String)(mass: Long, budget: Long): String =
     f"$what: the prefix bucket join would materialize ~$mass%,d raw " +
@@ -257,21 +239,20 @@ object TextOps {
     * hashed sets, so a collision only merges elements and every
     * string-space qualifying pair survives.
     *
-    * The guard mode is read ONCE, before anything is cached (ADVICE
-    * r20: a conf flip between two reads could strand a cache). One
-    * [[shingleFreq]] pass serves the guard's Σdf² bound and the rank
-    * window; it is cached (vocab-sized) only when the guard will read
-    * it, and the bound's aggregation materializes it, so `off` pays no
-    * extra job. The prefix frame stays UNCACHED: both join sides reuse
-    * the rank window's exchange, and caching it was measured +35% on
-    * the d02/d06/d16 family at sf5.0. */
+    * The guard mode is read ONCE, before anything is built (ADVICE r20).
+    * One [[shingleFreq]] pass serves the guard's Σdf² bound and the rank
+    * window; it is checkpointed (vocab-sized) only when the guard will
+    * read it, so `off` pays no extra job. The prefix frame is not
+    * materialized: both join sides reuse the rank window's exchange,
+    * and caching it was measured +35% on the d02/d06/d16 family at
+    * sf5.0. */
   private[graft] final class PrefixJoin(sh: DataFrame, probeLen: Column,
       indexLen: Option[Column]) {
     import org.apache.spark.sql.expressions.Window
     private val spark = sh.sparkSession
     private val mode = GuardConf.mode(spark, PpjoinGuardKey)
     private val freq =
-      if (mode == "off") shingleFreq(sh) else shingleFreq(sh).cache()
+      if (mode == "off") shingleFreq(sh) else shingleFreq(sh).localCheckpoint()
     private val ex = hashedForm(sh).select(col("__id"),
       size(col("__sh")).as("__n"), explode(col("__sh")).as("__s"))
     // __rk is kept for the positional bound; __df rides along for the
@@ -282,11 +263,6 @@ object TextOps {
       .where(col("__rk") <= probeLen)
       .select(col("__id"), col("__n"), col("__s"), col("__rk"), col("__df"))
     private val index = indexLen.fold(ex)(len => probe.where(col("__rk") <= len))
-
-    /** The cached df table, for the caller to release once its verify
-      * has materialized (None with the guard off: nothing is cached). */
-    def cachedFreq: Option[DataFrame] =
-      if (mode == "off") None else Some(freq)
 
     /** The guard's window-free bound: Σdf² over the df table. */
     def bound: Long = dfSquaredMassOf(freq)
@@ -307,8 +283,8 @@ object TextOps {
         sum(col("__cp").cast("double") * col("__ci")), lit(0.0)))
       .head().getDouble(0).toLong
 
-    /** The guarded probe×index join. [[GuardConf.check]] runs first (a
-      * refusal releases the df cache); then the probe side, as `id_p`,
+    /** The guarded probe×index join. [[GuardConf.check]] runs first;
+      * then the probe side, as `id_p`,
       * `n_p`, `__s_p` (and `rk_p` under a prefix cut) for `p`, joins the
       * index side, named the same way for `i` with `__s_i`, on the
       * shingle hash under `prune`. Distinct names per side:
@@ -317,7 +293,7 @@ object TextOps {
       * several qualifying shingles appears once per shingle. */
     def join(p: String, i: String, prune: Column, what: String): DataFrame = {
       GuardConf.check(spark, PpjoinGuard, mode, bound.toDouble, mass,
-        ppjoinRefusal(what), freq.unpersist())
+        ppjoinRefusal(what))
       def side(df: DataFrame, r: String, s: String) = df.select(Seq(
         col("__id").as(s"id_$r"), col("__n").as(s"n_$r"),
         col("__s").as(s"__s_$s")) ++
@@ -364,16 +340,7 @@ object TextOps {
     * duplicates costs 5% extra intersect evaluations and the post-verify
     * dedup shuffles only the qualifying pairs — orders of magnitude
     * fewer. Callers dedup AFTER verification ([[ngramJaccardPairs]]). */
-  def prefixCandidates(sh: DataFrame, threshold: Double): DataFrame =
-    prefixCandidatesAndFreq(sh, threshold)._1
-
-  /** [[prefixCandidates]] plus the cached [[shingleFreq]] table backing
-    * the prefix window (None with the guard off, when nothing is
-    * cached) so callers can release it once their verify has
-    * materialized — the success-path twin of the guard-refusal
-    * unpersist (r20 verdict item 4). */
-  private[graft] def prefixCandidatesAndFreq(sh: DataFrame,
-      threshold: Double): (DataFrame, Option[DataFrame]) = {
+  def prefixCandidates(sh: DataFrame, threshold: Double): DataFrame = {
     val t = threshold
     val pj = PrefixJoin.jaccard(sh, t)
     // overlap form of the threshold: jac >= t  <=>  |A∩B| >= t/(1+t)(|A|+|B|)
@@ -388,7 +355,7 @@ object TextOps {
     // the candidate stream buying a 5% row reduction; the caller's
     // verify tolerates duplicates and dedups its (threshold-surviving,
     // orders-of-magnitude smaller) output instead
-    val cands = pj.join("p", "i",
+    pj.join("p", "i",
         // index side is the (size, id)-smaller record: roles use the
         // (size, id) total order so equal-size pairs keep exactly one
         // orientation
@@ -400,7 +367,6 @@ object TextOps {
         f"ngramJaccardPairs(threshold=$t%.2f)")
       .select(least(col("id_p"), col("id_i")).as("id_a"),
         greatest(col("id_p"), col("id_i")).as("id_b"))
-    (cands, pj.cachedFreq)
   }
 
   /** Directed shingle CONTAINMENT pairs: `C(A→B) = |Sh(A) ∩ Sh(B)| /
@@ -419,18 +385,14 @@ object TextOps {
     * shingles out of the probe, which is what bounds the join fan-out
     * at corpus scale. Verify is exact: the codegen two-pointer
     * intersect over the sorted hash sets, permille-floored integral
-    * compare. Hash space end-to-end (the d02 collision argument).
-    *
-    * `releaseCaches` (default true): verified pairs are checkpointed and
-    * the shingle + document-frequency caches released here — the
-    * [[ngramJaccardPairs]] discipline; false keeps the lazy
-    * plan-inspectable form (caches live until the caller clears). */
+    * compare. Hash space end-to-end (the d02 collision argument). Like
+    * [[ngramJaccardPairs]], the result is a plan over the checkpointed
+    * shingle table. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double,
-      releaseCaches: Boolean = true): DataFrame = {
+      n: Int, threshold: Double): DataFrame = {
     val t = threshold
-    val sh = hashedShingleSets(df, idCol, textCol, n).cache()
-    sh.count() // eager: prefix, index, and both verify sides read it
+    // prefix, index, and both verify sides read it
+    val sh = hashedShingleSets(df, idCol, textCol, n).localCheckpoint()
     // size prune in the SAME integer-permille arithmetic as the verify
     // stage below: a double-rounded ceil(t*n_a) can be one stricter than
     // the permille compare at representation boundaries, dropping a pair
@@ -440,28 +402,20 @@ object TextOps {
     // multiplicity at sf0.1 — the distinct's full candidate-stream
     // shuffle bought a 4% row reduction); duplicates verify
     // idempotently and the dedup runs over the qualifying pairs.
-    // A guard refusal must not strand the shingle cache.
-    val (cand, freq) = try {
-      val pj = PrefixJoin.containment(sh, t)
-      (pj.join("a", "b",
-          col("id_a") =!= col("id_b") &&
-            // long arithmetic: n_b is a 32-bit size() and n_b * 1000 would
-            // wrap for >2.1M-shingle documents, silently dropping pairs
-            col("n_b").cast("long") * 1000L >= lit(tPm) * col("n_a").cast("long"),
-          f"containmentPairs(threshold=$t%.2f)")
-        .select("id_a", "id_b"), pj.cachedFreq)
-    } catch { case e: Throwable => sh.unpersist(); throw e }
-    val out = withPairSets(sh, cand)
+    val cand = PrefixJoin.containment(sh, t).join("a", "b",
+        col("id_a") =!= col("id_b") &&
+          // long arithmetic: n_b is a 32-bit size() and n_b * 1000 would
+          // wrap for >2.1M-shingle documents, silently dropping pairs
+          col("n_b").cast("long") * 1000L >= lit(tPm) * col("n_a").cast("long"),
+        f"containmentPairs(threshold=$t%.2f)")
+      .select("id_a", "id_b")
+    withPairSets(sh, cand)
       .withColumn("__i",
         IntersectSize.column(df.sparkSession, col("__sh_a"), col("__sh_b")))
       .select(col("id_a"), col("id_b"),
         expr("(__i * 1000) div size(__sh_a)").as("cont_pm"))
       .where(col("cont_pm") >= tPm)
       .distinct()
-    if (releaseCaches)
-      try out.localCheckpoint(true)
-      finally { sh.unpersist(); freq.foreach(_.unpersist()) }
-    else out
   }
 
   /** Candidate (id_a, id_b) pairs joined to both sides' shingle sets
@@ -472,7 +426,7 @@ object TextOps {
       .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against
-    * the cached shingle-set table (string or hashed form); emits pairs
+    * the materialized shingle-set table (string or hashed form); emits pairs
     * with jac >= threshold. The intersection size is STAGED as its own
     * column: referencing `array_intersect` twice inside one projection
     * (as the naive jac formula does) evaluates the O(|A|·|B|) intersect
@@ -558,9 +512,8 @@ object TextOps {
   def minHashMassProbe(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, bands: Int): Long = {
     val sig = minHashBandTable(hashedShingleSets(df, idCol, textCol, n),
-      numHashes, bands).cache() // the pushdown barrier under the explode
-    try GuardConf.bucketPairMass(minHashBucketKeys(sig).drop("__id"))
-    finally sig.unpersist()
+      numHashes, bands).localCheckpoint() // the pushdown barrier under the explode
+    GuardConf.bucketPairMass(minHashBucketKeys(sig).drop("__id"))
   }
 
   /** Sweep face of the PPJoin prefix guard: build the d02-shape
@@ -569,17 +522,15 @@ object TextOps {
     * table. */
   def ppjoinMassProbe(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): (Long, Long) = {
-    val sh = hashedShingleSets(df, idCol, textCol, n).cache()
-    sh.count()
-    val pj = PrefixJoin.jaccard(sh, threshold)
-    try (pj.bound, pj.mass)
-    finally { sh.unpersist(); pj.cachedFreq.foreach(_.unpersist()) }
+    val pj = PrefixJoin.jaccard(
+      hashedShingleSets(df, idCol, textCol, n).localCheckpoint(), threshold)
+    (pj.bound, pj.mass)
   }
 
   /** [[minHashCandidates]] over an ALREADY-HASHED shingle table
     * (`__id`, `__sh: array<long>` — [[hashedShingleSets]] output).
     * Callers that also verify exactly ([[verifyJaccard]]) pass their
-    * cached hash table here so the corpus is sketched from ONE
+    * checkpointed hash table here so the corpus is sketched from ONE
     * materialization — the sketch and the verify read the same longs,
     * and no shingle string exists anywhere in the pipeline. */
   def minHashCandidatesFromHashed(
@@ -587,15 +538,16 @@ object TextOps {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val spark = sh.sparkSession
     val mode = GuardConf.mode(spark, MinhashGuardKey)
-    // cache the signature stage BEFORE the explode — the pushdown barrier
-    // must sit under the Generate or the inferred size()>0 filter
+    // checkpoint the signature stage BEFORE the explode — the pushdown
+    // barrier must sit under the Generate or the inferred size()>0 filter
     // re-derives the whole 128-hash chain per row (see ngramJaccardPairs);
-    // materializing the sketch table once is also the 100 TB-scale shape
-    val sig = minHashBandTable(sh, numHashes, bands).cache()
-    val nDocs = sig.count() // eager: both self-join sides read it (first-reader race)
+    // materializing the sketch table once is also the 100 TB-scale shape.
+    // Both self-join sides read it.
+    val sig = minHashBandTable(sh, numHashes, bands).localCheckpoint()
     // the worst case (every signature identical) fits the budget at
-    // gate/bench scales, so the steady-state guard cost is the count()
-    // the eager cache pays anyway; a refusal releases the signature cache
+    // gate/bench scales, so the steady-state guard cost is one count
+    // over the checkpoint; `off` runs none
+    lazy val nDocs = sig.count()
     val guard = BucketSelfJoin.Guard(MinhashGuard, mode, (mass, budget) =>
       f"minHashCandidates(bands=$bands): the band-bucket join would " +
         f"surface ~$mass%,d candidate pairs over $nDocs%,d documents — " +
@@ -606,7 +558,7 @@ object TextOps {
         "mass, or use FEWER bands with more rows per band to sharpen " +
         "the collision threshold.")
     BucketSelfJoin(minHashBucketKeys(sig), Seq("__b", "__key"), Nil, bands,
-      nDocs, Some(guard), sig.unpersist())
+      nDocs, Some(guard))
       .select(col("id_a"), col("id_b")).distinct()
   }
 
@@ -661,7 +613,7 @@ object TextOps {
     *      can grow past the dominance boundary. The batch is truncated
     *      right after the first such creator (one colliding merge alone
     *      IS the serial step, so it stays exact). The vocabulary probe
-    *      is one cheap membership scan over the cached corpus per
+    *      is one cheap membership scan over the checkpointed corpus per
     *      batched round.
     *
     * So a 32k-merge vocabulary costs ~32k/batchK Spark jobs instead of
@@ -682,8 +634,9 @@ object TextOps {
     require(batchK >= 1, "batchK must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var cur = df.select(tokens(col(textCol)).as("t")).as[Seq[String]].cache()
-    cur.count()
+    // one checkpoint per round: each round reads the previous one
+    var cur = df.select(tokens(col(textCol)).as("t")).as[Seq[String]]
+      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rounds = 0
     var done = false
@@ -735,16 +688,12 @@ object TextOps {
           merges += ((merges.size + 1, a, b, c))
         }
         val batch = guarded.map(m => (m._1, m._2)).toList
-        val prev = cur
         // ONE rewrite pass applies the whole batch in rank order
-        cur = prev.map(ts => batch.foldLeft(ts) {
+        cur = cur.map(ts => batch.foldLeft(ts) {
           case (t, (a, b)) => mergePair(t, a, b)
-        }).cache()
-        cur.count()
-        prev.unpersist()
+        }).localCheckpoint()
       }
     }
-    cur.unpersist()
     (merges.toSeq, rounds)
   }
 
@@ -756,8 +705,8 @@ object TextOps {
       minCount: Long = 2L): Seq[(Int, String, String, Long)] = {
     val spark = df.sparkSession
     import spark.implicits._
-    var cur = df.select(tokens(col(textCol)).as("t")).as[Seq[String]].cache()
-    cur.count()
+    var cur = df.select(tokens(col(textCol)).as("t")).as[Seq[String]]
+      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
     var done = false
@@ -767,14 +716,10 @@ object TextOps {
         case None => done = true
         case Some((a, b, c)) =>
           merges += ((rank, a, b, c))
-          val prev = cur
-          cur = prev.map(ts => mergePair(ts, a, b)).cache()
-          cur.count()
-          prev.unpersist()
+          cur = cur.map(ts => mergePair(ts, a, b)).localCheckpoint()
           rank += 1
       }
     }
-    cur.unpersist()
     merges.toSeq
   }
 
@@ -831,51 +776,33 @@ object TextOps {
     * and the join fan-out is bounded by band-bucket population exactly
     * as in [[minHashCandidates]]. With a small delta the band join's
     * delta side broadcasts. Output: (id_a = delta id, id_b = corpus id,
-    * jac >= threshold); ids must be disjoint across the two inputs. */
+    * jac >= threshold); ids must be disjoint across the two inputs. The
+    * result is a plan over the checkpointed shingle and signature
+    * tables. */
   def incrementalJaccardPairs(
       delta: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String,
-      n: Int, numHashes: Int, bands: Int, threshold: Double,
-      releaseCaches: Boolean = true): DataFrame = {
+      n: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // ONE shingle materialization per side (the d03 discipline): the
-    // sketch derives from the cached hash sets and the exact verify
-    // reads the SAME caches — the previous shape re-ran the whole
-    // tokenize+shingle+hash lineage over delta∪corpus a second time
-    // just to verify. Caches populate inside the sig counts below
-    // (serial actions — no first-reader race).
-    val dSh = hashedShingleSets(delta, idCol, textCol, n).cache()
-    val cSh = hashedShingleSets(corpus, idCol, textCol, n).cache()
-    // cache BEFORE the explode (pushdown barrier — see minHashCandidates);
-    // EAGERLY (count()): concurrent first readers of an unpopulated cache
-    // each recompute the partition (see ngramJaccardPairs).
-    // hashed form: the signature reads [[hashedShingleSets]] longs —
-    // no shingle string is ever built on either side
-    val dSig = minHashBandTable(dSh, numHashes, bands).cache(); dSig.count()
-    val cSig = minHashBandTable(cSh, numHashes, bands).cache(); cSig.count()
+    // sketch derives from the checkpointed hash sets and the exact
+    // verify reads the SAME checkpoints — the previous shape re-ran the
+    // whole tokenize+shingle+hash lineage over delta∪corpus a second
+    // time just to verify
+    val dSh = hashedShingleSets(delta, idCol, textCol, n).localCheckpoint()
+    val cSh = hashedShingleSets(corpus, idCol, textCol, n).localCheckpoint()
+    // checkpoint BEFORE the explode (pushdown barrier — see
+    // minHashCandidates). hashed form: the signature reads
+    // [[hashedShingleSets]] longs — no shingle string is ever built on
+    // either side
+    val dSig = minHashBandTable(dSh, numHashes, bands).localCheckpoint()
+    val cSig = minHashBandTable(cSh, numHashes, bands).localCheckpoint()
     def bandEx(sig: DataFrame, side: String): DataFrame =
       minHashBucketKeys(sig).withColumnRenamed("__id", side)
-    val candsLazy = bandEx(dSig, "id_a")
+    val cands = bandEx(dSig, "id_a")
       .join(bandEx(cSig, "id_b"), Seq("__b", "__key"))
       .select(col("id_a"), col("id_b")).distinct()
-    val sh = dSh.unionByName(cSh)
-    if (releaseCaches) {
-      // candidate pairs are tiny (near-dup fraction of the delta) — cut
-      // them loose from the sketch caches via localCheckpoint so every
-      // intermediate cache is released HERE, not leaked until the caller
-      // happens to materialize (repeat invocations in one session would
-      // otherwise accumulate storage — ADVICE r4)
-      val cands = candsLazy.localCheckpoint(true)
-      dSig.unpersist(); cSig.unpersist()
-      val out = verifyJaccard(sh, cands, threshold).localCheckpoint(true)
-      dSh.unpersist(); cSh.unpersist()
-      out
-    } else {
-      // lazy variant: the full plan stays inspectable (PlanAuditSuite
-      // pins the hash-space shuffles through it); the caches live until
-      // the caller clears them
-      verifyJaccard(sh, candsLazy, threshold)
-    }
+    verifyJaccard(dSh.unionByName(cSh), cands, threshold)
   }
 
   // ---- persisted MinHash signature store (d23 — d11's production shape) ---
@@ -1707,11 +1634,10 @@ object TextOps {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val spark = delta.sparkSession
     checkOrWriteParams(spark, storePath, n, numHashes, bands, write = false)
-    val dSh = hashedShingleSets(delta, idCol, textCol, n).cache()
-    try probeWithDeltaSketch(dSh, candidateLoader, idCol, textCol, storePath,
+    probeWithDeltaSketch(
+      hashedShingleSets(delta, idCol, textCol, n).localCheckpoint(),
+      candidateLoader, idCol, textCol, storePath,
       n, numHashes, bands, threshold, broadcastKeyLimit)
-    finally dSh.unpersist() // success path checkpointed; failure path (FNF
-                            // retry) must not leak the attempt's cache
   }
 
   private def probeWithDeltaSketch(dSh: DataFrame,
@@ -1721,8 +1647,7 @@ object TextOps {
       n: Int, numHashes: Int, bands: Int, threshold: Double,
       broadcastKeyLimit: Long): DataFrame = {
     val spark = dSh.sparkSession
-    val deltaDocs = // eager: two readers below (band keys + verification)
-      dSh.count()
+    val deltaDocs = dSh.count()
     val dKeys = minHashBucketKeys(minHashBandTable(dSh, numHashes, bands))
       .withColumnRenamed("__id", "id_a")
     val (bucketedKeys, looseKeys) =
@@ -1778,7 +1703,7 @@ object TextOps {
       }
     val cands = maskedJoined
       .select(col("id_a"), col("id_b")).distinct()
-      .localCheckpoint(true) // tiny; cut loose so caches release below
+      .localCheckpoint(true) // tiny; read by the gates and the verify
     // the candidate-id prune wears the same size gate as the band-key
     // join above: the id set is delta-proportional (the near-dup
     // fraction), so it is tiny for a sliver delta — but a bulk-sized
@@ -1797,7 +1722,7 @@ object TextOps {
       else candIds
     val candCorpusSh = hashedShingleSets(
       candidateLoader(candPrune),
-      idCol, textCol, n).cache()
+      idCol, textCol, n).localCheckpoint()
     // CONTRACT CHECK: the candidate source must cover every doc the
     // store knows — a candidate whose id is missing from the loaded
     // frame would otherwise be dropped by the verify join, i.e. a
@@ -1819,9 +1744,10 @@ object TextOps {
         "generation). If these docs were removed from the corpus, " +
         "retract them (retractFromSignatureStore); otherwise pass the " +
         "corpus the store was built+appended from, or rebuild the store")
-    val sh = dSh.unionByName(candCorpusSh).cache()
-    try verifyJaccard(sh, cands, threshold).localCheckpoint(true)
-    finally { sh.unpersist(); candCorpusSh.unpersist() }
+    // eager: a compaction racing the store scan fails here, inside the
+    // retry
+    verifyJaccard(dSh.unionByName(candCorpusSh), cands, threshold)
+      .localCheckpoint(true)
   }
 
   /** Edit-distance-1 similarity join via deletion signatures (the FastSS
@@ -1971,13 +1897,11 @@ object TextOps {
     * island merge. Nothing quadratic, nothing driver-side. */
   def dupSubstringSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    // cache the expensive stage (tokenize + per-window fold): sh feeds
-    // both the duplicate aggregate and the join probe, and without the
-    // barrier each consumer re-runs the whole O(tokens*k) pipeline
-    // (code-review finding). Eager count() — the d02/p01 lesson:
-    // concurrent first readers of an unpopulated cache each recompute.
-    val sh = shingleSites(df, idCol, textCol, k).cache()
-    sh.count()
+    // checkpoint the expensive stage (tokenize + per-window fold): sh
+    // feeds both the duplicate aggregate and the join probe, and without
+    // the barrier each consumer re-runs the whole O(tokens*k) pipeline
+    // (code-review finding)
+    val sh = shingleSites(df, idCol, textCol, k).localCheckpoint()
     val dup = sh.groupBy("h").agg(count(lit(1)).as("__c"))
       .where(col("__c") >= 2).select("h")
     val sites = sh.join(dup, "h").select("doc_id", "pos")
@@ -2075,18 +1999,16 @@ object TextOps {
       textCol: String, k: Int): DataFrame = {
     val docs = df.select(col(idCol).as("doc_id"),
       size(tokens(col(textCol))).cast("long").as("n_tokens"))
-    // cache twice along the pyramid (code-review finding): sh (the
+    // checkpoint twice along the pyramid (code-review finding): sh (the
     // O(tokens*k) fold) feeds the firsts aggregate AND the join probe;
-    // the windowed sliver (`marked` below) feeds both mass aggregates.
-    // Eager count()s — the d02/p01 concurrent-first-reader lesson.
-    val sh = shingleSites(df, idCol, textCol, k).cache()
-    sh.count()
+    // the windowed sliver (`marked` below) feeds both mass aggregates
+    val sh = shingleSites(df, idCol, textCol, k).localCheckpoint()
     val firsts = sh.groupBy("h")
       .agg(count(lit(1)).as("__c"),
         min(struct(col("doc_id"), col("pos"))).as("__f"))
       .where(col("__c") >= 2)
     // sites has exactly ONE consumer now (the windowed frame below), so
-    // the cache barrier moves to `marked`, which feeds both aggregates
+    // the barrier moves to `marked`, which feeds both aggregates
     val sites = sh.join(firsts, "h")
       .select(col("doc_id"), col("pos"),
         (col("doc_id") === col("__f.doc_id") &&
@@ -2112,8 +2034,7 @@ object TextOps {
         when(col("pos") - col("__prevR") <= k, 0L).otherwise(1L)))
       .withColumn("__grp", sum("__brk").over(w))
       .withColumn("__grpR", sum("__brkR").over(w))
-      .cache()
-    marked.count() // two aggregate consumers below
+      .localCheckpoint() // two aggregate consumers below
     val dupMass = marked
       .groupBy("doc_id", "__grp")
       .agg((max("pos") - min("pos") + k).as("__len"))
@@ -2519,7 +2440,7 @@ object TextOps {
     }: _*)
   }
 
-  /** EXACT candidate mass of the banded join over a cached `(id,
+  /** EXACT candidate mass of the banded join over a materialized `(id,
     * simhash)` table: the [[GuardConf.bucketPairMass]] of its (block,
     * key) buckets — the number of raw pairs the self-join materializes
     * before the verify. One partial-aggregating pass over
@@ -2536,30 +2457,20 @@ object TextOps {
     * so wide radii on large corpora go quadratic (the measured d04
     * wall). A pre-flight estimates the exact mass and refuses past
     * [[SimhashBudgetKey]] (default 2e9 candidates), naming the
-    * scale-safe alternatives.
-    *
-    * Cache lifetime: the input is cached for the duration of the
-    * returned frame (guard + both self-join sides read it) and is NOT
-    * unpersisted here — the result would silently recompute otherwise.
-    * Callers invoking this repeatedly over DIFFERENT inputs (e.g. an
-    * accreting spool re-read per micro-batch) should
-    * `spark.catalog.clearCache()` between calls or cache/unpersist the
-    * input themselves; a refused call cleans up after itself. */
+    * scale-safe alternatives. The input is checkpointed (the guard and
+    * both self-join sides read it). */
   def simHashPairs(
       sims: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
     val spark = sims.sparkSession
     val mode = GuardConf.mode(spark, SimhashGuardKey)
     // sims is typically an aggregate output (already a pushdown barrier);
-    // cache it anyway — the guard, then both self-join sides, read it
-    val cached = sims.cache()
+    // checkpoint it anyway — the guard, then both self-join sides, read it
+    val hashes = sims.localCheckpoint()
     val (blocks, width) = bandLayout(maxHamming)
-    lazy val n = cached.count() // by-name bound: off pays zero jobs
+    lazy val n = hashes.count() // by-name bound: off pays no guard job
     // pre-flight (r17 verdict item 1: the radius-11 wall was measured —
     // sf5.0 spent 43% of the bench in one candidate-density-quadratic
-    // join — but only DOCUMENTED; this makes it mechanical). A refusal
-    // must not strand the just-materialized hash table in executor
-    // storage: a driver probing several over-budget corpora would
-    // otherwise accumulate one corpus-sized cache entry per refusal
+    // join — but only DOCUMENTED; this makes it mechanical)
     val guard = BucketSelfJoin.Guard(SimhashGuard, mode, (mass, budget) =>
       f"simHashPairs(maxHamming=$maxHamming): the banded join would " +
         f"surface ~$mass%,d candidate pairs over $n%,d rows ($blocks " +
@@ -2572,10 +2483,10 @@ object TextOps {
         "(minHashCandidatesFromHashed, d03) for aggressive-radius " +
         "similarity, whose candidate mass tracks true near-dup density " +
         "instead of bucket collisions.")
-    val keyed = cached.select(col(idCol).as("__id"), col("simhash"),
+    val keyed = hashes.select(col(idCol).as("__id"), col("simhash"),
       explode(bandKeys(maxHamming)).as("__k"))
     BucketSelfJoin(keyed, Seq("__k"), Seq(("simhash", "sim_a", "sim_b")),
-      blocks, n, Some(guard), cached.unpersist())
+      blocks, n, Some(guard))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
       .distinct()
@@ -2644,13 +2555,13 @@ object TextOps {
       .select(col("__id"), col("__tgt"),
         pmod(tokenHash64(col("__t")), lit(buckets.toLong)).as("__b"))
     // BOTH count vectors in one partial-aggregating pass; the 4096-row
-    // result is cached (trivially small) because the neutral-ratio
-    // scalar and the per-bucket ratios both read it — uncached, each
+    // result is checkpointed (trivially small) because the neutral-ratio
+    // scalar and the per-bucket ratios both read it — otherwise each
     // would re-run the corpus groupBy
     val cnts = toks.groupBy("__b")
       .agg(count(lit(1)).as("__cr"),
         sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
-      .cache()
+      .localCheckpoint()
     // integral division on non-negatives only (Spark div truncates,
     // DuckDB // floors — they agree there)
     val (totCr, totCt) = {

@@ -67,8 +67,7 @@ object UnigramLM {
       pruneKeep: Double = 0.75): Model = {
     val spark = df.sparkSession
     import spark.implicits._
-    val words = wordCounts(df, textCol).cache()
-    words.count()
+    val words = wordCounts(df, textCol).localCheckpoint()
 
     // ---- seed: most frequent substrings (all occurrences, weighted by
     // word freq), single chars unconditionally ----
@@ -79,7 +78,7 @@ object UnigramLM {
       } yield (w.substring(i, j), f)
     }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
       .map { case (p, c) => (p, c) }
-      .cache() // two collects below (chars + top multi) — don't re-shuffle
+      .localCheckpoint() // two collects below (chars + top multi) — don't re-shuffle
     val chars = subCounts.filter(_._1.length == 1).collect().sortBy(_._1)
     val multi = subCounts.filter(_._1.length > 1)
       .orderBy(col("_2").desc, col("_1"))
@@ -87,7 +86,6 @@ object UnigramLM {
       .collect()
     var vocab: Vector[(String, Long)] = (chars ++ multi).toVector
       .sortBy(_._1)
-    subCounts.unpersist()
     require(vocab.nonEmpty,
       "unigram-LM training needs a non-empty corpus (no tokens found)")
 
@@ -136,7 +134,6 @@ object UnigramLM {
       else size = newSize
     }
     vocab = emPass(vocab, emIters) // final fit at target size
-    words.unpersist()
     Model(toLogProbs(vocab).toVector.sortBy(_._1), trace.result())
   }
 
@@ -298,8 +295,8 @@ object UnigramLM {
       explode(TextOps.tokens(col(textCol))).as("w"))
       .where(col("w") =!= "")
     val wf = toks.groupBy("w").agg(count(lit(1)).as("f"))
-      .as[(String, Long)].cache()
-    wf.count() // materialize before the two downstream branches
+      .as[(String, Long)]
+      .localCheckpoint() // materialize before the two downstream branches
     val subs = wf.flatMap { case (w, f) =>
       for {
         i <- 0 until w.length
@@ -307,12 +304,11 @@ object UnigramLM {
       } yield (w.substring(i, j), f)
     }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
       .map { case (p, c) => (p, c) }
-      .cache()
+      .localCheckpoint()
     val chars = subs.filter(_._1.length == 1).collect()
     val multi = subs.filter(_._1.length > 1)
       .orderBy(col("_2").desc, col("_1"))
       .limit(topMulti).collect()
-    subs.unpersist()
     val vocab = chars ++ multi
     val total = vocab.iterator.map(_._2).sum.toDouble
     val weights: Map[String, Long] = vocab.iterator.map { case (p, c) =>

@@ -1770,7 +1770,7 @@ object VectorOps {
           val scores = zip_with(bookLut(j), nh, (d, h) => d - h)
           (array_position(scores, array_max(scores)) - 1).cast("int").as(s"__c$j")
         }): _*)
-      .cache() // read by the code scan AND the shortlist refine join
+      .localCheckpoint() // read by the code scan AND the shortlist refine join
     val probeList = slice(centroidOrder(coarseDots(col("__qc")), cents.length),
       1, math.min(nprobe, cents.length))
     val qStaged = q.select(
@@ -1845,13 +1845,13 @@ object VectorOps {
       .withColumn("__sigs",
         PinnedHyperplaneSig.column(spark, col("__c"), bits, bands, dim))
       .select(col("__id"), col("__c"), col("__n"), col("__sigs"))
-      .cache() // both self-join sides read it (see lshScoredCandidates)
-    val nVecs = sigs.count() // eager: first-reader race
+      .localCheckpoint() // both self-join sides read it (see lshScoredCandidates)
+    val nVecs = sigs.count()
     val exploded = sigs.select(col("__id"), col("__c"), col("__n"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
     sq8CosineAbove(BucketSelfJoin(exploded, Seq("__band", "__sig"),
-      Sq8Payload, bands, nVecs, Some(lshBandGuard(mode, bands, nVecs)),
-      sigs.unpersist()), threshold)
+      Sq8Payload, bands, nVecs, Some(lshBandGuard(mode, bands, nVecs))),
+      threshold)
   }
 
   /** The two SQ8 columns (codes, code norm) each side of a pinned pair
@@ -1918,10 +1918,9 @@ object VectorOps {
   def lshMassProbe(df: DataFrame, idCol: String, vecCol: String,
       bits: Int, bands: Int): Long = {
     val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands)
-      .select(col("__sigs")).cache() // the pushdown barrier under the explode
-    try GuardConf.bucketPairMass(
+      .select(col("__sigs")).localCheckpoint() // the pushdown barrier under the explode
+    GuardConf.bucketPairMass(
       sigs.select(posexplode(col("__sigs")).as(Seq("__band", "__sig"))))
-    finally sigs.unpersist()
   }
 
   /** Conf key: within-list pair budget for the FIXED-nlist IVF dedup
@@ -1963,7 +1962,7 @@ object VectorOps {
         "2*ceil(sqrt(n)) and bounds the mass at ~n^1.5 — or raise " +
         "nlist explicitly.")
 
-  /** The pinned coarse quantizer over a cached SQ8 code table (`__id`,
+  /** The pinned coarse quantizer over a checkpointed SQ8 code table (`__id`,
     * `__c`): (k, each vector's k = min(nassign, |codebook|) nearest
     * pinned centroid ids — integer-dot argsort, ties -> lowest id).
     * Shared by [[ivfCosinePairsPinned]] and [[ivfMassProbe]]. */
@@ -1985,10 +1984,9 @@ object VectorOps {
     * position, the way CodegenSweep shows codegen health. */
   def ivfMassProbe(df: DataFrame, idCol: String, vecCol: String,
       nlist: Int, nassign: Int): Long = {
-    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").cache()
-    try GuardConf.bucketPairMass(
+    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").localCheckpoint()
+    GuardConf.bucketPairMass(
       c.select(explode(pinnedAssignment(c, nlist, nassign)._2).as("__bucket")))
-    finally c.unpersist()
   }
 
   /** [[ivfCosinePairs]] (the SemDeDup semantic-dedup shape) with the
@@ -2003,18 +2001,16 @@ object VectorOps {
       nlist: Int, nassign: Int): DataFrame = {
     val spark = df.sparkSession
     val mode = GuardConf.mode(spark, IvfGuardKey)
-    // cached: the codebook collect, the guard, and both join sides read
-    // it (the scaled variant's discipline, adopted here with the guard)
+    // checkpointed: the codebook collect, the guard, and both join sides
+    // read it (the scaled variant's discipline, adopted here with the guard)
     val c = withCodeNorm(sq8Codes(df, idCol, vecCol, "__id", "__c"),
-      "__c", "__n").cache()
-    val n = c.count()
+      "__c", "__n").localCheckpoint()
+    lazy val n = c.count()
     val (k, assignList) = pinnedAssignment(c, nlist, nassign)
     val assigned = c.select(col("__id"), col("__c"), col("__n"),
       explode(assignList).as("__bucket"))
-    // a refusal must not strand the cached code table
     sq8CosineAbove(BucketSelfJoin(assigned, Seq("__bucket"), Sq8Payload, k,
-      n, Some(ivfPairGuard(mode, n, k, nlist, nassign)), c.unpersist()),
-      threshold)
+      n, Some(ivfPairGuard(mode, n, k, nlist, nassign))), threshold)
   }
 
   /** [[ivfCosinePairsPinned]] at the SCALE operating point. Two things
@@ -2056,14 +2052,14 @@ object VectorOps {
       nassign: Int, nlistOverride: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val c = withCodeNorm(sq8Codes(df, idCol, vecCol, "__id", "__c"),
-      "__c", "__n").cache()
-    val n = c.count() // materializes the cache for both join sides too
+      "__c", "__n").localCheckpoint() // both join sides read it too
+    val n = c.count()
     val nlist = if (nlistOverride > 0) nlistOverride
       else math.max(16L, math.min(4096L,
         2L * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
     val cents = c.where(col("__id") < nlist)
       .select(col("__id").as("__cid"), col("__c").as("__cc"))
-    val nCents = cents.count() // cheap: reads the cache, nlist rows out
+    val nCents = cents.count() // cheap: reads the checkpoint, nlist rows out
     require(nCents == math.min(nlist.toLong, n),
       s"ivfCosinePairsPinnedScaled needs ids dense from 0 (the pinned-" +
         s"codebook contract): expected ${math.min(nlist.toLong, n)} " +
@@ -2085,7 +2081,7 @@ object VectorOps {
     val assigned = top.join(c, Seq("__id"))
       .select(col("__id"), col("__c"), col("__n"), col("__bucket"))
     sq8CosineAbove(BucketSelfJoin(assigned, Seq("__bucket"), Sq8Payload,
-      nassign, n, None, ()), threshold)
+      nassign, n, None), threshold)
   }
 
   /** Cluster-balanced corpus selection — the DataComp/DCLM curation
@@ -2116,13 +2112,11 @@ object VectorOps {
       nlist: Int, denom: Int): DataFrame = {
     require(denom >= 1, s"denom must be >= 1, got $denom")
     val spark = df.sparkSession
-    // cached + eagerly materialized: the codebook collect, the counts
-    // aggregation, and the join probe side all read the coded frame —
-    // uncached, the sq8 encode + assignment argmax would run three
-    // times over the corpus (code-review finding; the pinned pair
-    // variants' discipline)
-    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").cache()
-    c.count()
+    // checkpointed: the codebook collect, the counts aggregation, and
+    // the join probe side all read the coded frame — otherwise the sq8
+    // encode + assignment argmax would run three times over the corpus
+    // (code-review finding; the pinned pair variants' discipline)
+    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").localCheckpoint()
     val cents = pinnedCodebook(c, "__id", "__c", nlist)
     def dots(v: Column): Column =
       array(cents.map(ct => nativeDot(spark, v, array(ct.map(lit): _*))): _*)
@@ -2170,14 +2164,14 @@ object VectorOps {
       denom: Int, nlistOverride: Int = 0): DataFrame = {
     require(denom >= 1, s"denom must be >= 1, got $denom")
     val spark = df.sparkSession
-    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").cache()
-    val n = c.count() // materializes the cache for the stages below
+    val c = sq8Codes(df, idCol, vecCol, "__id", "__c").localCheckpoint()
+    val n = c.count()
     val nlist = if (nlistOverride > 0) nlistOverride
       else math.max(16L, math.min(4096L,
         2L * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
     val cents = c.where(col("__id") < nlist)
       .select(col("__id").as("__cid"), col("__c").as("__cc"))
-    val nCents = cents.count() // cheap: reads the cache, nlist rows out
+    val nCents = cents.count() // cheap: reads the checkpoint, nlist rows out
     require(nCents == math.min(nlist.toLong, n),
       s"clusterBalancedSelectScaled needs ids dense from 0 (the pinned-" +
         s"codebook contract): expected ${math.min(nlist.toLong, n)} " +
@@ -2266,16 +2260,17 @@ object VectorOps {
       df: DataFrame, idCol: String, vecCol: String,
       bits: Int, bands: Int): DataFrame = {
     val mode = GuardConf.mode(df.sparkSession, LshGuardKey)
-    // compute + cache all band signatures BEFORE the explode: the cache is
-    // a predicate-pushdown barrier, without which the optimizer's
-    // inferred Generate/join-key filters re-evaluate the whole signature
-    // chain per row (see TextOps); it also serves both self-join sides
-    val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands).cache()
-    val nVecs = sigs.count() // eager: both self-join sides read it (first-reader race)
+    // compute + checkpoint all band signatures BEFORE the explode: the
+    // checkpoint is a predicate-pushdown barrier, without which the
+    // optimizer's inferred Generate/join-key filters re-evaluate the
+    // whole signature chain per row (see TextOps); it also serves both
+    // self-join sides
+    val sigs = lshSignatureTable(df, idCol, vecCol, bits, bands).localCheckpoint()
+    val nVecs = sigs.count()
     val withSigs = sigs.select(col("__id"), col("__v"),
       posexplode(col("__sigs")).as(Seq("__band", "__sig")))
     BucketSelfJoin(withSigs, Seq("__band", "__sig"), Seq(("__v", "va", "vb")),
-        bands, nVecs, Some(lshBandGuard(mode, bands, nVecs)), sigs.unpersist())
+        bands, nVecs, Some(lshBandGuard(mode, bands, nVecs)))
       .select(col("id_a"), col("id_b"),
         nativeDot(df.sparkSession, col("va"), col("vb")).as("cos"))
       .distinct()
@@ -2501,13 +2496,11 @@ object VectorOps {
       sampleSize: Int = 2048, iters: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val mode = GuardConf.mode(spark, IvfGuardKey)
-    // cached (r18 ADVICE): the guard's count, the guard's mass
-    // aggregation past the short-circuit, and both join sides all read
-    // this lineage — uncached, the default enforce mode paid 1-2 extra
-    // full normalize-the-corpus scans per call. cache() is lazy, so
-    // guard=off still pays zero extra jobs (the sample collect below
-    // materializes only the partitions the limit touches).
-    val c = normalizedVectors(df, idCol, vecCol).cache()
+    // checkpointed (r18 ADVICE): the sample collect, the guard's count,
+    // the guard's mass aggregation past the short-circuit, and both join
+    // sides all read this lineage — otherwise the default enforce mode
+    // paid 1-2 extra full normalize-the-corpus scans per call
+    val c = normalizedVectors(df, idCol, vecCol).localCheckpoint()
     val centroids = trainCentroids(
       sortSample(c.select(col("__v")).limit(sampleSize).collect()
         .map(_.getSeq[Double](0).toArray)), nlist, iters)
@@ -2519,12 +2512,10 @@ object VectorOps {
       array(centCols.map(ct => nativeDot(spark, col("__v"), ct)): _*), centroids.length), 1, k)
     val assigned = c.select(col("__id"), col("__v"),
       explode(assignList).as("__bucket"))
-    // n is lazy: guard=off pays zero jobs (code-review finding — a
-    // strict count here re-scanned the corpus even when switched off)
+    // n is lazy: guard=off pays no guard job (code-review finding)
     lazy val n = c.count()
-    // a refusal must not strand the cached corpus
     BucketSelfJoin(assigned, Seq("__bucket"), Seq(("__v", "va", "vb")), k, n,
-        Some(ivfPairGuard(mode, n, k, nlist, nassign)), c.unpersist())
+        Some(ivfPairGuard(mode, n, k, nlist, nassign)))
       .select(col("id_a"), col("id_b"),
         nativeDot(spark, col("va"), col("vb")).as("cos"))
       .where(col("cos") >= threshold)
@@ -2693,7 +2684,7 @@ object VectorOps {
           val scores = zip_with(bookLut(j), nh, (d, h) => d - h)
           (array_position(scores, array_max(scores)) - 1).cast("int").as(s"__c$j")
         }): _*)
-      .cache() // read by the code scan AND the shortlist refine join
+      .localCheckpoint() // read by the code scan AND the shortlist refine join
 
     // queries: nprobe bucket probes + the ADC lookup tables
     val probeList = slice(centroidOrder(coarseDots(col("__qv")), coarse.length),
@@ -2769,8 +2760,8 @@ object VectorOps {
   def bruteForceCosinePairs(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    // cache: both sides of the quadratic join read the normalized vectors
-    val base = normalizedVectors(df, idCol, vecCol).cache()
+    // both sides of the quadratic join read the normalized vectors
+    val base = normalizedVectors(df, idCol, vecCol).localCheckpoint()
     val l = base.select(col("__id").as("id_a"), col("__v").as("va"))
     val r = base.select(col("__id").as("id_b"), col("__v").as("vb"))
     l.join(r, col("id_a") < col("id_b"))

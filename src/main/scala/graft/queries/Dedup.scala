@@ -240,14 +240,10 @@ object Dedup {
         // ONE hashed-shingle materialization feeds both the MinHash
         // sketch and the exact verify (sketch reads it once, verify
         // twice) — no shingle string exists anywhere in the pipeline
-        val sh = TextOps.hashedShingleSets(docs, "doc_id", "text", 3).cache()
-        sh.count() // eager: concurrent first readers recompute (p01 lesson)
-        // a band-guard refusal inside the candidate stage unpersists its
-        // own signature cache but cannot see THIS shingle cache — release
-        // it on the way out (the ngramJaccardPairs discipline)
-        val cands = try TextOps.minHashCandidatesFromHashed(
-            sh, numHashes = 128, bands = 32)
-          catch { case e: Throwable => sh.unpersist(); throw e }
+        val sh = TextOps.hashedShingleSets(docs, "doc_id", "text", 3)
+          .localCheckpoint()
+        val cands = TextOps.minHashCandidatesFromHashed(
+          sh, numHashes = 128, bands = 32)
         TextOps.verifyJaccard(sh, cands, 0.5)
           .orderBy("id_a", "id_b")
       },
@@ -819,13 +815,12 @@ object Dedup {
       "d14_dup_pagerank",
       (s, d) => {
         val docs = Tables.corpus(s, d)
-        // the pair table is the expensive input — cache it so the
+        // the pair table is the expensive input — checkpoint it so the
         // undirected union (2 readers) and the rank machinery never
         // re-run the PPJoin pipeline (measured 4x the whole query cost
-        // without this; gate/bench callers clear caches per query)
+        // without this)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-          .select(col("id_a"), col("id_b")).cache()
-        pairs.count()
+          .select(col("id_a"), col("id_b")).localCheckpoint()
         val edges = pairs.unionByName(
           pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
         ScaleOps.integerPageRank(docs.select("doc_id"), "doc_id",
@@ -852,8 +847,7 @@ object Dedup {
       (s, d) => {
         val docs = Tables.corpus(s, d).where(col("doc_id") % 3 === 0)
         val pairs = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-          .select(col("id_a"), col("id_b")).cache()
-        pairs.count()
+          .select(col("id_a"), col("id_b")).localCheckpoint()
         val edges = pairs.unionByName(
           pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
         ScaleOps.integerPageRank(docs.select("doc_id"), "doc_id",

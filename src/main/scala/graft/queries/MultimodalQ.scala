@@ -136,7 +136,7 @@ object MultimodalQ {
         val resized = Multimodal.resize(images, maxSide = 12)
           .map(m => m.copy(media_id = m.media_id + 1000000L))
         val feats = Multimodal.extractFeatures(images.union(resized), dim = 64)
-        val emb = Multimodal.embedFeatures(feats, outDim = 32).cache()
+        val emb = Multimodal.embedFeatures(feats, outDim = 32).localCheckpoint()
         val queries = emb.where(col("media_id") >= 1000000L)
         val corpus = emb.where(col("media_id") < 1000000L)
         VectorOps.sq8TopK(queries, corpus, "media_id", "embedding", k = 1)
@@ -339,15 +339,14 @@ object MultimodalQ {
     QueryDef(
       "mm18_image_neardup_fused",
       (s, d) => {
-        // materialize the synthetic payloads ONCE (cache + eager count,
-        // the p01 lesson) so the timed region measures the ingest path
+        // materialize the synthetic payloads ONCE (checkpoint) so the
+        // timed region measures the ingest path
         // — fused decode+hash+join — not two passes of PNG synthesis
         // through the union's duplicated lineage (code-review finding)
         val images = MediaFixture.media(s)
           .filter(_.meta.kind == "image").toDF()
           .select(col("media_id"), col("bytes"))
-          .cache()
-        images.count()
+          .localCheckpoint()
         val planted = images.unionByName(
           images.withColumn("media_id", col("media_id") + 1000000L))
         val hashes = planted.select(col("media_id"),

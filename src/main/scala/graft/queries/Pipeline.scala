@@ -462,9 +462,7 @@ object Pipeline {
     QueryDef(
       "p11_budget_select",
       (s, d) => {
-        // cache deliberately retained (PPJoin-shingle-cache stance): two
-        // readers (budget scalar + the prefix-sum sort) and gate/bench
-        // callers clear caches between queries
+        // checkpointed: two readers (budget scalar + the prefix-sum sort)
         val scored = Tables.corpus(s, d)
           .select(col("doc_id"),
             size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
@@ -473,7 +471,7 @@ object Pipeline {
             (least(col("n_tokens"), lit(100L)) * 5L +
               least(expr("CAST(n_chars * 25 AS BIGINT) div n_tokens"),
                 lit(250L))).as("mscore"))
-          .cache()
+          .localCheckpoint()
         val budget = scored
           .agg(expr("CAST(sum(n_tokens) * 3 AS BIGINT) div 10").as("__budget"))
         ScaleOps.runningTotal(scored, "n_tokens",
@@ -819,13 +817,13 @@ object Pipeline {
             Window.partitionBy(col("__fp")).orderBy(col("doc_id"))))
           .where(col("__rk") === 1)
           .select(col("doc_id"), col("n_tokens"), col("n_chars"))
-        // cache retained (p11 stance): budget scalar + prefix-sum sort
+        // checkpointed (p11 stance): budget scalar + prefix-sum sort
         val scored = canonical
           .select(col("doc_id"), col("n_tokens"),
             (least(col("n_tokens"), lit(100L)) * 5L +
               least(expr("CAST(n_chars * 25 AS BIGINT) div n_tokens"),
                 lit(250L))).as("mscore"))
-          .cache()
+          .localCheckpoint()
         val budget = scored
           .agg(expr("CAST(sum(n_tokens) * 3 AS BIGINT) div 10").as("__budget"))
         val selected = ScaleOps.runningTotal(scored, "n_tokens",
@@ -1049,8 +1047,7 @@ object Pipeline {
                 element_at(col("t"), i), element_at(col("t"), i + 1),
                 element_at(col("t"), i + 2)))).as("gram"))
           .distinct()
-          .cache() // feeds both novelty aggregations (t23's skew-safe plan)
-        grams.count() // eager: concurrent first readers recompute (p01 lesson)
+          .localCheckpoint() // feeds both novelty aggregations (t23's skew-safe plan)
         // same two-aggregation formulation as t23 (see TextAnalysis.scala):
         // groupBy(gram).min gets map-side partial aggregation so stop-gram
         // hot keys collapse per map task; novel counts ride the uniform
@@ -1451,11 +1448,10 @@ object Pipeline {
             size(TextOps.tokens(col("text"))).cast("long").as("v"))
         // ONE tokenization pass builds the (source, value) histogram;
         // every other relation below — per-source totals, the global
-        // value histogram, the grand total — is a rollup of it (cached:
-        // four readers, distinct-value-sized)
+        // value histogram, the grand total — is a rollup of it
+        // (checkpointed: four readers, distinct-value-sized)
         val hist = docs.groupBy(col("source"), col("v"))
-          .agg(count(lit(1)).as("c")).cache()
-        hist.count() // eager: concurrent first readers recompute
+          .agg(count(lit(1)).as("c")).localCheckpoint()
         val wSrc = Window.partitionBy(col("source")).orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, 0)
         val srcTot = hist.groupBy("source").agg(sum(col("c")).as("n"))

@@ -1185,8 +1185,7 @@ object TextAnalysis {
                 element_at(col("t"), i), element_at(col("t"), i + 1),
                 element_at(col("t"), i + 2)))).as("gram"))
           .distinct()
-          .cache() // one corpus scan + explode feeds BOTH aggregations below
-        grams.count() // eager: concurrent first readers recompute (p01 lesson)
+          .localCheckpoint() // one corpus scan + explode feeds BOTH aggregations below
         // Skew-safe first-doc: a gram-partitioned window would co-locate
         // every occurrence of a stop-gram on ONE task with no partial
         // aggregation (O(|corpus|) rows for "the of and"-class triples at

@@ -1006,8 +1006,8 @@ object Streams {
   }
 
   /** PRODUCTION store-probe sink for unbounded document streams — the
-    * `foreachBatch` body of d23's daily-ingest loop (the probe caches
-    * and checkpoints internally, so it needs a batch frame — the same
+    * `foreachBatch` body of d23's daily-ingest loop (the probe
+    * checkpoints internally, so it needs a batch frame — the same
     * reason w20/w23 use foreachBatch for index maintenance): each
     * micro-batch of arriving documents probes the persisted signature
     * store for near-duplicates against the standing corpus and appends
@@ -1852,7 +1852,7 @@ object Streams {
   /** Streaming near-dup detection against a STANDING corpus — the
     * stream-static face of d11 (incremental ingest dedup): the corpus
     * sketch (exploded LSH band keys + hashed shingle sets) is computed
-    * ONCE and cached; each micro-batch sketches only its own documents
+    * ONCE and checkpointed; each micro-batch sketches only its own documents
     * (pure column expressions — no state), probes the static band table
     * with a stream-static join, and verifies candidates with the exact
     * codegen Jaccard. Emits (doc_id, dup_of, jac) per detected
@@ -1862,12 +1862,9 @@ object Streams {
     * pair count — production streams with event time should swap in
     * dropDuplicatesWithinWatermark for reclaimable state.
     *
-    * Cache lifecycle: the two corpus caches below must outlive the
-    * returned (unbounded) streaming query, so THE CALLER OWNS THEM —
-    * release with `spark.catalog.clearCache()` (or stop the session)
-    * after the query terminates. They are materialized eagerly here so
-    * the first micro-batch's concurrent readers don't each recompute the
-    * corpus sketch (see TextOps.ngramJaccardPairs). */
+    * The two corpus checkpoints below live as long as the returned
+    * streaming query's plan holds them, and are materialized here so no
+    * micro-batch recomputes the corpus sketch. */
   def streamNearDups(
       stream: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String,
@@ -1880,9 +1877,8 @@ object Streams {
     // ---- static side, computed once per query start ----
     val corpusSh = TextOps.hashedShingleSets(corpus, idCol, textCol, n)
       .select(col("__id").as("dup_of"), col("__sh").as("__sh_c"))
-      .cache()
-    corpusSh.count()
-    // the band sketch derives from the SAME cached hash table the exact
+      .localCheckpoint()
+    // the band sketch derives from the SAME hash table the exact
     // verify reads — the corpus is shingled once, and no shingle string
     // is built on either side (MinHashSig consumes the longs directly)
     val corpusBands = corpusSh
@@ -1890,8 +1886,7 @@ object Streams {
         MinHashSig.column(spark, col("__sh_c"), numHashes).as("__sig"))
       .select(col("dup_of"),
         explode(TextOps.lshBandKeys(col("__sig"), bands, r)).as("__key"))
-      .cache()
-    corpusBands.count()
+      .localCheckpoint()
 
     // ---- stream side: one narrow projection chain per micro-batch ----
     val toks = TextOps.tokens(col(textCol))

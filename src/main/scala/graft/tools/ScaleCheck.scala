@@ -74,8 +74,7 @@ object ScaleCheck {
       "d14_dup_pagerank" -> { docs =>
         val pairs = graft.functions.TextOps
           .ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-          .select(col("id_a"), col("id_b")).cache() // 2 union readers
-        pairs.count()
+          .select(col("id_a"), col("id_b")).localCheckpoint() // 2 union readers
         val edges = pairs.unionByName(
           pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
         graft.functions.ScaleOps.integerPageRank(
@@ -99,17 +98,14 @@ object ScaleCheck {
                   element_at(col("t"), i), element_at(col("t"), i + 1),
                   element_at(col("t"), i + 2)))).as("gram"))
             .distinct()
-            .cache()
-          grams.count() // eager: both aggregations read the cache
+            .localCheckpoint() // both aggregations read it
           val firstDoc = grams.groupBy("gram")
             .agg(min(col("doc_id")).as("first_doc"))
           val nNovel = firstDoc.groupBy(col("first_doc").as("doc_id"))
             .agg(count(lit(1)).as("n_novel"))
-          val n = grams.groupBy("doc_id")
+          grams.groupBy("doc_id")
             .agg(count(lit(1)).as("n_grams"))
             .join(nNovel, Seq("doc_id"), "left").count()
-          grams.unpersist()
-          n
       },
       "t19_pinned_viterbi" -> (docs =>
         graft.functions.UnigramLM.pinnedSegmentStats(
@@ -158,7 +154,7 @@ object ScaleCheck {
     // clock (the first PPJoin run pays ~3s of whole-stage-codegen
     // compilation that would masquerade as 1x data cost)
     base.count()
-    ops.foreach { case (_, run) => spark.catalog.clearCache(); run(corpus(1)) }
+    ops.foreach { case (_, run) => run(corpus(1)) }
     val copiesList = sys.env.get("SPARK_GRAFT_SCALE_COPIES")
       .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Seq(1, 2, 4))
     // SPARK_GRAFT_SCALE_PARTS=proportional scales shuffle partitions
@@ -172,7 +168,6 @@ object ScaleCheck {
     val baseParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val results = for ((name, run) <- ops) yield {
       val times = for (copies <- copiesList) yield {
-        spark.catalog.clearCache()
         if (proportionalParts)
           spark.conf.set("spark.sql.shuffle.partitions", baseParts * copies)
         val docs = corpus(copies)
@@ -209,15 +204,14 @@ object ScaleCheck {
       println(s"| simhash guard | ${radii.map(r => s"radius $r mass").mkString(" | ")} | verdict @ default budget |")
       println("|---" * (radii.size + 2) + "|")
       for (copies <- copiesList) {
-        spark.catalog.clearCache()
-        val sims = TextOps.simHash(corpus(copies), "doc_id", "text").cache()
+        val sims = TextOps.simHash(corpus(copies), "doc_id", "text")
+          .localCheckpoint()
         val masses = radii.map(r => TextOps.simHashCandidateMass(sims, r))
         val verdicts = radii.zip(masses).map { case (r, m) =>
           if (m > TextOps.SimhashGuard.defaultBudget) s"radius $r REFUSED"
           else s"radius $r ok"
         }
         println(s"| ${copies}x | ${masses.mkString(" | ")} | ${verdicts.mkString(", ")} |")
-        sims.unpersist()
       }
     }
 
@@ -230,7 +224,6 @@ object ScaleCheck {
       println("| minhash guard | band mass (128 hashes, 32 bands) | verdict @ default budget |")
       println("|---|---|---|")
       for (copies <- copiesList) {
-        spark.catalog.clearCache()
         val m = TextOps.minHashMassProbe(corpus(copies), "doc_id", "text",
           n = 3, numHashes = 128, bands = 32)
         val v = if (m > TextOps.MinhashGuard.defaultBudget) "REFUSED" else "ok"
@@ -247,7 +240,6 @@ object ScaleCheck {
       println("| ppjoin guard | df^2 bound (t=0.5) | exact mass | verdict @ default budget |")
       println("|---|---|---|---|")
       for (copies <- copiesList) {
-        spark.catalog.clearCache()
         val (bound, exact) = TextOps.ppjoinMassProbe(
           corpus(copies), "doc_id", "text", n = 3, threshold = 0.5)
         val v = if (exact > TextOps.PpjoinGuard.defaultBudget) "REFUSED" else "ok"
@@ -286,7 +278,6 @@ object ScaleCheck {
       println("| ivf guard | pair mass (nlist 16, nassign 2) | verdict @ default budget |")
       println("|---|---|---|")
       for (copies <- copiesList) {
-        spark.catalog.clearCache()
         val m = VectorOps.ivfMassProbe(embCorpus(copies), "vec_id",
           "embedding", nlist = 16, nassign = 2)
         val v = if (m > VectorOps.IvfGuard.defaultBudget) "REFUSED" else "ok"
@@ -302,7 +293,6 @@ object ScaleCheck {
       println("| lsh guard | band mass (bits 8, bands 32) | verdict @ default budget |")
       println("|---|---|---|")
       for (copies <- copiesList) {
-        spark.catalog.clearCache()
         val m = VectorOps.lshMassProbe(embCorpus(copies), "vec_id",
           "embedding", bits = 8, bands = 32)
         val v = if (m > VectorOps.LshGuard.defaultBudget) "REFUSED" else "ok"
@@ -362,11 +352,9 @@ object ScaleCheck {
           bits, bands, threshold = 0.85).count()
       })
     val vops = vopsAll.filter(t => keep(t._1))
-    vops.foreach { case (_, run) =>
-      spark.catalog.clearCache(); run(embCorpus(1)) } // warmup
+    vops.foreach { case (_, run) => run(embCorpus(1)) } // warmup
     val vresults = for ((name, run) <- vops) yield {
       val times = for (copies <- copiesList) yield {
-        spark.catalog.clearCache()
         if (proportionalParts)
           spark.conf.set("spark.sql.shuffle.partitions", baseParts * copies)
         val e = embCorpus(copies)
@@ -412,11 +400,9 @@ object ScaleCheck {
       })
     val eops = eopsAll.filter(t => keep(t._1))
     if (eops.nonEmpty) {
-      eops.foreach { case (_, run) =>
-        spark.catalog.clearCache(); run(evCorpus(1)) } // warmup
+      eops.foreach { case (_, run) => run(evCorpus(1)) } // warmup
       val eresults = for ((name, run) <- eops) yield {
         val times = for (copies <- copiesList) yield {
-          spark.catalog.clearCache()
           if (proportionalParts)
             spark.conf.set("spark.sql.shuffle.partitions", baseParts * copies)
           val ev = evCorpus(copies)

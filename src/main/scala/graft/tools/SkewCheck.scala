@@ -102,20 +102,18 @@ object SkewCheck {
     }
 
     // warmup: codegen/JIT + parquet footers off the clock
-    { val g = grams(corpus(1)).cache(); g.count()
-      windowShape(g); aggShape(g); g.unpersist() }
+    { val g = grams(corpus(1)).localCheckpoint()
+      windowShape(g); aggShape(g) }
 
     println("| copies | grams | window max/bucket | window mean | window skew | agg max/bucket | agg mean | agg skew | window sec | agg sec |")
     println("|---|---|---|---|---|---|---|---|---|---|")
     for (copies <- Seq(1, 2, 4, 8)) {
-      spark.catalog.clearCache()
-      val g = grams(corpus(copies)).cache()
+      val g = grams(corpus(copies)).localCheckpoint()
       val total = g.count()
       val (wMax, wMean) = windowBurden(g, 32 * copies)
       val (aMax, aMean) = aggBurden(g, 32 * copies)
       val wSec = timeShape(windowShape(g))
       val aSec = timeShape(aggShape(g))
-      g.unpersist()
       println(f"| ${copies}x | $total | $wMax | $wMean | ${wMax.toDouble / wMean}%.2f | $aMax | $aMean | ${aMax.toDouble / aMean}%.2f | $wSec%.2f | $aSec%.2f |")
     }
     spark.stop()

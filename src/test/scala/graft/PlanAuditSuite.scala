@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Physical-plan audits — the properties that decide 100x-scale
   * behavior, asserted against the actual executed plans so regressions
@@ -13,6 +15,26 @@ class PlanAuditSuite extends SparkSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** The columns of `df`'s checkpoint scans: the RDDScanExec nodes over
+    * the LogicalRDD an eager localCheckpoint leaves in the plan. */
+  private def checkpointed(df: org.apache.spark.sql.DataFrame): Seq[Attribute] =
+    df.queryExecution.sparkPlan.collect { case s: RDDScanExec => s.output }
+      .flatten
+
+  /** `df` reads a checkpointed column `c` (a LogicalRDD barrier). */
+  private def readsCheckpointed(df: org.apache.spark.sql.DataFrame,
+      c: String): Boolean = checkpointed(df).exists(_.name == c)
+
+  /** Every checkpointed column `c` of `df` is an array of 64-bit hashes. */
+  private def checkpointedAsLongs(df: org.apache.spark.sql.DataFrame,
+      c: String): Boolean = {
+    val cs = checkpointed(df).filter(_.name == c)
+    cs.nonEmpty && cs.forall(_.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    })
+  }
 
   test("q02: filter and projection reach the parquet scan") {
     val p = plan("q02_filter_project")
@@ -37,21 +59,16 @@ class PlanAuditSuite extends SparkSuite {
       "dimension joins must not degrade to sort-merge:\n" + p)
   }
 
-  test("d02: shingle cache is an InMemoryRelation barrier below the joins") {
-    // the registered d02 releases its caches via localCheckpoint (the
-    // returned plan is a checkpoint scan — the d11 discipline); audit
-    // the SAME pipeline in its lazy form, which keeps the plan visible
-    val docs = graft.Tables.corpus(spark, sf)
-    val df = graft.functions.TextOps.ngramJaccardPairs(
-      docs, "doc_id", "text", n = 3, threshold = 0.5,
-      releaseCaches = false)
-    val cached = df.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r
+  test("d02: shingle checkpoint is a LogicalRDD barrier below the joins") {
+    val df = SparkEntry.queries("d02_ngram_jaccard")(spark, sf)
+    val barriers = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.output.exists(_.name == "__sh") => r
     }
-    assert(cached.nonEmpty,
-      "d02 must read the shingle sets through a cache barrier (pushdown " +
-        "pitfall: inferred filters re-evaluate the whole chain otherwise)")
-    spark.catalog.clearCache()
+    assert(barriers.nonEmpty,
+      "d02 must read the shingle sets through a checkpoint barrier " +
+        "(pushdown pitfall: inferred filters re-evaluate the whole chain " +
+        "otherwise):\n" + df.queryExecution.optimizedPlan)
   }
 
   test("t02: quality scoring runs inside whole-stage codegen") {
@@ -154,7 +171,6 @@ class PlanAuditSuite extends SparkSuite {
     // (LogicalRDD): already-computed blocks, no lineage back into the
     // iteration — the closing corpus join can never recompute the loop
     val barriers = df.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r: Any
       case r: org.apache.spark.sql.execution.LogicalRDD => r: Any
       // small-graph fast path: labels are driver-computed union-find
       // output shipped as literal data — no loop lineage exists at all
@@ -162,9 +178,8 @@ class PlanAuditSuite extends SparkSuite {
     }
     assert(barriers.nonEmpty,
       "the converged label table must sit behind a materialization " +
-        "barrier (localCheckpoint/InMemoryRelation/LocalRelation), not " +
-        "a recomputable lineage")
-    spark.catalog.clearCache()
+        "barrier (localCheckpoint/LocalRelation), not a recomputable " +
+        "lineage")
   }
 
   test("c06/c07: every dimension join broadcasts; only the fact joins shuffle") {
@@ -180,19 +195,19 @@ class PlanAuditSuite extends SparkSuite {
   }
 
   test("d02: prefix-filter candidate stage shuffles 8-byte hash keys, not strings") {
-    // lazy variant: the registered query's returned plan is a
-    // checkpoint scan (see the InMemoryRelation audit above)
-    val df = graft.functions.TextOps.ngramJaccardPairs(
-      graft.Tables.corpus(spark, sf), "doc_id", "text",
-      n = 3, threshold = 0.5, releaseCaches = false)
-    val p = df.queryExecution.executedPlan.toString
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = SparkEntry.queries("d02_ngram_jaccard")(spark, sf)
+    val p = df.queryExecution.sparkPlan
     // the candidate self-join must key on 64-bit shingle hashes —
     // shuffling shingle STRINGS is the 2-4x shuffle-volume regression;
-    // the codegen ShingleHashes kernel is the marker (xxhash64 was the
-    // pre-kernel declarative form)
-    assert(p.contains("graft_shingle_hashes") || p.contains("xxhash64"),
+    // the checkpointed shingle sets are the ShingleHashes kernel's longs
+    val keys = p.collect { case j: BaseJoinExec => j.leftKeys ++ j.rightKeys }
+      .flatten.collect {
+        case a: Attribute if a.name == "__s_p" || a.name == "__s_i" => a
+      }
+    assert(keys.nonEmpty && keys.forall(_.dataType == LongType) &&
+      checkpointedAsLongs(df, "__sh"),
       "candidate generation must run in hash space (64-bit keys):\n" + p)
-    spark.catalog.clearCache()
   }
 
   test("d13: passage shuffle runs in 64-bit hash space with no cross join") {
@@ -314,20 +329,18 @@ class PlanAuditSuite extends SparkSuite {
   }
 
   test("d11: the standing corpus never self-joins; verify runs in hash space") {
-    // the registered d11 releases its caches via localCheckpoint (the
-    // returned plan is a checkpoint scan); audit the SAME pipeline in
-    // its lazy form, which keeps the full plan inspectable
     val docs = graft.Tables.corpus(spark, sf)
     val df = graft.functions.TextOps.incrementalJaccardPairs(
       docs.where(org.apache.spark.sql.functions.col("doc_id") % 20 === 0),
       docs.where(org.apache.spark.sql.functions.col("doc_id") % 20 =!= 0),
       "doc_id", "text", n = 3, numHashes = 128, bands = 32,
-      threshold = 0.5, releaseCaches = false)
+      threshold = 0.5)
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("xxhash64"),
+    // the band join and the verify read checkpointed 64-bit hashes
+    assert(checkpointedAsLongs(df, "__sh") &&
+      checkpointedAsLongs(df, "__bands"),
       "band keys and shingle sets must be hashed before any shuffle:\n" + p)
     assert(!p.contains("CartesianProduct"), p)
-    spark.catalog.clearCache()
   }
 
   test("q39/q40: one event-stream aggregation chain each, no cartesian") {
@@ -423,20 +436,16 @@ class PlanAuditSuite extends SparkSuite {
     // map-side, and novel counts ride the uniform doc_id key instead of
     // a join-back on gram
     val df = SparkEntry.queries("t23_ngram_novelty")(spark, sf)
-    df.collect() // materialize so the cached gram relation is real
+    df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Window"),
       s"t23 must not window-partition by the skewed gram key:\n$p")
     assert(p.contains("partial_min") || p.contains("partial_count"),
       s"first-doc/novelty must partially aggregate map-side:\n$p")
-    // the distinct gram pairs feed both aggregations through ONE cache
-    // barrier — a second corpus scan means the cache was dropped
-    val cached = df.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r
-    }
-    assert(cached.nonEmpty,
-      s"t23's gram pairs must be cached once for both aggregations:\n$p")
-    spark.catalog.clearCache()
+    // the distinct gram pairs feed both aggregations through ONE
+    // checkpoint — a second corpus scan means the barrier was dropped
+    assert(readsCheckpointed(df, "gram"),
+      s"t23's gram pairs must be checkpointed once for both aggregations:\n$p")
   }
 
   test("p20: novelty stage shares t23's skew-safe shape") {
@@ -476,16 +485,15 @@ class PlanAuditSuite extends SparkSuite {
 
   test("s07: sharp-regime LSH joins on bucket keys, never a cartesian") {
     val df = SparkEntry.queries("s07_ann_lsh_sharp")(spark, sf)
-    df.collect() // populate the signature cache so the final plan is real
+    df.collect()
     val p = df.queryExecution.executedPlan.toString
     // the whole point vs d05: candidates come from a band-key equi-join
     assert(!p.contains("CartesianProduct"),
       "sharp LSH must never degrade to all-pairs:\n" + p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    // the signature table is cached once and feeds both self-join sides
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      "signature cache barrier missing:\n" + p)
-    spark.catalog.clearCache()
+    // the signature table is checkpointed once and feeds both self-join sides
+    assert(readsCheckpointed(df, "__sigs"),
+      "signature checkpoint barrier missing:\n" + p)
   }
 
   test("q47: bloom membership filters the fact scan BEFORE any join/shuffle") {
@@ -558,58 +566,55 @@ class PlanAuditSuite extends SparkSuite {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      "signature cache barrier missing:\n" + p)
-    spark.catalog.clearCache()
+    assert(readsCheckpointed(df, "__sigs"),
+      "signature checkpoint barrier missing:\n" + p)
   }
 
   /** The equi-bucket pair shape shared by the banded families: exactly
     * one join keyed on the family's bucket columns, carrying the
     * `id_a < id_b` pair condition, and no cartesian or nested-loop join
     * anywhere in the plan. With `cachedCol`, the explode feeding that
-    * join reads the cached signature table (the column `cachedCol`)
-    * straight through an InMemoryRelation — the pushdown barrier. */
+    * join reads the checkpointed signature table (the column
+    * `cachedCol`) straight through an RDDScanExec — the pushdown
+    * barrier. */
   private def assertBucketSelfJoin(name: String, keys: Seq[String],
       cachedCol: Option[String]): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, LessThan}
+    import org.apache.spark.sql.catalyst.expressions.LessThan
     import org.apache.spark.sql.execution.{FilterExec, GenerateExec,
       ProjectExec, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec,
       BroadcastNestedLoopJoinExec, CartesianProductExec}
     val df = SparkEntry.queries(name)(spark, sf)
-    try {
-      val p = df.queryExecution.sparkPlan
-      assert(p.collect {
-        case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
-      }.isEmpty, s"$name must join on bucket keys, never all pairs:\n$p")
-      def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-        es.map { case a: Attribute => a.name; case e => e.sql }
-      val bucketJoins = p.collect {
-        case j: BaseJoinExec if names(j.leftKeys) == keys &&
-            names(j.rightKeys) == keys => j
+    val p = df.queryExecution.sparkPlan
+    assert(p.collect {
+      case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
+    }.isEmpty, s"$name must join on bucket keys, never all pairs:\n$p")
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.map { case a: Attribute => a.name; case e => e.sql }
+    val bucketJoins = p.collect {
+      case j: BaseJoinExec if names(j.leftKeys) == keys &&
+          names(j.rightKeys) == keys => j
+    }
+    assert(bucketJoins.size == 1,
+      s"$name: expected one equi-join on ${keys.mkString(", ")}:\n$p")
+    val idOrder = bucketJoins.head.condition.exists(_.exists {
+      case LessThan(a: Attribute, b: Attribute) =>
+        a.name == "id_a" && b.name == "id_b"
+      case _ => false
+    })
+    assert(idOrder, s"$name: the bucket join must carry id_a < id_b:\n$p")
+    cachedCol.foreach { c =>
+      def through(s: SparkPlan): SparkPlan = s match {
+        case f: FilterExec => through(f.child)
+        case pr: ProjectExec => through(pr.child)
+        case other => other
       }
-      assert(bucketJoins.size == 1,
-        s"$name: expected one equi-join on ${keys.mkString(", ")}:\n$p")
-      val idOrder = bucketJoins.head.condition.exists(_.exists {
-        case LessThan(a: Attribute, b: Attribute) =>
-          a.name == "id_a" && b.name == "id_b"
+      val explodes = bucketJoins.head.collect { case g: GenerateExec => g }
+      assert(explodes.nonEmpty && explodes.forall(g => through(g.child) match {
+        case s: RDDScanExec => s.output.exists(_.name == c)
         case _ => false
-      })
-      assert(idOrder, s"$name: the bucket join must carry id_a < id_b:\n$p")
-      cachedCol.foreach { c =>
-        def through(s: SparkPlan): SparkPlan = s match {
-          case f: FilterExec => through(f.child)
-          case pr: ProjectExec => through(pr.child)
-          case other => other
-        }
-        val explodes = bucketJoins.head.collect { case g: GenerateExec => g }
-        assert(explodes.nonEmpty && explodes.forall(g => through(g.child) match {
-          case s: InMemoryTableScanExec => s.output.exists(_.name == c)
-          case _ => false
-        }), s"$name: the explode must read the cached $c table:\n$p")
-      }
-    } finally spark.catalog.clearCache()
+      }), s"$name: the explode must read the checkpointed $c table:\n$p")
+    }
   }
 
   test("d03: one band-bucket equi-join under id_a < id_b, explode reads the cached signatures") {
@@ -697,17 +702,16 @@ class PlanAuditSuite extends SparkSuite {
 
   test("p27: shard plan rides the distributed prefix sum, no global window") {
     val df = SparkEntry.queries("p27_shard_plan")(spark, sf)
-    df.collect() // materialize the pinned-pid cache
+    df.collect()
     val p = df.queryExecution.executedPlan.toString
     // the running sum must be the two-pass formulation: a pid-keyed
-    // window over the cached range-sorted frame, never a
+    // window over the checkpointed range-sorted frame, never a
     // single-partition global window
     assert(!p.contains("Window [") ||
       p.contains("windowspecdefinition(__pid"),
       s"p27 cumulative sum must window by __pid:\n$p")
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      s"pinned-pid cache barrier missing:\n$p")
-    spark.catalog.clearCache()
+    assert(readsCheckpointed(df, "__pid"),
+      s"pinned-pid checkpoint barrier missing:\n$p")
   }
 
   test("m14: dry-run counts broadcast; no data-sized join") {
@@ -718,19 +722,14 @@ class PlanAuditSuite extends SparkSuite {
   }
 
   test("d16: containment probe joins rarest-prefix hashes, never a cartesian") {
-    // lazy variant: the registered query's returned plan is a
-    // checkpoint scan (the d02/d11 release discipline)
-    val df = graft.functions.TextOps.containmentPairs(
-      graft.Tables.corpus(spark, sf), "doc_id", "text",
-      n = 3, threshold = 0.8, releaseCaches = false)
-    df.collect() // materialize the shingle cache
+    val df = SparkEntry.queries("d16_containment")(spark, sf)
+    df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"candidate stage must be the prefix-hash equi-join:\n$p")
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      s"shingle cache barrier missing:\n$p")
-    spark.catalog.clearCache()
+    assert(readsCheckpointed(df, "__sh"),
+      s"shingle checkpoint barrier missing:\n$p")
   }
 
   /** The PPJoin-family candidate shape, the non-equi twin of
@@ -742,28 +741,25 @@ class PlanAuditSuite extends SparkSuite {
   private def assertPrefixJoin(name: String,
       df: org.apache.spark.sql.DataFrame,
       prunes: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression => Boolean)]): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.execution.joins.{BaseJoinExec,
       BroadcastNestedLoopJoinExec, CartesianProductExec}
-    try {
-      val p = df.queryExecution.sparkPlan
-      assert(p.collect {
-        case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
-      }.isEmpty, s"$name must join on shingle hashes, never all pairs:\n$p")
-      def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-        es.map { case a: Attribute => a.name; case e => e.sql }
-      val hashJoins = p.collect {
-        case j: BaseJoinExec if Set(names(j.leftKeys), names(j.rightKeys)) ==
-            Set(Seq("__s_p"), Seq("__s_i")) => j
-      }
-      assert(hashJoins.size == 1,
-        s"$name: expected one equi-join on the shingle hash:\n$p")
-      val cond = hashJoins.head.condition
-      prunes.foreach { case (what, holds) =>
-        assert(cond.exists(_.exists(holds)),
-          s"$name: the shingle-hash join must carry the $what:\n$p")
-      }
-    } finally spark.catalog.clearCache()
+    val p = df.queryExecution.sparkPlan
+    assert(p.collect {
+      case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
+    }.isEmpty, s"$name must join on shingle hashes, never all pairs:\n$p")
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.map { case a: Attribute => a.name; case e => e.sql }
+    val hashJoins = p.collect {
+      case j: BaseJoinExec if Set(names(j.leftKeys), names(j.rightKeys)) ==
+          Set(Seq("__s_p"), Seq("__s_i")) => j
+    }
+    assert(hashJoins.size == 1,
+      s"$name: expected one equi-join on the shingle hash:\n$p")
+    val cond = hashJoins.head.condition
+    prunes.foreach { case (what, holds) =>
+      assert(cond.exists(_.exists(holds)),
+        s"$name: the shingle-hash join must carry the $what:\n$p")
+    }
   }
 
   /** `l op r` with `l` over exactly `ls` and `r` over exactly `rs`. */
@@ -782,7 +778,7 @@ class PlanAuditSuite extends SparkSuite {
     import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThan}
     val df = graft.functions.TextOps.ngramJaccardPairs(
       graft.Tables.corpus(spark, sf), "doc_id", "text",
-      n = 3, threshold = 0.5, releaseCaches = false)
+      n = 3, threshold = 0.5)
     assertPrefixJoin("d02", df, Seq(
       // the index side is the (size, id)-smaller record
       "index-role predicate" -> {
@@ -804,7 +800,7 @@ class PlanAuditSuite extends SparkSuite {
     import org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual
     val df = graft.functions.TextOps.containmentPairs(
       graft.Tables.corpus(spark, sf), "doc_id", "text",
-      n = 3, threshold = 0.8, releaseCaches = false)
+      n = 3, threshold = 0.8)
     assertPrefixJoin("d16", df, Seq(
       // |container|·1000 >= t‰·|contained|
       "size prune" -> {
@@ -821,11 +817,12 @@ class PlanAuditSuite extends SparkSuite {
   }
 
   test("p25: calibration windows read histograms; spine and quantile maps broadcast") {
-    val p = plan("p25_quantile_normalize")
-    // both CDF windows sit ABOVE a hash aggregate (the histogram), so
-    // their input is distinct-value-sized, never doc-sized
-    assert(p.contains("partial_count"),
-      s"histograms must partially aggregate before the CDF windows:\n$p")
+    val df = SparkEntry.queries("p25_quantile_normalize")(spark, sf)
+    val p = df.queryExecution.executedPlan.toString
+    // both CDF windows read the checkpointed (source, value, count)
+    // histogram, so their input is distinct-value-sized, never doc-sized
+    assert(checkpointed(df).map(_.name).distinct == Seq("source", "v", "c"),
+      s"the CDF windows must read the checkpointed histogram:\n$p")
     assert(p.contains("BroadcastExchange"),
       s"the 1001-row quantile map must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), p)

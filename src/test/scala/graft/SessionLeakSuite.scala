@@ -5,7 +5,10 @@ import javax.management.ObjectName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.engine.{ConnectorTableIO, ParquetTableIO}
+import graft.functions.{RankFusion, ScaleOps, TextOps, UnigramLM, VectorOps}
 import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
 
 /** Repeated table rewrites must not leave sessions behind. In Spark
@@ -15,7 +18,7 @@ import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
   * sessions, while the same over a local `Seq`, or eight
   * `localCheckpoint(true)` calls, left none. So an `overwrite` that
   * materialized its input that way grew the JVM by one session per
-  * call; both now use `localCheckpoint`. */
+  * call; both now use `localCheckpoint`, as every operator does. */
 class SessionLeakSuite extends SparkSuite {
 
   /** Live `classic.SparkSession` instances in this JVM. The
@@ -66,5 +69,71 @@ class SessionLeakSuite extends SparkSuite {
     assert(connector.read("Account").where($"Id" === "ID001").head().getLong(1) == 21L)
     assert(after - before <= 1,
       s"live SparkSession instances grew from $before to $after")
+  }
+
+  test("repeated operator calls leave no session, cache entry or persisted RDD behind") {
+    import spark.implicits._
+    val sf = "/root/testdata/sf0.001"
+    val docs = Tables.corpus(spark, sf)
+    val emb = Tables(spark, sf, "embeddings")
+    val delta = docs.where(col("doc_id") % 20 === 0)
+    val standing = docs.where(col("doc_id") % 20 =!= 0)
+    val store = java.nio.file.Files.createTempDirectory("graft_leak_store_")
+      .toString
+    TextOps.buildSignatureStore(standing, "doc_id", "text", store,
+      n = 3, numHashes = 128, bands = 32)
+    val terms = Seq((0L, "data"), (0L, "the"), (1L, "model")).toDF("qid", "term")
+    val ops: Seq[(String, () => Any)] = Seq(
+      "d03" -> (() => SparkEntry.queries("d03_minhash_lsh")(spark, sf).count()),
+      "ngramJaccardPairs" -> (() =>
+        TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).count()),
+      "containmentPairs" -> (() =>
+        TextOps.containmentPairs(docs, "doc_id", "text", 3, 0.8).count()),
+      "incrementalJaccardPairs" -> (() =>
+        TextOps.incrementalJaccardPairs(delta, standing, "doc_id", "text",
+          n = 3, numHashes = 128, bands = 32, threshold = 0.5).count()),
+      "incrementalJaccardPairsFromStore" -> (() =>
+        TextOps.incrementalJaccardPairsFromStore(delta, standing, "doc_id",
+          "text", store, n = 3, numHashes = 128, bands = 32,
+          threshold = 0.5).count()),
+      "simHashPairs" -> (() => TextOps.simHashPairs(
+        TextOps.simHash(docs, "doc_id", "text"), "doc_id", 3).count()),
+      "lshCosinePairs" -> (() => VectorOps.lshCosinePairs(emb, "vec_id",
+        "embedding", bits = 16, bands = 8, threshold = 0.9).count()),
+      "ivfCosinePairs" -> (() => VectorOps.ivfCosinePairs(emb, "vec_id",
+        "embedding", threshold = 0.9, nlist = 8, nassign = 2).count()),
+      "connectedComponents" -> (() => ScaleOps.connectedComponents(docs,
+        "doc_id", TextOps.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5),
+        smallEdgeLimit = 0L).count()),
+      "runningTotal" -> (() => ScaleOps.runningTotal(
+        docs.select(col("doc_id")), "doc_id", Seq(col("doc_id"))).count()),
+      "bm25Scores" -> (() => RankFusion.bm25Scores(docs, "doc_id", "text",
+        terms, "qid", "term").count()),
+      "bpeTrain" -> (() => TextOps.bpeTrain(docs, "text", numMerges = 8)),
+      "UnigramLM.train" -> (() =>
+        UnigramLM.train(docs, "text", vocabSize = 40, emIters = 1)))
+
+    // caches other suites' tests made are theirs, not the operators'
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.size
+    val before = liveSessions()
+    for ((name, op) <- ops; _ <- 1 to 3) {
+      op()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cached table in the session")
+    }
+    val after = liveSessions()
+    info(s"live SparkSession instances: $before before, $after after")
+    assert(after - before <= 1,
+      s"live SparkSession instances grew from $before to $after")
+    // every frame the calls built is unreachable now: the ContextCleaner
+    // frees their checkpoint blocks once a GC has collected them
+    eventually(timeout(60.seconds), interval(500.millis)) {
+      System.gc()
+      val left = sc.getPersistentRDDs.size
+      assert(left <= rddsBefore,
+        s"$left persisted RDDs remain, $rddsBefore before the calls")
+    }
   }
 }

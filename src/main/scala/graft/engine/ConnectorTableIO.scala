@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sources.{OrgWriteMetrics, RemoteOrgRegistry, WriteOutcome}
 
 /** TableIO over the DSv2 connector — the production-shaped binding that
@@ -9,16 +10,16 @@ import graft.sources.{OrgWriteMetrics, RemoteOrgRegistry, WriteOutcome}
   * records between two remote orgs, with extraction pushdown negotiated
   * by Catalyst and mutations chunked by the connector's writers.
   *
-  * Created-ID correlation mirrors the reference: after the bulk insert
-  * the destination is re-queried for the just-created rows
-  * (migration_engine.py:52 — the insert API's per-batch results are a
-  * connector TODO there too, data_connector.py:277-278). The re-query is
-  * NOT an IN-list: only the semi-join's null check on the `src_id`
-  * column reaches the org (for `src_id` column `Old_Id__c`: `SELECT Id,
-  * Old_Id__c FROM Contact__c WHERE (Old_Id__c != null)`), and Spark
-  * semi-joins the result against the inserted rows' keys.
-  * [[MigrationEngine]] snapshots the returned rows, so the destination
-  * is read back once per insert. */
+  * Created-ID correlation reads the insert's own results, which the
+  * reference left as a TODO (data_connector.py:277-278) and replaced
+  * with a re-query of the destination (migration_engine.py:52). Every
+  * wire returns the created Ids in row order; each writer pairs them
+  * with the row's `srcIdColumn` value and the write's commit gathers the
+  * pairs, so `insert` returns exactly this write's created records as a
+  * local `(Id, srcIdColumn)` frame (`Id` alone without a `srcIdColumn`).
+  * The destination is not read, and a record an earlier run left there
+  * is never paired with this run's source rows. The driver holds two
+  * values per created record. */
 final class ConnectorTableIO(
     spark: SparkSession,
     orgName: String,
@@ -45,17 +46,19 @@ final class ConnectorTableIO(
     // the org fills Id — never trust a driver-side value for it
     val clean =
       if (rows.columns.contains("Id")) rows.drop("Id") else rows
+    val writeId = java.util.UUID.randomUUID().toString
     clean.write.format("salesforce-sim")
       .option("org", orgName).option("sObject", table)
+      .option("writeId", writeId).option("createdKey", srcIdColumn.getOrElse(""))
       .mode(SaveMode.Append).save()
-    srcIdColumn match {
-      case Some(k) =>
-        // created-records lookup keyed by the old-ID column: the org
-        // filters `k != null`, the semi-join against `keys` runs in Spark
-        val keys = clean.select(col(k)).distinct()
-        reader(table).join(keys, Seq(k), "left_semi")
-      case None => reader(table)
+    OrgWriteMetrics.forWrite(writeId) // release the per-write outcome; unused here
+    val created = OrgWriteMetrics.createdFor(writeId)
+    val idField = StructField("Id", StringType)
+    val (fields, rowOf) = srcIdColumn match {
+      case Some(k) => (Seq(idField, clean.schema(k)), (p: (String, Any)) => Row(p._1, p._2))
+      case None => (Seq(idField), (p: (String, Any)) => Row(p._1))
     }
+    spark.createDataFrame(created.map(rowOf).asJava, StructType(fields))
   }
 
   override def update(table: String, rows: DataFrame): Long = {

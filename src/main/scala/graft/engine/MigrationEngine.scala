@@ -8,16 +8,21 @@ import graft.spec.MappingSpec
 /** Storage boundary for the migration engine — the Spark-native stand-in
   * for the reference's SOAP/REST connectors (data_connector.py).
   *
-  * `insert` must return the created rows *including their new `Id`
-  * column* — the contract the reference approximates by re-querying the
-  * destination after bulk insert (migration_engine.py:52,
-  * data_connector.py:277-278 marks created-ID retrieval as a TODO).
-  * A production connector returns per-batch API results; [[ParquetTableIO]]
-  * mints deterministic IDs instead.
+  * `insert` must return the rows *this call* created, with their new
+  * `Id` and the spec's `src_id` column — the contract the reference
+  * approximates by re-querying the destination after bulk insert
+  * (migration_engine.py:52, data_connector.py:277-278 marks created-ID
+  * retrieval as a TODO). [[ConnectorTableIO]] takes the pairs from the
+  * insert's own per-batch results; [[ParquetTableIO]] mints
+  * deterministic IDs instead.
   */
 trait TableIO {
   def read(table: String): DataFrame
-  /** Appends rows; returns the created rows with their new `Id`. */
+  /** Appends rows; returns the rows this call created, with their new
+    * `Id` — never records that were already in the table. The frame
+    * must be cheap to evaluate more than once (local data, or a
+    * deterministic projection of `rows`): the engine counts it, writes
+    * it back and hands it to child specs without a snapshot. */
   def insert(table: String, rows: DataFrame): DataFrame
   /** Targeted update: `rows` carry `Id` plus the columns to overwrite on
     * the matching records — the reference's bulk_update
@@ -104,8 +109,7 @@ final case class MigrationMetrics(
   * mapping_parser.py:78-80).
   *
   * `mintId` lets tests make new destination IDs a pure function of the old
-  * ID (oracle-expressible); a real connector would take IDs from insert
-  * results instead.
+  * ID (oracle-expressible); the connector takes IDs from insert results.
   */
 final class MigrationEngine(
     src: TableIO,
@@ -114,7 +118,15 @@ final class MigrationEngine(
     mintId: Option[String => org.apache.spark.sql.Column] = None) {
 
   def migrate(spec: MappingSpec, limit: Option[Int] = None,
-      preInsert: DataFrame => DataFrame = identity): MigrationMetrics = {
+      preInsert: DataFrame => DataFrame = identity): MigrationMetrics =
+    migrateReturningCreated(spec, limit, preInsert)._1
+
+  /** [[migrate]], also handing back the created `(Id, src_id)` frame
+    * (`Id` alone when the spec has no `src_id` column) — the old→new Id
+    * map [[MigrationPlan]] remaps child FKs through. */
+  private[engine] def migrateReturningCreated(spec: MappingSpec,
+      limit: Option[Int], preInsert: DataFrame => DataFrame)
+      : (MigrationMetrics, DataFrame) = {
     // 1. extract (migration_engine.py:77-81); the extracted-row count is
     // collected via an Observation on the same pass that feeds the
     // insert — no second scan of the source (df.observe + listener
@@ -126,34 +138,32 @@ final class MigrationEngine(
 
     // 2. transform: rename + type + constants (migration_engine.py:25-41),
     // then the caller's pre-insert hook (FK remapping in MigrationPlan).
-    // Snapshotted once, hook included: every later action (the insert,
-    // the created-ID key set a TableIO derives from the inserted rows)
-    // reads these rows instead of re-running the source query and the
-    // FK id-map reads under them. localCheckpoint, not persist: a
-    // persisted plan containing a join leaves a cloned session behind
-    // per call even after unpersist. The checkpoint job is the pass
-    // that fires `obs`.
+    // Snapshotted once, hook included: the insert (and any frame a
+    // TableIO derives from the inserted rows) reads these rows instead
+    // of re-running the source query and the FK remap joins under them.
+    // localCheckpoint, not persist: a persisted plan containing a join
+    // leaves a cloned session behind per call even after unpersist. The
+    // checkpoint job is the pass that fires `obs`.
     val newRows = preInsert(MappingCompiler.destinationRows(extracted, spec))
       .localCheckpoint()
 
     // 3. load + correlate created IDs (migration_engine.py:43). The
-    // created rows are snapshotted too: the destination is read back
-    // once, and the count and the write-back below share that read. Only
-    // the pair the write-back needs (new Id, old-ID column) is kept, so
-    // the read-back fetches two fields, not whole records.
+    // TableIO returns only this insert's records, as local data or a
+    // projection of the snapshot above, so the count, the write-back and
+    // a child's id map share it without a second snapshot. Only the pair
+    // the write-back needs (new Id, old-ID column) is kept.
     val withId = (mintId, spec.dstSrcIdColumn) match {
       case (Some(f), Some(srcIdCol)) => newRows.withColumn("Id", f(srcIdCol))
       case _ => newRows
     }
     val created = dst.insert(spec.destinationObject, withId)
       .select((col("Id") +: spec.dstSrcIdColumn.toSeq.map(col)): _*)
-      .localCheckpoint()
     val nInserted = created.count()
     val nExtracted = obs.get("n").asInstanceOf[Long]
 
     // 4. write-back join (migration_engine.py:50-68): new dst Id -> old
-    // src row, paired from the created-row snapshot — exactly the rows
-    // inserted above, with no further read of either org.
+    // src row, paired from the created rows — exactly the rows inserted
+    // above, with no read of either org.
     val nUpdated = spec.srcOldIdColumn match {
       case Some(_) =>
         // targeted update of exactly the write-back rows (reference
@@ -164,6 +174,6 @@ final class MigrationEngine(
       case None => 0L
     }
 
-    MigrationMetrics(nExtracted, nInserted, nUpdated)
+    (MigrationMetrics(nExtracted, nInserted, nUpdated), created)
   }
 }

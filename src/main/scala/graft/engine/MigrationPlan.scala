@@ -21,13 +21,16 @@ final case class FkReference(
   *   1. specs are topologically ordered so parents migrate before the
   *      children that reference them (stable for independent specs;
   *      cycles fail loudly);
-  *   2. after a parent lands, its old→new Id map is just a projection of
-  *      the destination table (`src_id` column ↔ minted `Id`), never a
-  *      driver-side dict;
+  *   2. after a parent lands, its old→new Id map is the `(Id, src_id)`
+  *      frame the engine hands back for that insert — only this run's
+  *      records, never a re-read of the destination, which may hold
+  *      copies an earlier run left;
   *   3. each child's FK columns remap through the parent maps with a
   *      broadcast join in the engine's pre-insert hook — unmatched
   *      references become NULL (a dangling lookup must not carry an
   *      old-org Id into the new org).
+  *
+  * `src` and `dst` are reached only through `engine`.
   */
 final class MigrationPlan(
     src: TableIO,
@@ -79,28 +82,31 @@ final class MigrationPlan(
   }
 
   /** Old source Id → new destination Id for a completed parent spec:
-    * a projection of the destination table (the `src_id` column pairs
-    * every created row with the record it came from). */
-  private def idMap(parent: MappingSpec): DataFrame = {
+    * a projection of the rows its insert created (the `src_id` column
+    * pairs each with the record it came from). */
+  private def idMap(parent: MappingSpec, created: DataFrame): DataFrame = {
     val srcIdCol = parent.dstSrcIdColumn.getOrElse(
       throw new IllegalArgumentException(
         s"${parent.destinationObject} has no src_id column — its records " +
           "cannot be referenced by other specs"))
-    dst.read(parent.destinationObject)
-      .select(col(srcIdCol).as("__fk_old"), col("Id").as("__fk_new"))
+    created.select(col(srcIdCol).as("__fk_old"), col("Id").as("__fk_new"))
   }
 
   /** Remaps each referenced FK column of `rows` through its parent's
-    * old→new map (broadcast — the map side is one migrated object). */
+    * old→new map (broadcast — the map side is one migrated object).
+    * `created` holds each migrated spec's created rows by source object. */
   private def remapFks(rows: DataFrame, spec: MappingSpec,
-      bySource: Map[String, MappingSpec]): DataFrame =
+      bySource: Map[String, MappingSpec], created: Map[String, DataFrame]): DataFrame =
     references.filter(_.childDestinationObject == spec.destinationObject)
       .foldLeft(rows) { (df, ref) =>
         val parent = bySource.getOrElse(ref.parentSourceObject,
           throw new IllegalArgumentException(
             s"reference ${ref.fkColumn} -> ${ref.parentSourceObject}: no " +
               "spec migrates that object"))
-        val m = idMap(parent)
+        val m = idMap(parent, created.getOrElse(parent.sourceObject,
+          throw new IllegalArgumentException(
+            s"reference ${ref.fkColumn} -> ${ref.parentSourceObject}: a spec " +
+              "cannot remap references to its own source object")))
         df.join(broadcast(m), df(ref.fkColumn) === m("__fk_old"), "left")
           .withColumn(ref.fkColumn, col("__fk_new"))
           .drop("__fk_old", "__fk_new")
@@ -111,9 +117,11 @@ final class MigrationPlan(
   def migrateAll(specs: Seq[MappingSpec],
       limit: Option[Int] = None): Seq[(String, MigrationMetrics)] = {
     val bySource = specs.map(s => s.sourceObject -> s).toMap
+    var created = Map.empty[String, DataFrame]
     ordered(specs).map { spec =>
-      val metrics = engine.migrate(spec, limit,
-        preInsert = rows => remapFks(rows, spec, bySource))
+      val (metrics, rows) = engine.migrateReturningCreated(spec, limit,
+        preInsert = remapFks(_, spec, bySource, created))
+      created += spec.sourceObject -> rows
       spec.destinationObject -> metrics
     }
   }

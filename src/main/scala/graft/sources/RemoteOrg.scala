@@ -91,10 +91,12 @@ final case class WriteOutcome(processed: Long, failed: Long)
 object OrgWriteMetrics {
   private val last = new ConcurrentHashMap[(String, String), WriteOutcome]()
   private val byId = new ConcurrentHashMap[String, WriteOutcome]()
+  private val createdById = new ConcurrentHashMap[String, Seq[(String, Any)]]()
   def record(org: String, sObject: String, writeId: Option[String],
-      o: WriteOutcome): Unit = {
+      o: WriteOutcome, created: Seq[(String, Any)] = Nil): Unit = {
     last.put((org, sObject), o)
     writeId.foreach(byId.put(_, o))
+    if (created.nonEmpty) writeId.foreach(createdById.put(_, created))
   }
   def lastCommit(org: String, sObject: String): WriteOutcome =
     last.getOrDefault((org, sObject), WriteOutcome(0L, 0L))
@@ -104,6 +106,13 @@ object OrgWriteMetrics {
     * outcome removes it, so a second call for the same id returns None
     * and one entry per write does not pile up. */
   def forWrite(writeId: String): Option[WriteOutcome] = Option(byId.remove(writeId))
+  /** The (created Id, `createdKey` value) pairs of one insert that set
+    * the `createdKey` write option, in commit order. Removed on read,
+    * like [[forWrite]]; empty for any other write. */
+  def createdFor(writeId: String): Seq[(String, Any)] =
+    Option(createdById.remove(writeId)).getOrElse(Nil)
+  /** Writes whose created pairs are recorded and not yet read. */
+  private[graft] def pendingCreated: Int = createdById.size
 }
 
 /** Process-local registry so the reflectively-instantiated DSv2 provider

@@ -109,7 +109,8 @@ final class OrgTable(orgName: String, sObject: String, schema: StructType,
       if (partialWrites) OrgTable.partialSchema(schema, info.schema()) else info.schema(),
       info.options.getOrDefault("writeMode", "insert"),
       Option(info.options.get("externalIdField")),
-      Option(info.options.get("writeId")))
+      Option(info.options.get("writeId")),
+      Option(info.options.get("createdKey")))
 }
 
 object OrgTable {
@@ -581,10 +582,17 @@ object SoqlFilters {
   *   - delete: rows carry the Ids to remove (:294-298)
   * Per-task processed/failed counts flow back as commit messages and are
   * aggregated in BatchWrite.commit (numberRecordsProcessed/Failed parity,
-  * data_connector.py:342-349). */
+  * data_connector.py:342-349).
+  *
+  * A batch insert with both `writeId` and `createdKey` set also hands
+  * back what the org created: each writer pairs the Ids its insert calls
+  * return (row order, on every wire) with the row's `createdKey` column
+  * (nothing when the option is empty), and the commit records the pairs
+  * under `writeId` for [[OrgWriteMetrics.createdFor]]. Streaming epochs
+  * record none. */
 final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType,
     mode: String, externalIdField: Option[String],
-    writeId: Option[String] = None)
+    writeId: Option[String] = None, createdKey: Option[String] = None)
     extends WriteBuilder {
   override def build(): Write = new Write {
     override def supportedCustomMetrics(): Array[CustomMetric] =
@@ -593,13 +601,14 @@ final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
         val (o, s, sch, m, ext) = (orgName, sObject, schema, mode, externalIdField)
         val rec = RemoteOrgRegistry(orgName).recipe // plan-time capture
-        (_: Int, _: Long) => new OrgDataWriter(o, s, sch, m, ext, rec)
+        val key = if (mode == "insert") writeId.flatMap(_ => createdKey) else None
+        (_: Int, _: Long) => new OrgDataWriter(o, s, sch, m, ext, rec, key)
       }
       override def commit(messages: Array[WriterCommitMessage]): Unit =
         // keyed by the caller's unique writeId (not just (org, table)) so
         // concurrent/interleaved writes can't race each other's outcome
         OrgWriteMetrics.record(orgName, sObject, writeId,
-          OrgWriteCommit.total(messages))
+          OrgWriteCommit.total(messages), OrgWriteCommit.created(messages))
       override def abort(messages: Array[WriterCommitMessage]): Unit = ()
     }
 
@@ -625,16 +634,26 @@ final class OrgWriteBuilder(orgName: String, sObject: String, schema: StructType
   }
 }
 
-final case class OrgWriteCommit(processed: Long, failed: Long)
+/** One task's outcome; `created` holds its (created Id, key) pairs when
+  * the write asked for them (`createdKey`), else nothing. */
+final case class OrgWriteCommit(processed: Long, failed: Long,
+    created: Seq[(String, Any)] = Nil)
     extends WriterCommitMessage
 
 object OrgWriteCommit {
   /** One write's outcome: the tasks' processed/failed counts summed. */
   def total(messages: Array[WriterCommitMessage]): WriteOutcome =
     messages.foldLeft(WriteOutcome(0L, 0L)) {
-      case (acc, OrgWriteCommit(p, f)) =>
-        WriteOutcome(acc.processed + p, acc.failed + f)
+      case (acc, c: OrgWriteCommit) =>
+        WriteOutcome(acc.processed + c.processed, acc.failed + c.failed)
       case (acc, _) => acc
+    }
+
+  /** One write's created pairs, task by task. */
+  def created(messages: Array[WriterCommitMessage]): Seq[(String, Any)] =
+    messages.toSeq.flatMap {
+      case c: OrgWriteCommit => c.created
+      case _ => Nil
     }
 }
 
@@ -654,13 +673,22 @@ private final case class OrgTaskMetric(name: String, value: Long)
 
 final class OrgDataWriter(orgName: String, sObject: String, schema: StructType,
     mode: String, externalIdField: Option[String],
-    recipe: Option[OrgRecipe] = None)
+    recipe: Option[OrgRecipe] = None, createdKey: Option[String] = None)
     extends DataWriter[InternalRow] {
   private val ChunkSize = 200 // data_connector.py:23
   private val toScala = CatalystTypeConverters.createToScalaConverter(schema)
   private val buffer = scala.collection.mutable.ArrayBuffer.empty[Row]
   private var processed = 0L
   private var failed = 0L
+  // the value each created Id is paired with: the createdKey column, or
+  // null when the option names none
+  private val keyOf: Option[Row => Any] = createdKey.map {
+    case "" => (_: Row) => null
+    case k =>
+      val i = schema.fieldIndex(k)
+      (r: Row) => r.get(i)
+  }
+  private val created = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
 
   override def write(record: InternalRow): Unit = {
     buffer += toScala(record.copy()).asInstanceOf[Row]
@@ -673,7 +701,12 @@ final class OrgDataWriter(orgName: String, sObject: String, schema: StructType,
     val chunk = buffer.toSeq
     mode match {
       case "insert" =>
-        org.insert(sObject, chunk, schema)
+        val ids = org.insert(sObject, chunk, schema)
+        keyOf.foreach { key =>
+          require(ids.size == chunk.size,
+            s"insert into $sObject returned ${ids.size} Ids for ${chunk.size} rows")
+          created ++= ids.iterator.zip(chunk.iterator.map(key))
+        }
         processed += chunk.size
       case "update" =>
         val (u, f) = org.update(sObject, chunk, schema)
@@ -696,7 +729,7 @@ final class OrgDataWriter(orgName: String, sObject: String, schema: StructType,
     Array(OrgTaskMetric("orgRecordsProcessed", processed),
       OrgTaskMetric("orgRecordsFailed", failed))
   override def commit(): WriterCommitMessage = {
-    flush(); OrgWriteCommit(processed, failed)
+    flush(); OrgWriteCommit(processed, failed, created.toVector)
   }
   override def abort(): Unit = buffer.clear()
   override def close(): Unit = ()

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{Row, SaveMode}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
+import graft.engine.ConnectorTableIO
+import graft.sources.{AuthToken, BulkApiOrg, InMemoryOrg, OrgWriteMetrics, RemoteOrgRegistry}
 
 /** The DSv2 connector's negotiated pushdown contract, proven end to end:
   * the in-memory org records every SOQL statement, so these tests assert
@@ -446,6 +448,75 @@ class ConnectorSuite extends SparkSuite {
     assert(org.insertBatchSizes.sum == 450)
     // org minted IDs for every created row
     assert(org.rows("Account").forall(_.getString(0) != null))
+  }
+
+  test("a connector insert returns its created Ids paired by src_id on the JSON and CSV wires") {
+    import spark.implicits._
+    val sch = StructType(Seq(StructField("Id", StringType),
+      StructField("Old_Id__c", StringType), StructField("Name", StringType)))
+    val describe = """{"fields": [{"name": "Id", "type": "id"},
+      {"name": "Old_Id__c", "type": "string"}, {"name": "Name", "type": "string"}]}"""
+    Seq("JSON", "CSV").foreach { wire =>
+      val org = new InMemoryOrg
+      org.createTable("Thing__c", sch)
+      val sim = new BulkWireSim(org, Map("Thing__c" -> describe))
+      RemoteOrgRegistry.register(s"pairs_$wire", new BulkApiOrg(
+        AuthToken("TOK", "https://bulk.example.org"), sim, sleeper = _ => (),
+        contentType = wire))
+      val rows = (1 to 450).map(i => (f"S$i%03d", s"n$i")).toDF("Old_Id__c", "Name")
+        .repartition(2)
+      val created = new ConnectorTableIO(spark, s"pairs_$wire", srcIdColumn = Some("Old_Id__c"))
+        .insert("Thing__c", rows).collect()
+      assert(created.length == 450, wire)
+      // each pair's Id is the record the org holds for that src_id
+      val held = org.rows("Thing__c").map(r => r.getString(1) -> r.getString(0)).toMap
+      assert(held.size == 450, wire)
+      assert(created.map(r => r.getString(1) -> r.getString(0)).toMap == held, wire)
+      // two partitions of 225 rows: a 200- and a 25-row insert job each,
+      // and no query job reads the destination back
+      assert(sim.jobs.values.map(_.operation).toSeq == Seq.fill(4)("insert"),
+        s"$wire: ${sim.jobs.values.mkString("\n")}")
+    }
+  }
+
+  test("an insert's created pairs are read once, and other writes record none") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sch = StructType(Seq(StructField("Id", StringType), StructField("K", StringType)))
+    val org = new InMemoryOrg
+    org.createTable("P__c", sch)
+    RemoteOrgRegistry.register("pairs_org", org)
+    def insert(writeId: String, createdKey: Option[String]): Unit = {
+      val w = Seq("k1", "k2", "k3").toDF("K").write.format("salesforce-sim")
+        .option("org", "pairs_org").option("sObject", "P__c").option("writeId", writeId)
+      createdKey.fold(w)(w.option("createdKey", _)).mode(SaveMode.Append).save()
+    }
+    val pending = OrgWriteMetrics.pendingCreated
+
+    insert("pairs-keyed", Some("K"))
+    val held = org.rows("P__c").map(r => r.getString(0) -> r.getString(1))
+    assert(OrgWriteMetrics.createdFor("pairs-keyed").sortBy(_._1) == held.sortBy(_._1))
+    assert(OrgWriteMetrics.createdFor("pairs-keyed").isEmpty, "a second read finds nothing")
+    insert("pairs-plain", None)
+    assert(OrgWriteMetrics.createdFor("pairs-plain").isEmpty)
+
+    // a streaming epoch records its outcome, never created pairs
+    val input = MemoryStream[String]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_pairs_ckpt_").toString
+    val q = input.toDF().select(lit(null).cast("string").as("Id"), col("value").as("K"))
+      .writeStream.format("salesforce-sim")
+      .option("org", "pairs_org").option("sObject", "P__c")
+      .option("writeId", "pairs-stream").option("createdKey", "K")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      input.addData("s1", "s2")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(org.rows("P__c").size == 8)
+    assert(OrgWriteMetrics.forWrite("pairs-stream@0").map(_.processed).contains(2L))
+    assert(OrgWriteMetrics.createdFor("pairs-stream@0").isEmpty)
+    Seq("pairs-keyed", "pairs-plain").foreach(OrgWriteMetrics.forWrite)
+    assert(OrgWriteMetrics.pendingCreated == pending)
   }
 
   test("round trip: migrate through the connector surface") {

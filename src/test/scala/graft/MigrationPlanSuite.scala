@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.engine.{FkReference, MigrationEngine, MigrationPlan, ParquetTableIO}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.engine.{ConnectorTableIO, FkReference, MigrationEngine, MigrationPlan, ParquetTableIO}
+import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
 import graft.spec.MappingSpec
 
 /** Whole-list migration orchestration: dependency ordering from FK
@@ -56,6 +59,56 @@ class MigrationPlanSuite extends SparkSuite {
     val fk = dst.read("Contact__c").select("old_id", "AccountId")
       .as[(String, String)].collect().toMap
     assert(fk == Map("C1" -> "NA1", "C2" -> "NA2", "C3" -> null))
+  }
+
+  test("a re-run over a stale parent copy pairs and remaps only this run's records") {
+    def schema(cols: String*) = StructType(cols.map(StructField(_, StringType)))
+    val srcOrg = new InMemoryOrg
+    val dstOrg = new InMemoryOrg
+    srcOrg.createTable("Account", schema("Id", "Name", "New_Id__c"), Seq(
+      Row("A1", "acme", null), Row("A2", "zorg", null)))
+    srcOrg.createTable("Contact", schema("Id", "LastName", "AccountId", "New_Id__c"), Seq(
+      Row("C1", "ann", "A1", null), Row("C2", "bob", "A2", null),
+      Row("C3", "cyn", "A1", null)))
+    // a run that died after the parent's insert left a copy of A1 behind
+    dstOrg.createTable("Account__c", schema("Id", "Old_Id__c", "Name"),
+      Seq(Row("STALE1", "A1", "acme")))
+    dstOrg.createTable("Contact__c", schema("Id", "Old_Id__c", "LastName", "AccountId__c"))
+    RemoteOrgRegistry.register("rerun_src", srcOrg)
+    RemoteOrgRegistry.register("rerun_dst", dstOrg)
+
+    def elem(src: String, dst: String, from: String, to: String,
+        op: String = "copy", kind: String = "regular") =
+      s"""{"table_src": "$src", "column_src": "$from", "table_dst": "$dst",
+         "column_dst": "$to", "operation": "$op", "column_type": "$kind"}"""
+    def specFor(src: String, dst: String, cols: (String, String)*) =
+      s"""{"source_object": "$src", "destination_object": "$dst", "mapping": [
+         ${(elem(src, dst, "Id", "Old_Id__c", kind = "src_id") +:
+           cols.map { case (f, t) => elem(src, dst, f, t) } :+
+           elem(src, dst, "New_Id__c", "Id", op = "upd_src", kind = "dst_id"))
+           .mkString(",")}]}"""
+    val specs = MappingSpec.fromJson("[" + specFor("Account", "Account__c", "Name" -> "Name") +
+      "," + specFor("Contact", "Contact__c",
+        "LastName" -> "LastName", "AccountId" -> "AccountId__c") + "]")
+
+    val src = new ConnectorTableIO(spark, "rerun_src")
+    val dst = new ConnectorTableIO(spark, "rerun_dst", srcIdColumn = Some("Old_Id__c"))
+    val results = new MigrationPlan(src, dst, new MigrationEngine(src, dst),
+      Seq(FkReference("Contact__c", "AccountId__c", "Account"))).migrateAll(specs)
+    assert(results.map { case (d, m) => d -> m.inserted } ==
+      Seq("Account__c" -> 2L, "Contact__c" -> 3L), results)
+
+    // this run's copy of A1 is the one that is not the stale record
+    val a1Copies = dstOrg.rows("Account__c").filter(_.getString(1) == "A1").map(_.getString(0))
+    assert(a1Copies.size == 2 && a1Copies.contains("STALE1"), a1Copies)
+    val a1 = a1Copies.filterNot(_ == "STALE1").head
+    val a2 = dstOrg.rows("Account__c").find(_.getString(1) == "A2").get.getString(0)
+    val written = srcOrg.rows("Account").map(r => r.getString(0) -> r.getString(2)).toMap
+    assert(written == Map("A1" -> a1, "A2" -> a2), written)
+
+    // each contact lands once, its FK on this run's parent copy
+    val contacts = dstOrg.rows("Contact__c").map(r => r.getString(1) -> r.getString(3))
+    assert(contacts.sortBy(_._1) == Seq("C1" -> a1, "C2" -> a2, "C3" -> a1), contacts)
   }
 
   test("independent specs keep their input order") {

@@ -99,11 +99,35 @@ class OrgMigrationSuite extends SparkSuite {
     val upd = graft.sources.OrgWriteMetrics.lastCommit("mig_src", "Account")
     assert(upd.processed == 2 && upd.failed == 0, upd)
 
-    // each remote object is read once per migrate: the extract feeds the
-    // insert, the created-ID key set and the write-back from one
-    // snapshot, and the destination is read back once
+    // the source is read once per migrate: the extract feeds the insert
+    // from one snapshot; the created Ids come from the insert's results,
+    // so the destination is never read
     assert(selects(srcOrg, "Account").size == 1, srcOrg.statements.mkString("\n"))
-    assert(selects(dstOrg, "Accounts__c").size == 1, dstOrg.statements.mkString("\n"))
+    assert(selects(dstOrg, "Accounts__c").isEmpty, dstOrg.statements.mkString("\n"))
+  }
+
+  test("inserted counts only this migrate's records, not the ones already there") {
+    val srcOrg = new InMemoryOrg
+    val dstOrg = new InMemoryOrg
+    srcOrg.createTable("Account", srcSchema, Seq(
+      Row("A1", "one", 100.0, null), Row("A2", "two", 200.0, null)))
+    dstOrg.createTable("Accounts__c", dstSchema, Seq(
+      Row("OLD1", "X1", "x1", null), Row("OLD2", "X2", "x2", null),
+      Row("OLD3", "X3", "x3", null)))
+    RemoteOrgRegistry.register("pre_src", srcOrg)
+    RemoteOrgRegistry.register("pre_dst", dstOrg)
+    // a copy-only spec: no src_id column, so the TableIO has none either
+    val copyOnly = MappingSpec.fromJson("""
+      [{"source_object": "Account", "destination_object": "Accounts__c",
+        "mapping": [
+          {"table_src": "Account", "column_src": "Name",
+           "table_dst": "Accounts__c", "column_dst": "Name",
+           "operation": "copy", "column_type": "regular"}]}]""").head
+    val m = new MigrationEngine(new ConnectorTableIO(spark, "pre_src"),
+      new ConnectorTableIO(spark, "pre_dst")).migrate(copyOnly)
+    assert(m.extracted == 2 && m.inserted == 2 && m.updated == 0, m)
+    assert(dstOrg.rows("Accounts__c").size == 5)
+    assert(selects(dstOrg, "Accounts__c").isEmpty, dstOrg.statements.mkString("\n"))
   }
 
   /** The SOQL reads `org` logged against `sObject` (writes are logged
@@ -111,7 +135,7 @@ class OrgMigrationSuite extends SparkSuite {
   private def selects(org: InMemoryOrg, sObject: String): Seq[String] =
     org.statements.toSeq.filter(_.matches(s"SELECT .* FROM $sObject( .*)?"))
 
-  test("a two-spec FK plan reads each object, and the parent's id map, once") {
+  test("a two-spec FK plan reads each source object once and never the destination") {
     val accSchema = StructType(Seq(
       StructField("Id", StringType), StructField("Name", StringType),
       StructField("New_Id__c", StringType)))
@@ -161,14 +185,14 @@ class OrgMigrationSuite extends SparkSuite {
     val newCon = dstOrg.rows("Contact__c").map(r => r.getString(1) -> r.getString(0)).toMap
     assert(srcOrg.rows("Contact").map(r => r.getString(0) -> r.getString(3)).toMap == newCon)
 
-    // one extract per source object; Account__c twice in all — the
-    // parent's created-row read-back and the child's id map — and
-    // Contact__c once
+    // one extract per source object; the created Ids and the child's id
+    // map come from the inserts' own results, so neither destination
+    // object is read
     val reads = srcOrg.statements.mkString("\n") + "\n" + dstOrg.statements.mkString("\n")
     assert(selects(srcOrg, "Account").size == 1, reads)
     assert(selects(srcOrg, "Contact").size == 1, reads)
-    assert(selects(dstOrg, "Account__c").size == 2, reads)
-    assert(selects(dstOrg, "Contact__c").size == 1, reads)
+    assert(selects(dstOrg, "Account__c").isEmpty, reads)
+    assert(selects(dstOrg, "Contact__c").isEmpty, reads)
   }
 
   test("connector update counts missing Ids as failed, not as errors") {

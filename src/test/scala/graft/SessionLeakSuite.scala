@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
-import graft.engine.{ConnectorTableIO, ParquetTableIO}
+import graft.engine.{ConnectorTableIO, MigrationEngine, ParquetTableIO}
 import graft.functions.{RankFusion, ScaleOps, TextOps, UnigramLM, VectorOps}
 import graft.sources.{InMemoryOrg, RemoteOrgRegistry}
+import graft.spec.MappingSpec
 
 /** Repeated table rewrites must not leave sessions behind. In Spark
   * 4.1, a `cache()`/`count()`/`unpersist(true)` cycle keeps one cloned
@@ -67,6 +68,42 @@ class SessionLeakSuite extends SparkSuite {
 
     assert(parquet.read("t").where($"Id" === "ID1").head().getLong(1) == 20L)
     assert(connector.read("Account").where($"Id" === "ID001").head().getLong(1) == 21L)
+    assert(after - before <= 1,
+      s"live SparkSession instances grew from $before to $after")
+  }
+
+  test("20 MigrationEngine.migrate calls through ConnectorTableIO leave at most one more live session") {
+    def schema(cols: String*) = StructType(cols.map(StructField(_, StringType)))
+    val srcOrg = new InMemoryOrg
+    srcOrg.createTable("Account", schema("Id", "Name", "New_Id__c"),
+      (1 to 50).map(i => Row(f"A$i%03d", s"acc$i", null)))
+    val dstOrg = new InMemoryOrg
+    dstOrg.createTable("Account__c", schema("Id", "Old_Id__c", "Name"))
+    RemoteOrgRegistry.register("leak_mig_src", srcOrg)
+    RemoteOrgRegistry.register("leak_mig_dst", dstOrg)
+    def elem(from: String, to: String, op: String, kind: String) =
+      s"""{"table_src": "Account", "column_src": "$from", "table_dst": "Account__c",
+         "column_dst": "$to", "operation": "$op", "column_type": "$kind"}"""
+    val spec = MappingSpec.fromJson(s"""[{"source_object": "Account",
+      "destination_object": "Account__c", "mapping": [
+      ${elem("Id", "Old_Id__c", "copy", "src_id")}, ${elem("Name", "Name", "copy", "regular")},
+      ${elem("New_Id__c", "Id", "upd_src", "dst_id")}]}]""").head
+    val src = new ConnectorTableIO(spark, "leak_mig_src")
+    val dst = new ConnectorTableIO(spark, "leak_mig_dst", srcIdColumn = Some("Old_Id__c"))
+    val engine = new MigrationEngine(src, dst)
+
+    val before = liveSessions()
+    (1 to 20).foreach { _ =>
+      val m = engine.migrate(spec)
+      assert(m.extracted == 50 && m.inserted == 50 && m.updated == 50, m)
+    }
+    val after = liveSessions()
+    info(s"live SparkSession instances: $before before, $after after")
+
+    assert(dstOrg.rowCount("Account__c") == 1000)
+    // the last run's Ids are the ones written back
+    val newest = dstOrg.rows("Account__c").drop(950).map(r => r.getString(1) -> r.getString(0)).toMap
+    assert(srcOrg.rows("Account").map(r => r.getString(0) -> r.getString(2)).toMap == newest)
     assert(after - before <= 1,
       s"live SparkSession instances grew from $before to $after")
   }

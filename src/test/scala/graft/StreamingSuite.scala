@@ -1521,7 +1521,10 @@ class StreamingSuite extends SparkSuite {
   * close, poll, list results, fetch result) and answers queries by
   * evaluating the batch's SOQL against a backing
   * [[graft.sources.InMemoryOrg]] — so the protocol is exercised at the
-  * wire while query semantics come from the shared Soql evaluator. The
+  * wire while query semantics come from the shared Soql evaluator.
+  * Insert jobs run in either content type (JSON, or CSV payloads with
+  * XML envelopes): the batch's records land in the backing org when the
+  * batch completes, and the result carries their Ids in row order. The
   * job state machine `require`s protocol order: a batch on a closed job,
   * a close before any batch, a poll before close, or a result fetch
   * before a Completed poll each fail the test immediately. */
@@ -1530,11 +1533,16 @@ private[graft] class BulkWireSim(
     describes: Map[String, String]) extends graft.sources.HttpTransport {
   import org.json4s._
   import org.json4s.jackson.JsonMethods
+  import org.apache.spark.sql.Row
+  import graft.sources.Soql
 
-  final class JobState(val operation: String, val obj: String) {
+  final class JobState(val operation: String, val obj: String, val csv: Boolean) {
+    /** The batch body: a query's SOQL, or an insert's records. */
     @volatile var soql: Option[String] = None
     @volatile var closed = false
     @volatile var polls = 0
+    /** An insert's per-record results, set when its batch completes. */
+    @volatile var results = ""
     override def toString =
       s"Job($operation,$obj,closed=$closed,polls=$polls,soql=$soql)"
   }
@@ -1543,6 +1551,68 @@ private[graft] class BulkWireSim(
 
   override def postForm(url: String, params: Map[String, String]): (Int, String) =
     (200, """{"access_token": "TOK-W", "instance_url": "https://bulk.example.org"}""")
+
+  private def xmlField(xml: String, tag: String): String =
+    s"(?s)<$tag>(.*?)</$tag>".r.findFirstMatchIn(xml).map(_.group(1).trim)
+      .getOrElse(sys.error(s"no <$tag> in $xml"))
+
+  /** One CSV line's fields: quoted, with doubled quotes inside. */
+  private def cells(line: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val field = new StringBuilder
+    var quoted = false
+    var i = 0
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (quoted) {
+        if (c != '"') field += c
+        else if (i + 1 < line.length && line.charAt(i + 1) == '"') { field += '"'; i += 1 }
+        else quoted = false
+      } else if (c == '"') quoted = true
+      else if (c == ',') { out += field.toString; field.clear() }
+      else field += c
+      i += 1
+    }
+    (out += field.toString).toSeq
+  }
+
+  /** Inserts the job's records into the backing org; returns the
+    * per-record results in the job's content type. */
+  private def runInsert(job: JobState): String = {
+    val schema = inner.describe(job.obj)
+    val rows = if (job.csv) {
+      val lines = job.soql.get.split("\n").toSeq
+      val header = cells(lines.head)
+      lines.tail.map { line =>
+        val vs = cells(line)
+        Row.fromSeq(schema.fields.toSeq.map { f =>
+          header.indexOf(f.name) match {
+            case -1 => null
+            case i => if (vs(i).isEmpty) null else Soql.coerceText(vs(i), f.dataType)
+          }
+        })
+      }
+    } else JsonMethods.parse(job.soql.get) match {
+      case JArray(recs) => recs.map { rec =>
+        Row.fromSeq(schema.fields.toSeq.map { f =>
+          rec \ f.name match {
+            case JNothing | JNull => null
+            case JString(v) => Soql.coerceText(v, f.dataType)
+            case v => v.values
+          }
+        })
+      }
+      case other => sys.error(s"bad insert payload $other")
+    }
+    val ids = inner.insert(job.obj, rows, schema)
+    def csvLine(vs: String*) = vs.map(v => "\"" + v + "\"").mkString(",")
+    if (job.csv)
+      (csvLine("Id", "Success", "Created", "Error") +:
+        ids.map(csvLine(_, "true", "true", ""))).mkString("\n")
+    else JsonMethods.compact(JsonMethods.render(JArray(ids.toList.map(id =>
+      JObject("id" -> JString(id), "success" -> JBool(true),
+        "created" -> JBool(true), "errors" -> JArray(Nil))))))
+  }
 
   override def send(method: String, url: String,
       headers: Map[String, String], body: String): (Int, String) = synchronized {
@@ -1554,31 +1624,41 @@ private[graft] class BulkWireSim(
       val id = u.stripPrefix(s"$async/job/").takeWhile(_ != '/')
       jobs.getOrElse(id, sys.error(s"unknown job '$id' in $u"))
     }
+    def batchInfo(job: JobState, state: String): String =
+      if (job.csv) s"<batchInfo><id>B1</id><state>$state</state></batchInfo>"
+      else s"""{"id": "B1", "state": "$state"}"""
     (method, url) match {
       case ("GET", u) if u.startsWith(s"$rest/sobjects/") && u.endsWith("/describe") =>
         val obj = u.stripPrefix(s"$rest/sobjects/").stripSuffix("/describe")
         (200, describes.getOrElse(obj, sys.error(s"no describe for $obj")))
       case ("POST", u) if u == s"$async/job" =>
-        val j = JsonMethods.parse(body)
         val id = s"J${jobs.size + 1}"
-        jobs(id) = new JobState(
-          (j \ "operation").values.toString, (j \ "object").values.toString)
-        (201, s"""{"id": "$id"}""")
+        if (body.trim.startsWith("<")) {
+          jobs(id) = new JobState(xmlField(body, "operation"), xmlField(body, "object"), csv = true)
+          (201, s"<jobInfo><id>$id</id><state>Open</state></jobInfo>")
+        } else {
+          val j = JsonMethods.parse(body)
+          jobs(id) = new JobState(
+            (j \ "operation").values.toString, (j \ "object").values.toString, csv = false)
+          (201, s"""{"id": "$id"}""")
+        }
       case ("POST", u) if u.endsWith("/batch") =>
         val job = jobOf(u)
         require(!job.closed, s"batch added to closed job: $u")
-        require(job.operation == "query", "wire sim scripts query jobs only")
+        require(job.operation == "insert" || (job.operation == "query" && !job.csv),
+          s"wire sim scripts JSON query and insert jobs, got $job")
         require(job.soql.isEmpty, "wire sim scripts one batch per job")
         job.soql = Some(body)
-        (201, s"""{"id": "B1"}""")
+        (201, batchInfo(job, "Queued"))
       case ("POST", u) if u.startsWith(s"$async/job/") =>
         val job = jobOf(u)
         require(job.soql.nonEmpty, s"close before any batch: $u")
         job.closed = true
-        (200, """{"state": "Closed"}""")
+        (200, if (job.csv) "<jobInfo><state>Closed</state></jobInfo>" else """{"state": "Closed"}""")
       case ("GET", u) if u.endsWith("/result") =>
-        require(jobOf(u).polls >= 2, s"results listed before Completed: $u")
-        (200, """["R1"]""")
+        val job = jobOf(u)
+        require(job.polls >= 2, s"results listed before Completed: $u")
+        (200, if (job.operation == "insert") job.results else """["R1"]""")
       case ("GET", u) if u.contains("/result/") =>
         val job = jobOf(u)
         require(job.polls >= 2, s"result fetched before Completed: $u")
@@ -1604,8 +1684,11 @@ private[graft] class BulkWireSim(
         val job = jobOf(u)
         require(job.closed, s"poll before close: $u")
         job.polls += 1
-        if (job.polls == 1) (200, """{"state": "InProgress"}""")
-        else (200, """{"state": "Completed"}""")
+        if (job.polls == 1) (200, batchInfo(job, "InProgress"))
+        else {
+          if (job.polls == 2 && job.operation == "insert") job.results = runInsert(job)
+          (200, batchInfo(job, "Completed"))
+        }
       case other => sys.error(s"unexpected request $other")
     }
   }
